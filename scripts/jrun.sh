@@ -14,8 +14,12 @@ OPENS="$OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+# Default heap: half the machine's RAM, clamped to 2g..8g (the same
+# rule as the test command), so the runner is safe on any box.
+HALF_RAM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
 exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$HALF_RAM}" \
   -cp "$CP" "$@"

@@ -1,13 +1,13 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.time.LocalDate
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{DateType, StructType}
 import graft.catalog.Catalog
 import graft.catalog.Catalog.{Prop, Scope}
 import graft.sql.{Ast, ExprBuilder, Parser}
@@ -34,6 +34,7 @@ case class Batch(rows: Seq[Row], schema: StructType, more: Boolean)
   */
 class Engine(val spark: SparkSession, root: String,
              cursorPageSize: Int = 1000) {
+  import Engine.DayWindow
 
   private var current: Option[Scope] = None
   private val attached = mutable.Map.empty[String, DataFrame]
@@ -475,37 +476,41 @@ class Engine(val spark: SparkSession, root: String,
       }
 
     // ── DQL ─────────────────────────────────────────────────────────
-    case sel: SelectStmt => Rows(buildSelect(sel))
-    case w: WithStmt => Rows(buildWith(w))
-    case so: SetOpStmt => Rows(buildSetOp(so))
+    case st @ (_: SelectStmt | _: WithStmt | _: SetOpStmt) =>
+      Rows(withResolutionMemo(buildDql(st)))
     case ExplainStmt(sel) =>
       import spark.implicits._
-      Rows(Seq(buildDql(sel).queryExecution.executedPlan.toString())
-        .toDF("plan"))
+      val plan = withResolutionMemo(buildDql(sel))
+      Rows(Seq(plan.queryExecution.executedPlan.toString()).toDF("plan"))
   }
 
   // ── cursors (reference FETCH/CLOSE protocol, ifc/nowdb.c) ─────────
+  /** Open a cursor over `df`: rows stream through `toLocalIterator`,
+    * one partition in driver memory at a time, each FETCH pulling the
+    * partitions its page needs. Nothing is persisted: the page jobs all
+    * run over the one RDD the iterator was made from, so a
+    * shuffle-bearing plan writes its shuffle once and every later page
+    * job skips that map stage and reads the shuffle output. A cache
+    * would only add a materialisation job and block-manager traffic.
+    * The frame is the cursor's: when the cursor closes (CLOSE,
+    * exhaustion or session end) the broadcasts its plan built are
+    * destroyed ([[Engine.releaseBroadcasts]]), so `df` must not be run
+    * again after that. */
   def openCursor(df: DataFrame): Long = {
     import scala.jdk.CollectionConverters._
     val id = cursorSeq.incrementAndGet()
-    // Persist for the cursor's lifetime: toLocalIterator launches one
-    // job PER PARTITION, and without a cache each job re-runs the
-    // whole upstream plan — a shuffle-bearing query would recompute
-    // per fetched page (SURVEY §7.3's warning). Unpersisted on CLOSE
-    // or exhaustion.
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cursors += id -> (cached.toLocalIterator().asScala, df.schema, cached)
+    cursors += id -> (df.toLocalIterator().asScala, df.schema, df)
     id
   }
 
   private def closeCursor(id: Long): Unit =
-    cursors.remove(id).foreach(_._3.unpersist(false))
+    cursors.remove(id).foreach(c => Engine.releaseBroadcasts(c._3))
 
   /** End-of-session cleanup (reference: session teardown releases its
     * cursors and locks, ifc/nowdb.c session loop): drop every open
-    * cursor's cache and release held locks. The wire server calls this
-    * on disconnect so an abandoned session cannot pin caches or
-    * deadlock other sessions. Idempotent. */
+    * cursor and release held locks. The wire server calls this on
+    * disconnect so an abandoned session cannot deadlock other
+    * sessions. Idempotent. */
   def closeSession(): Unit = {
     cursors.keys.toSeq.foreach(closeCursor)
     heldLocks.keys.toSeq.foreach { n =>
@@ -574,10 +579,6 @@ class Engine(val spark: SparkSession, root: String,
       case _ => false
     })
 
-  /** DataFrame for a table: attached > scope catalog (empty-with-schema
-    * when no data has been written yet). Stamped edge tables carry the
-    * hidden `stamp_date` hive-partition column (dropped by projection,
-    * used by period pruning). */
   /** Per-statement CTE bindings (WITH … AS): name → built frame.
     * Thread-local so concurrent sessions on one engine can't see each
     * other's bindings; saved/restored around each WITH statement. */
@@ -1288,36 +1289,120 @@ class Engine(val spark: SparkSession, root: String,
     }
   }
 
-  def tableDf(table: String): DataFrame =
+  /** What a table name resolves to: a frame (CTE binding > attached >
+    * view) or, failing those, a scope-catalog table's canonical name. */
+  private def lookup(table: String): Either[DataFrame, String] =
     cteBindings.get.get(table.toLowerCase)
       .orElse(attached.get(table.toLowerCase))
       .orElse(resolveView(table).map { case (vn, vsql) => viewDf(vn, vsql) })
-      .getOrElse {
-      val s = scope
-      val (kind, name) = s.resolve(table).getOrElse(
-        throw new IllegalArgumentException(s"unknown table $table"))
-      val props = s.propsOf(name)
-      val dir = s.tableDir(name)
+      .toLeft(scope.resolve(table).map(_._2).getOrElse(
+        throw new IllegalArgumentException(s"unknown table $table")))
+
+  /** DataFrame for a table ([[lookup]]). A catalog table resolves
+    * without asking Spark to rediscover it ([[catalogDf]]), over its
+    * whole snapshot. */
+  def tableDf(table: String): DataFrame = tableDf(table, None)
+
+  /** [[tableDf]], with a catalog stamped edge read only over the UTC
+    * days of `days` (inclusive). */
+  private def tableDf(table: String, days: Option[DayWindow]): DataFrame =
+    lookup(table).fold(identity, catalogDf(_, days))
+
+  /** Column names of a table, in frame order. A catalog table answers
+    * from the catalog ([[catalogSchema]]) without building a frame. */
+  private def tableColumns(table: String): Seq[String] =
+    lookup(table).fold(_.columns.toSeq, catalogSchema(_).fieldNames.toSeq)
+
+  /** A catalog table's frame schema: the declared properties, plus the
+    * `stamp_date` day-partition column last on stamped edges. */
+  private def catalogSchema(name: String): StructType = {
+    val base = Catalog.schemaOf(scope.propsOf(name))
+    if (isStampedEdge(name)) base.add("stamp_date", DateType) else base
+  }
+
+  /** Frames resolved during the current DQL build, keyed by (snapshot
+    * dir, day window); null outside one. Lives for one build only:
+    * nothing is cached across statements, so a read never sees a
+    * listing older than its own statement, and DML always resolves
+    * fresh. */
+  private val resolved =
+    new ThreadLocal[mutable.Map[(Path, Option[DayWindow]), DataFrame]]
+
+  /** Run one DQL build with a fresh resolution memo (nested builds —
+    * views, CTEs, subqueries — share the outer one). */
+  private def withResolutionMemo[A](build: => A): A =
+    if (resolved.get != null) build
+    else {
+      resolved.set(mutable.Map.empty)
+      try build finally resolved.remove()
+    }
+
+  /** Read a catalog table from its current snapshot directory without
+    * Spark rediscovering it. The schema comes from the catalog, so no
+    * footer is read; the directory is listed once here, on the driver:
+    * a stamped edge keeps only its `stamp_date=` day directories inside
+    * `days` (the default partition of null stamps only when there is no
+    * window), any other table its data files. Only the snapshot's own
+    * entries are read — never a sibling `v<k>/` that a rewrite of the
+    * unversioned layout is writing beside them. An empty selection is
+    * an empty frame of the same schema. Spark lists the chosen
+    * directories itself, on the driver while there are at most
+    * `parallelPartitionDiscovery.threshold` (32) of them. The file
+    * index is built here rather than by `spark.read`, whose index files
+    * every read's listing in Spark's process-wide `FileStatusCache`
+    * under a fresh client key, where it stays until the cache's 250 MB
+    * cap evicts it: that would grow the heap with every statement. */
+  private def catalogDf(name: String, days0: Option[DayWindow]): DataFrame = {
+    val s = scope
+    val dir = s.tableDir(name)
+    val stamped = isStampedEdge(name)
+    val days = days0.filter(_ => stamped)
+    def resolve(): DataFrame = {
+      val schema = catalogSchema(name)
+      val paths =
+        if (!Files.exists(dir)) Nil
+        else {
+          val ls = Files.list(dir)
+          val entries = try ls.toArray.toSeq.map(_.asInstanceOf[Path])
+            finally ls.close()
+          if (stamped)
+            entries.filter(p => Files.isDirectory(p) &&
+              Engine.dayInWindow(p.getFileName.toString, days))
+          else entries.filter { p =>
+            val n = p.getFileName.toString
+            Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
+          }
+        }
       val df0 =
-        if (Files.exists(dir)) {
-          if (isStampedEdge(name)) spark.read.parquet(dir.toString)
-          else spark.read.schema(Catalog.schemaOf(props))
-            .parquet(dir.toString)
-        } else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], Catalog.schemaOf(props))
+        if (paths.isEmpty)
+          spark.createDataFrame(java.util.List.of[Row](), schema)
+        else {
+          import org.apache.spark.sql.execution.datasources._
+          val index = new InMemoryFileIndex(spark,
+            paths.map(p => new org.apache.hadoop.fs.Path(p.toUri)).sorted,
+            Map("basePath" -> dir.toUri.toString), Some(schema), NoopCache)
+          val partCols = index.partitionSchema.fieldNames.toSet
+          // nullable data columns, as `spark.read` makes them
+          val data = StructType(schema.filterNot(f => partCols(f.name))
+            .map(_.copy(nullable = true)))
+          spark.baseRelationToDataFrame(HadoopFsRelation(index,
+            index.partitionSchema, data, None, new parquet.ParquetFileFormat,
+            Map.empty)(spark))
+        }
       // tag time/date columns in the schema METADATA: ns stamps are
       // plain longs in Spark, and this marker is what lets the binary
       // wire mode frame them with the reference's TIME tag instead of
       // INT (Wire.respondBinary). Metadata rides attribute references
       // through projections/aliases, so plain `select stamp` keeps it.
-      props.filter(p => p.typ == "time" || p.typ == "date")
+      s.propsOf(name).filter(p => p.typ == "time" || p.typ == "date")
         .foldLeft(df0) { (df, p) =>
-          if (df.columns.contains(p.name))
-            df.withMetadata(p.name, new org.apache.spark.sql.types
-              .MetadataBuilder().putString("graft.nowType", p.typ).build())
-          else df
+          df.withMetadata(p.name, new org.apache.spark.sql.types
+            .MetadataBuilder().putString("graft.nowType", p.typ).build())
         }
     }
+    Option(resolved.get).fold(resolve())(
+      _.getOrElseUpdate((dir, days), resolve()))
+  }
 
   /** Serialize all writers of one table across sessions — the same
     * registry lock the PK-checked vertex insert takes. Appends must
@@ -1347,8 +1432,7 @@ class Engine(val spark: SparkSession, root: String,
       // the downstream stamp-pruned scans. At warehouse scale the
       // rebalance belongs in a compaction pass, not on the ingest hot
       // path.
-      df.withColumn("stamp_date",
-          to_date(NowFunctions.stampToTs(col("stamp"))))
+      df.withColumn("stamp_date", NowFunctions.stampDay(col("stamp")))
         .write.partitionBy("stamp_date").mode(mode).parquet(dir)
     else df.write.mode(mode).parquet(dir)
 
@@ -1747,15 +1831,14 @@ class Engine(val spark: SparkSession, root: String,
     case _ => s"col_$idx"
   }
 
-  private def nsToDate(ns: Long): String =
-    java.time.Instant.ofEpochSecond(Math.floorDiv(ns, 1000000000L))
-      .toString.take(10)
-
-  /** Extract conjunctive [start,end] ns bounds on `stamp` from a WHERE
-    * AST (string literals parse as ISO stamps). Only top-level AND
-    * conjuncts contribute — disjunctions disable pruning, like the
-    * reference's period walk. */
-  private def stampPeriod(w: Expr): Option[(Long, Long)] = {
+  /** The UTC days a WHERE AST's conjunctive bounds on the FROM table's
+    * `stamp` can match (string literals parse as ISO stamps); `alias`
+    * is the FROM alias, and a `stamp` qualified with any other alias
+    * does not count. Only top-level AND conjuncts contribute —
+    * disjunctions disable pruning, like the reference's period walk.
+    * Bounds are widened to whole days: the stamp predicate itself still
+    * filters the rows. */
+  private def stampPeriod(w: Expr, alias: String): Option[DayWindow] = {
     def conjuncts(e: Expr): Seq[Expr] = e match {
       case BinOp("and", l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
@@ -1775,16 +1858,19 @@ class Engine(val spark: SparkSession, root: String,
       case "<=" => ">="; case "<" => ">"
       case o => o
     }
+    def isStamp(f: Field): Boolean = f.name.equalsIgnoreCase("stamp") &&
+      f.qualifier.forall(_.equalsIgnoreCase(alias))
     conjuncts(w).foreach {
-      case BinOp(op, Field(n, _), Lit(s: String, "string"))
-          if n.equalsIgnoreCase("stamp") =>
+      case BinOp(op, f: Field, Lit(s: String, "string")) if isStamp(f) =>
         ExprBuilder.parseTime(s).foreach(bound(op, _))
-      case BinOp(op, Lit(s: String, "string"), Field(n, _))
-          if n.equalsIgnoreCase("stamp") =>
+      case BinOp(op, Lit(s: String, "string"), f: Field) if isStamp(f) =>
         ExprBuilder.parseTime(s).foreach(bound(flip(op), _))
       case _ =>
     }
-    if (found) Some((lo, hi)) else None
+    if (!found) None
+    else Some((
+      if (lo == Long.MinValue) LocalDate.MIN else Engine.nsToDay(lo),
+      if (hi == Long.MaxValue) LocalDate.MAX else Engine.nsToDay(hi)))
   }
 
   private def orderCols(ob: Seq[(Ast.Field, Boolean)]): Seq[Column] =
@@ -2125,7 +2211,7 @@ class Engine(val spark: SparkSession, root: String,
     * swallowed — genuine errors (OOM, interrupts) propagate
     * (advice finding: a blanket Throwable catch masked them). */
   private def tryColsOf(t: String): Option[Set[String]] =
-    try Some(tableDf(t).columns.map(_.toLowerCase).toSet)
+    try Some(tableColumns(t).map(_.toLowerCase).toSet)
     catch {
       // NonFatal: any resolution failure (bad name, broken stored
       // view re-parsed via resolveView → ParseError, unreadable
@@ -2237,14 +2323,14 @@ class Engine(val spark: SparkSession, root: String,
         .map(a => (a.alias.getOrElse(a.table), a.table))
     val innerColsByAlias: Seq[(String, Set[String])] =
       innerTables.map { case (a, t) =>
-        a -> tableDf(t).columns.map(_.toLowerCase).toSet }
+        a -> tableColumns(t).map(_.toLowerCase).toSet }
     val innerAliases: Set[String] =
       innerTables.map(_._1.toLowerCase).toSet
     val innerCols: Set[String] = innerColsByAlias.flatMap(_._2).toSet
     val outers: Set[String] = outerQualifiers(outerSel) -- innerAliases
     val outerBase: String = outerSel.fromAlias.getOrElse(outerSel.from.get)
     val outerBaseCols: Set[String] =
-      tableDf(outerSel.from.get).columns.map(_.toLowerCase).toSet
+      tableColumns(outerSel.from.get).map(_.toLowerCase).toSet
     val innerCtx: ExprBuilder.Ctx = innerTables.flatMap { case (a, t) =>
       val tc = typeCtx(t)
       tc ++ tc.map { case (k, v) => s"${a.toLowerCase}.$k" -> v }
@@ -2817,7 +2903,7 @@ class Engine(val spark: SparkSession, root: String,
     // the legacy context INSERT applies on the way in.
     val sel = sel0.from match {
       case Some(t) if isStampedEdge(t) &&
-          !tableDf(t).columns.exists(_.equalsIgnoreCase("timestamp")) =>
+          !tableColumns(t).exists(_.equalsIgnoreCase("timestamp")) =>
         val m: Map[String, Expr] = Map("timestamp" -> Field("stamp"))
         def rf(f: Field): Field =
           if (f.qualifier.isEmpty && f.name.equalsIgnoreCase("timestamp"))
@@ -2847,7 +2933,19 @@ class Engine(val spark: SparkSession, root: String,
     val s = current
     val fromName = sel.from.get
     val fromAlias = sel.fromAlias.getOrElse(fromName)
-    var df = tableDf(fromName).as(fromAlias)
+    // period pruning (reference expr_period, fun/expr.c:1578-1631): the
+    // WHERE conjunction's stamp bounds choose the FROM edge's day
+    // directories before anything is listed. The same days also go in
+    // as a stamp_date partition filter: free over the pruned listing,
+    // and EXPLAIN shows the pruning as PartitionFilters.
+    val days = sel.where.flatMap(stampPeriod(_, fromAlias))
+    var df = tableDf(fromName, days).as(fromAlias)
+    if (isStampedEdge(fromName) && df.columns.contains("stamp_date"))
+      days.foreach { case (lo, hi) =>
+        val day = col(s"$fromAlias.stamp_date")
+        if (lo != LocalDate.MIN) df = df.filter(day >= lit(lo))
+        if (hi != LocalDate.MAX) df = df.filter(day <= lit(hi))
+      }
     // SAMPLE (sql.tex:2127 absent-triple): deterministic hash-mod
     // sample of the base scan, applied BEFORE joins/WHERE — the
     // Knuth multiplicative filter (TextAnalysis.hashSample) keyed on
@@ -2933,33 +3031,14 @@ class Engine(val spark: SparkSession, root: String,
     subPreds.foreach { p => df = applySubPred(df, p, sel, ctx) }
     val residualWhere = residualConj.reduceOption(BinOp("and", _, _))
     val where = residualWhere.map(w => ExprBuilder.build(w, ctx))
-    val filtered0 = where.fold(df)(df.filter)
-    // period pruning (reference expr_period, fun/expr.c:1578-1631):
-    // extract the [start,end] stamp bounds from the WHERE conjunction
-    // and add the equivalent stamp_date partition predicate, so whole
-    // days are pruned before any file is listed.
-    val filtered =
-      if (isStampedEdge(fromName) && residualWhere.isDefined
-          && df.columns.contains("stamp_date"))
-        stampPeriod(residualWhere.get) match {
-          case Some((lo, hi)) =>
-            var f = filtered0
-            if (lo != Long.MinValue)
-              f = f.filter(col("stamp_date") >= lit(nsToDate(lo)))
-            if (hi != Long.MaxValue)
-              f = f.filter(col("stamp_date") <= lit(nsToDate(hi)))
-            f
-          case None => filtered0
-        }
-      else filtered0
+    val filtered = where.fold(df)(df.filter)
 
     // star expansion: model order, edge fields first (plan.c:1216+)
     def starCols: Seq[Column] = {
       val base = current match {
         case Some(sc) if sc.resolve(fromName).isDefined =>
           sc.propsOf(fromName).map(p => col(s"$fromAlias.${p.name}"))
-        case _ => tableDf(fromName).columns.toSeq
-          .map(c => col(s"$fromAlias.$c"))
+        case _ => tableColumns(fromName).map(c => col(s"$fromAlias.$c"))
       }
       base ++ sel.joins.flatMap { j =>
         val vAlias = j.alias.getOrElse(j.typeName)
@@ -2973,7 +3052,7 @@ class Engine(val spark: SparkSession, root: String,
         if (aj.generated) Seq.empty
         else {
           val aAlias = aj.alias.getOrElse(aj.table)
-          tableDf(aj.table).columns.toSeq.map(c => col(s"$aAlias.$c"))
+          tableColumns(aj.table).map(c => col(s"$aAlias.$c"))
         }
       }
     }
@@ -3169,6 +3248,56 @@ class Engine(val spark: SparkSession, root: String,
 }
 
 object Engine {
+  /** Destroy the broadcasts that running `df` built: the materialised
+    * broadcast stages of its adaptive plans, subqueries included (a
+    * plan run without AQE is left to the ContextCleaner). Otherwise
+    * each stays in the driver's block manager until its handle is
+    * garbage collected and the ContextCleaner removes it, which for a
+    * handle that outlived a young collection means the next old-gen
+    * collection: the heap would grow with every joined statement and
+    * shrink at times the collector chooses. `df`'s plan cannot run
+    * again after this. */
+  private def releaseBroadcasts(df: DataFrame): Unit = {
+    import org.apache.spark.broadcast.Broadcast
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      BroadcastQueryStageExec, QueryStageExec}
+    def built(p: SparkPlan): Seq[Broadcast[_]] =
+      p.collectWithSubqueries {
+        case a: AdaptiveSparkPlanExec => built(a.executedPlan)
+        case s: BroadcastQueryStageExec if s.isMaterialized =>
+          s.broadcast.relationFuture.get() +: built(s.plan)
+        case s: QueryStageExec => built(s.plan)
+      }.flatten
+    built(df.queryExecution.executedPlan).distinctBy(_.id).foreach { b =>
+      // one already destroyed throws; closing the cursor goes on
+      try b.destroy()
+      catch { case scala.util.control.NonFatal(_) => }
+    }
+  }
+
+  /** Inclusive UTC day bounds of a stamp window; `LocalDate.MIN`/`MAX`
+    * for an open end. */
+  type DayWindow = (LocalDate, LocalDate)
+
+  /** UTC calendar day of an ns stamp (the `stamp_date` key written by
+    * [[graft.functions.NowFunctions.stampDay]]). */
+  private[engine] def nsToDay(ns: Long): LocalDate =
+    LocalDate.ofEpochDay(Math.floorDiv(ns, NowFunctions.nsPerDay))
+
+  /** Does directory `dirName` of a stamped edge's snapshot belong to a
+    * read over `days`? Every `stamp_date=` directory does when there is
+    * no window, the null-stamp default partition included; with a
+    * window only the days inside it do. */
+  private[engine] def dayInWindow(dirName: String,
+                                  days: Option[DayWindow]): Boolean = {
+    val key = "stamp_date="
+    dirName.startsWith(key) && days.forall { case (lo, hi) =>
+      scala.util.Try(LocalDate.parse(dirName.stripPrefix(key))).toOption
+        .exists(d => !d.isBefore(lo) && !d.isAfter(hi))
+    }
+  }
+
   /** Depth cap for WITH RECURSIVE fixpoint evaluation. Generous —
     * real hierarchies are tens of levels, binary-key ancestor chains
     * log₂(n) — while still turning an unbounded recursive step into

@@ -171,10 +171,6 @@ object LuaProcs {
     t.set(LStr("__kind"), LStr("cursor"))
     t.set(LStr("__df"), LOpaque(df))
     var it: java.util.Iterator[Row] = null
-    var persisted = false
-    def releaseCache(): Unit = if (persisted) {
-      df.unpersist(blocking = false); persisted = false
-    }
     var first: IndexedSeq[Any] = null
     def firstRow(): IndexedSeq[Any] = {
       if (first == null)
@@ -188,7 +184,7 @@ object LuaProcs {
     reg("ok") { _ => Seq(LBool(true)) }
     reg("errcode") { _ => Seq(LInt(0L)) }
     reg("errdetails") { _ => Seq(LStr("")) }
-    reg("release") { _ => it = null; releaseCache(); Nil }
+    reg("release") { _ => it = null; Nil }
     reg("countfields") { _ => Seq(LInt(df.schema.length.toLong)) }
     reg("field") { as =>
       val i = as.head match {
@@ -199,19 +195,13 @@ object LuaProcs {
       Seq(if (i >= 0 && i < r.length) toLua(r(i)) else LNil)
     }
     reg("rows") { _ =>
-      if (it == null) {
-        // persist for the iteration: toLocalIterator launches one job
-        // per partition, and WITHOUT a cache each job re-runs the full
-        // upstream plan (SURVEY §7.3 — the same discipline as
-        // Engine.openCursor). Released on release()/exhaustion.
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted = true
-        it = df.toLocalIterator()
-      }
+      // no cache, as in Engine.openCursor: the per-partition page jobs
+      // share one RDD, so a shuffle runs once
+      if (it == null) it = df.toLocalIterator()
       val iter = LBuiltin("cursor-rows-it", { _ =>
         if (it != null && it.hasNext)
           Seq(rowTable(it.next().toSeq.toIndexedSeq))
-        else { it = null; releaseCache(); Seq(LNil) }
+        else { it = null; Seq(LNil) }
       })
       Seq(iter)
     }

@@ -23,10 +23,6 @@ object NowAggregates {
   def spread(c: Column): Column = max(c) - min(c)
   /** running product (fun.c:383-384). */
   def prod(c: Column): Column = product(c)
-  /** mode — TREE class, unimplemented in the reference (fun.c:441-444);
-    * native here. Ties broken arbitrarily; use modeDeterministic for
-    * oracle-comparable output. */
-  def modeAgg(c: Column): Column = mode(c)
 
   /** `integral` (fun.h:35; semantics doc/manual/sql.tex:1360-1378):
     * trapezoid area under the (t, y) curve, t ascending within each

@@ -19,6 +19,8 @@ object NowFunctions {
   val dawn: Column = lit(Long.MinValue)
   /** Largest representable stamp (year 2262), ns. */
   val dusk: Column = lit(Long.MaxValue)
+  /** Nanoseconds in a day. */
+  val nsPerDay: Long = 86400L * 1000000000L
   /** The Unix epoch as a stamp. */
   val epochNs: Column = lit(0L)
   /** Current time as a stamp (µs precision — Spark's clock). */
@@ -33,6 +35,13 @@ object NowFunctions {
     * pre-epoch stamps land in the right µs). */
   def stampToTs(ns: Column): Column =
     timestamp_micros(ldiv(ns - pmod(ns, lit(1000L)), lit(1000L)))
+  /** UTC calendar day (DateType) of an ns stamp, by integer arithmetic
+    * on the epoch day — unlike `to_date(stampToTs(ns))` it does not
+    * follow `spark.sql.session.timeZone`. */
+  def stampDay(ns: Column): Column = {
+    val day = lit(nsPerDay)
+    date_from_unix_date(ldiv(ns - pmod(ns, day), day).cast("int"))
+  }
   /** TimestampType → ns-stamp. */
   def tsToStamp(ts: Column): Column = unix_micros(ts) * lit(1000L)
 
@@ -69,9 +78,6 @@ object NowFunctions {
   // (expr.c:2372-2429 return not-supported; sql.tex documents intent)
   /** Time bin: truncate a timestamp to a calendar unit. */
   def timeBin(unit: String, ts: Column): Column = date_trunc(unit, ts)
-  /** Format a timestamp (ISO-8601 by default, like NoWDB literals). */
-  def timeFormat(ts: Column, fmt: String = "yyyy-MM-dd'T'HH:mm:ss"): Column =
-    date_format(ts, fmt)
 
   // ── arithmetic parity (expr.c:2228-2247) ──────────────────────────
   /** NoWDB `/` on two integers is the integer quotient (QUOT). */
@@ -84,6 +90,5 @@ object NowFunctions {
   def ln(c: Column): Column = log(c)
 
   // ── null handling (expr.h:463-473) ────────────────────────────────
-  def isNothing(c: Column): Column = c.isNull
   def coal(cs: Column*): Column = coalesce(cs: _*)
 }

@@ -37,11 +37,6 @@ object VectorOps {
     (a, b) => call_function("graft_cosine", a, b)
   }
 
-  /** Squared euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Micro-unit quantization: each component → `round(x·1e6)` as a
     * long. The differential-oracle workhorse — integer sums are
     * order-free and bit-identical across engines, so dot products and
@@ -67,7 +62,4 @@ object VectorOps {
       "graft_dot_long", exprs => DotLong(exprs(0), exprs(1)), "built-in")
     (a, b) => call_function("graft_dot_long", a, b)
   }
-
-  /** Integer squared norm of a micro vector. */
-  def normSqLong(a: Column): Column = dotLong(a, a)
 }

@@ -189,15 +189,6 @@ object TextAnalysis {
   def docHash(text: Column): Column =
     aggregate(codepoints(text), lit(0L), (h, c) => (h * 31L + c) % M)
 
-  /** Winnowing-style fingerprint: the minimum rolling hash over all
-    * 8-character shingles (documents shorter than 8 chars hash whole). */
-  def winnowMin(text: Column, gram: Int = 8): Column = {
-    val n = greatest(length(text) - (gram - 1), lit(1))
-    array_min(transform(sequence(lit(1), n),
-      i => aggregate(codepoints(text.substr(i, lit(gram))),
-        lit(0L), (h, c) => (h * 31L + c) % M)))
-  }
-
   /** TF-IDF with smoothed idf = ln((N+1)/(df+1)): tf and df are exact
     * longs (map-side combined group-bys), idf is the only double and
     * is rounded before ranking so top-k order is engine-stable.

@@ -187,35 +187,6 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.procPath")
   }
 
-  test("open cursors persist their frame until CLOSE or exhaustion") {
-    import org.apache.spark.storage.StorageLevel
-    // shuffle-bearing query: without the cursor-lifetime cache every
-    // toLocalIterator page job would re-run the aggregation
-    val df = eng.sql("select origin, sum(quantity) from buys group by origin") match {
-      case Rows(d) => d
-      case other => fail(s"$other")
-    }
-    val cur = eng.openCursor(df)
-    assert(df.storageLevel != StorageLevel.NONE,
-      "cursor frame must be cached while the cursor is open")
-    eng.sql(s"close $cur")
-    assert(df.storageLevel == StorageLevel.NONE,
-      "CLOSE must release the cursor cache")
-    // exhaustion releases too
-    val df2 = eng.sql("select origin, sum(amount) from buys group by origin") match {
-      case Rows(d) => d
-      case other => fail(s"$other")
-    }
-    val cur2 = eng.openCursor(df2)
-    var more = true
-    while (more) more = eng.sql(s"fetch $cur2") match {
-      case Batch(_, _, m) => m
-      case other => fail(s"$other")
-    }
-    assert(df2.storageLevel == StorageLevel.NONE,
-      "exhaustion must release the cursor cache")
-  }
-
   test("locks: create, acquire with timeout, unlock") {
     ok(eng.sql("create lock mylock"))
     ok(eng.sql("lock mylock for writing set timeout = 1000"))
