@@ -5,6 +5,7 @@ import java.time.LocalDate
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.collection.mutable
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType}
@@ -1344,14 +1345,16 @@ class Engine(val spark: SparkSession, root: String,
     * `days` (the default partition of null stamps only when there is no
     * window), any other table its data files. Only the snapshot's own
     * entries are read — never a sibling `v<k>/` that a rewrite of the
-    * unversioned layout is writing beside them. An empty selection is
-    * an empty frame of the same schema. Spark lists the chosen
-    * directories itself, on the driver while there are at most
-    * `parallelPartitionDiscovery.threshold` (32) of them. The file
-    * index is built here rather than by `spark.read`, whose index files
-    * every read's listing in Spark's process-wide `FileStatusCache`
-    * under a fresh client key, where it stays until the cache's 250 MB
-    * cap evicts it: that would grow the heap with every statement. */
+    * unversioned layout is writing beside them. The driver also takes
+    * the data files of each chosen day directory, and hands every
+    * chosen root with its files to the file index through a
+    * `Engine.ListedFiles` cache, so Spark lists nothing, whatever the
+    * window width or the file count. An empty selection is an empty
+    * frame of the same schema. The file index is built here rather than
+    * by `spark.read`, whose index files every read's listing in Spark's
+    * process-wide `FileStatusCache` under a fresh client key, where it
+    * stays until the cache's 250 MB cap evicts it: that would grow the
+    * heap with every statement. */
   private def catalogDf(name: String, days0: Option[DayWindow]): DataFrame = {
     val s = scope
     val dir = s.tableDir(name)
@@ -1359,28 +1362,24 @@ class Engine(val spark: SparkSession, root: String,
     val days = days0.filter(_ => stamped)
     def resolve(): DataFrame = {
       val schema = catalogSchema(name)
-      val paths =
-        if (!Files.exists(dir)) Nil
-        else {
-          val ls = Files.list(dir)
-          val entries = try ls.toArray.toSeq.map(_.asInstanceOf[Path])
-            finally ls.close()
-          if (stamped)
-            entries.filter(p => Files.isDirectory(p) &&
-              Engine.dayInWindow(p.getFileName.toString, days))
-          else entries.filter { p =>
-            val n = p.getFileName.toString
-            Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-          }
-        }
+      // each chosen root (a day directory, or a data file of a table
+      // that is not day-partitioned) with the data files under it
+      val leaves =
+        if (stamped)
+          Engine.entries(dir).filter(p => Files.isDirectory(p) &&
+            Engine.dayInWindow(p.getFileName.toString, days)).map { d =>
+            new HPath(d.toUri) -> Engine.entries(d).flatMap(Engine.dataFile)
+          }.filter(_._2.nonEmpty)
+        else Engine.entries(dir).flatMap(Engine.dataFile)
+          .map(f => f.getPath -> Seq(f))
       val df0 =
-        if (paths.isEmpty)
+        if (leaves.isEmpty)
           spark.createDataFrame(java.util.List.of[Row](), schema)
         else {
           import org.apache.spark.sql.execution.datasources._
-          val index = new InMemoryFileIndex(spark,
-            paths.map(p => new org.apache.hadoop.fs.Path(p.toUri)).sorted,
-            Map("basePath" -> dir.toUri.toString), Some(schema), NoopCache)
+          val index = new InMemoryFileIndex(spark, leaves.map(_._1).sorted,
+            Map("basePath" -> dir.toUri.toString), Some(schema),
+            new Engine.ListedFiles(leaves.toMap))
           val partCols = index.partitionSchema.fieldNames.toSet
           // nullable data columns, as `spark.read` makes them
           val data = StructType(schema.filterNot(f => partCols(f.name))
@@ -1392,7 +1391,7 @@ class Engine(val spark: SparkSession, root: String,
       // tag time/date columns in the schema METADATA: ns stamps are
       // plain longs in Spark, and this marker is what lets the binary
       // wire mode frame them with the reference's TIME tag instead of
-      // INT (Wire.respondBinary). Metadata rides attribute references
+      // INT (Wire.binaryRows). Metadata rides attribute references
       // through projections/aliases, so plain `select stamp` keeps it.
       s.propsOf(name).filter(p => p.typ == "time" || p.typ == "date")
         .foldLeft(df0) { (df, p) =>
@@ -3296,6 +3295,42 @@ object Engine {
       scala.util.Try(LocalDate.parse(dirName.stripPrefix(key))).toOption
         .exists(d => !d.isBefore(lo) && !d.isAfter(hi))
     }
+  }
+
+  /** The entries of `dir`, none if it does not exist. */
+  private def entries(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val ls = Files.list(dir)
+      try ls.toArray.toSeq.map(_.asInstanceOf[Path]) finally ls.close()
+    }
+
+  /** `p`'s Hadoop status if it is a data file: a regular file whose
+    * name does not start with `_` or `.`, the names Spark's own listing
+    * leaves out. */
+  private def dataFile(p: Path): Option[FileStatus] = {
+    val n = p.getFileName.toString
+    if (n.startsWith("_") || n.startsWith(".")) None
+    else scala.util.Try(Files.readAttributes(p,
+        classOf[java.nio.file.attribute.BasicFileAttributes])).toOption
+      .filter(_.isRegularFile).map(a => new FileStatus(a.size, false, 1,
+        LocalBlockSize, a.lastModifiedTime.toMillis, new HPath(p.toUri)))
+  }
+
+  /** Hadoop's default block size of the local file system
+    * (`fs.local.block.size`); split planning does not read it. */
+  private val LocalBlockSize = 32L << 20
+
+  /** A statement's own listing, offered to `InMemoryFileIndex` as its
+    * file-status cache: it answers for exactly the roots the driver
+    * listed, so the index lists nothing itself, and it keeps nothing
+    * the index would put into it. */
+  private final class ListedFiles(leaves: Map[HPath, Seq[FileStatus]])
+      extends org.apache.spark.sql.execution.datasources.FileStatusCache {
+    override def getLeafFiles(path: HPath): Option[Array[FileStatus]] =
+      leaves.get(path).map(_.toArray)
+    override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
   }
 
   /** Depth cap for WITH RECURSIVE fixpoint evaluation. Generous —

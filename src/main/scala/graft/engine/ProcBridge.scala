@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
+import java.io.{BufferedReader, InputStreamReader}
 import java.net.{InetAddress, ServerSocket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.TimeUnit
@@ -107,27 +107,13 @@ object ProcBridge {
   }
 
   /** Accept at most one callback connection and serve it with the
-    * invoking engine (NOT a fresh session — the whole point). */
+    * invoking engine (NOT a fresh session — the whole point), through
+    * the same reply writer as a [[Server]] session. */
   private def serveOne(eng: Engine, listener: ServerSocket): Unit =
     try {
       val sock = listener.accept()
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, UTF_8))
-      val out = new PrintWriter(
-        new OutputStreamWriter(sock.getOutputStream, UTF_8))
-      out.println("+ok graft proc session")
-      out.flush()
-      var line = in.readLine()
-      while (line != null) {
-        val stmt = line.trim.stripSuffix(";").trim
-        if (stmt.equalsIgnoreCase("quit")) {
-          out.println("+ok bye"); out.flush(); line = null
-        } else {
-          if (stmt.nonEmpty) { Wire.respond(eng, stmt, out); out.flush() }
-          line = in.readLine()
-        }
-      }
-      sock.close()
+      try Wire.serve(eng, sock, "+ok graft proc session", () => true)
+      finally sock.close()
     } catch {
       case _: java.io.IOException => // listener closed / peer gone
     }

@@ -1,6 +1,7 @@
 package graft.engine
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
+import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream,
+  OutputStreamWriter, PrintWriter}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -27,8 +28,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    | +cursor <id>            (SELECT — result parked as a cursor)
   *    | +batch <n> <more01>     (FETCH — then one #-prefixed header
   *                               line and n tab-separated row lines)
-  *   C: fetch <id> | close <id> | quit
+  *   C: fetch <id> | close <id> | mode binary | mode text | quit
   * }}}
+  *
+  * Reply contract: every reply — the greeting, a `mode`/`quit`
+  * answer, or a whole `+batch` frame with its header and rows — is
+  * rendered into one buffer and handed to the socket in one write, and
+  * accepted sockets set `TCP_NODELAY`. A reply split over several
+  * writes lets Nagle's algorithm hold its tail until the client's
+  * delayed ACK (40 ms on Linux), which every FETCH page of a paged
+  * export then waits out.
   *
   * The server thread and per-session threads are daemons; `stop()`
   * closes the listener and in-flight sessions clean up via
@@ -64,76 +73,113 @@ class Server(spark: org.apache.spark.sql.SparkSession, root: String,
 
   private def session(sock: Socket): Unit = {
     val eng = new Engine(spark, root, cursorPageSize = pageSize)
-    val in = new BufferedReader(
-      new InputStreamReader(sock.getInputStream, UTF_8))
-    val out = new PrintWriter(
-      new OutputStreamWriter(sock.getOutputStream, UTF_8))
-    out.println("+ok graft server ready")
-    out.flush()
-    try {
-      var line = in.readLine()
-      var open = true
-      // row framing mode: text (TSV lines, default) or the reference's
-      // binary typed-row frames (row.c:138-207) — per-session toggle,
-      // wire-level like quit/exit, so it never reaches the parser
-      var binary = false
-      while (open && line != null && running) {
-        val stmt = line.trim.stripSuffix(";").trim
-        if (stmt.equalsIgnoreCase("quit") || stmt.equalsIgnoreCase("exit")) {
-          out.println("+ok bye"); out.flush()
-          open = false
-        } else if (stmt.equalsIgnoreCase("mode binary") ||
-            stmt.equalsIgnoreCase("mode text")) {
-          binary = stmt.toLowerCase.endsWith("binary")
-          out.println(s"+ok mode ${if (binary) "binary" else "text"}")
-          out.flush()
-          line = in.readLine()
-        } else {
-          if (stmt.nonEmpty) {
-            if (binary) Wire.respondBinary(eng, stmt, out,
-              sock.getOutputStream)
-            else respond(eng, stmt, out)
-            out.flush()
-          }
-          line = in.readLine()
-        }
-      }
-    } catch {
+    try Wire.serve(eng, sock, "+ok graft server ready", () => running)
+    catch {
       case _: java.io.IOException => // peer vanished — clean up below
     } finally {
       eng.closeSession()
       try sock.close() catch { case _: java.io.IOException => }
     }
   }
-
-  private def respond(eng: Engine, stmt: String, out: PrintWriter): Unit =
-    Wire.respond(eng, stmt, out)
 }
 
 /** Shared wire framing — used by [[Server]] sessions and by the
   * external-procedure bridge (which serves the SAME engine session to
-  * a subprocess over a loopback socket). */
+  * a subprocess over a loopback socket). Each reply is rendered whole
+  * into one buffer and then written to the socket at once. */
 private[engine] object Wire {
 
-  def respond(eng: Engine, stmt: String, out: PrintWriter): Unit =
+  /** Serve `sock` with `eng` ([[session]]), replies unbatched by
+    * Nagle's algorithm. */
+  def serve(eng: Engine, sock: Socket, greeting: String,
+            live: () => Boolean): Unit = {
+    sock.setTcpNoDelay(true)
+    session(eng, sock.getInputStream, sock.getOutputStream, greeting, live)
+  }
+
+  /** Answer statements read from `in`, one a line, until the peer quits
+    * or leaves or `live()` turns false; each reply goes to `out` in one
+    * write. `mode binary|text` switches row framing (text by default);
+    * like `quit`/`exit` it is wire-level and never reaches the parser. */
+  def session(eng: Engine, in0: InputStream, out: OutputStream,
+              greeting: String, live: () => Boolean): Unit = {
+    val in = new BufferedReader(new InputStreamReader(in0, UTF_8))
+    send(out, greeting)
+    var binary = false
+    var line = in.readLine()
+    while (line != null && live()) {
+      val stmt = line.trim.stripSuffix(";").trim
+      if (stmt.equalsIgnoreCase("quit") || stmt.equalsIgnoreCase("exit")) {
+        send(out, "+ok bye")
+        line = null
+      } else {
+        if (stmt.equalsIgnoreCase("mode binary") ||
+            stmt.equalsIgnoreCase("mode text")) {
+          binary = stmt.toLowerCase.endsWith("binary")
+          send(out, s"+ok mode ${if (binary) "binary" else "text"}")
+        } else if (stmt.nonEmpty) respond(eng, stmt, binary, out)
+        line = in.readLine()
+      }
+    }
+  }
+
+  /** Answer one statement: the reply, rows framed as text lines or
+    * binary typed rows, goes to `out` in one write. */
+  def respond(eng: Engine, stmt: String, binary: Boolean,
+              out: OutputStream): Unit = {
+    val r = new Reply
     try eng.sql(stmt) match {
-      case Batch(rows, schema, more) =>
-        out.println(s"+batch ${rows.length} ${if (more) 1 else 0}")
-        out.println("#" + schema.fieldNames.map(esc).mkString("\t"))
-        rows.foreach { r =>
-          out.println(schema.indices.map { i =>
-            if (r.isNullAt(i)) "\\N" else esc(String.valueOf(r.get(i)))
+      case b @ Batch(rows, schema, _) =>
+        r.line(head(b, eng))
+        r.line("#" + schema.fieldNames.map(esc).mkString("\t"))
+        if (binary) binaryRows(r, b)
+        else rows.foreach { row =>
+          r.line(schema.indices.map { i =>
+            if (row.isNullAt(i)) "\\N" else esc(String.valueOf(row.get(i)))
           }.mkString("\t"))
         }
-      case other => respondResult(other, eng, out)
+      case other => r.line(head(other, eng))
     } catch {
       case e: Exception =>
-        out.println(s"-err ${esc(String.valueOf(e.getMessage))}")
+        r.reset()
+        r.line(s"-err ${esc(String.valueOf(e.getMessage))}")
     }
+    r.writeTo(out)
+  }
+
+  /** A one-line reply. */
+  private def send(out: OutputStream, line: String): Unit = {
+    out.write((line + "\n").getBytes(UTF_8))
+    out.flush()
+  }
 
   def esc(s: String): String = s
     .replace("\\", "\\\\").replace("\t", "\\t")
     .replace("\r", "\\r").replace("\n", "\\n")
+
+  /** One reply's bytes, grown as it renders; allocated per reply, so
+    * no session keeps a large page's buffer alive. */
+  private final class Reply {
+    private var buf = new Array[Byte](256)
+    private var n = 0
+    private def room(k: Int): Unit =
+      if (n + k > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + k))
+    def byte(b: Int): Unit = { room(1); buf(n) = b.toByte; n += 1 }
+    def bytes(a: Array[Byte]): Unit = {
+      room(a.length); System.arraycopy(a, 0, buf, n, a.length); n += a.length
+    }
+    def line(s: String): Unit = { bytes(s.getBytes(UTF_8)); byte('\n') }
+    /** 8 little-endian bytes. */
+    def long(v: Long): Unit = {
+      room(8)
+      var i = 0
+      while (i < 8) { buf(n + i) = (v >>> (8 * i)).toByte; i += 1 }
+      n += 8
+    }
+    def reset(): Unit = n = 0
+    def writeTo(out: OutputStream): Unit = { out.write(buf, 0, n); out.flush() }
+  }
 
   // ── binary typed-row framing ──────────────────────────────────────
   // The reference's row projection frames every field as
@@ -145,81 +191,54 @@ private[engine] object Wire {
   // (+ok/-err/+cursor/+batch) stay text lines in both modes — only
   // the rows after a +batch head switch representation, so a client
   // upgrades by reading N structured rows instead of N lines.
-  private val TagNothing = 0.toByte
-  private val TagText = 1.toByte
-  private val TagTime = 3.toByte
-  private val TagFloat = 4.toByte
-  private val TagInt = 5.toByte
-  private val TagBool = 9.toByte
+  private val TagNothing = 0
+  private val TagText = 1
+  private val TagTime = 3
+  private val TagFloat = 4
+  private val TagInt = 5
+  private val TagBool = 9
 
-  def respondBinary(eng: Engine, stmt: String, out: PrintWriter,
-                    raw: java.io.OutputStream): Unit =
-    try eng.sql(stmt) match {
-      case Batch(rows, schema, more) =>
-        out.println(s"+batch ${rows.length} ${if (more) 1 else 0}")
-        out.println("#" + schema.fieldNames.map(esc).mkString("\t"))
-        out.flush() // order the text head before the raw frames
-        val bb = java.nio.ByteBuffer.allocate(8)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val bos = new java.io.BufferedOutputStream(raw)
-        def num(tag: Byte, v: Long): Unit = {
-          bos.write(tag.toInt)
-          bb.clear(); bb.putLong(v)
-          bos.write(bb.array(), 0, 8)
+  private def binaryRows(r: Reply, b: Batch): Unit = {
+    val schema = b.schema
+    // engine time/date columns are ns LONGS in Spark — the schema
+    // metadata marker from Engine.tableDf decides TIME vs INT
+    val timeCol = schema.fields.map(f =>
+      f.metadata.contains("graft.nowType") &&
+        Set("time", "date")(f.metadata.getString("graft.nowType")))
+    b.rows.foreach { row =>
+      schema.indices.foreach { i =>
+        if (row.isNullAt(i)) { r.byte(TagNothing); r.byte(0) }
+        else row.get(i) match {
+          case l: java.lang.Long =>
+            r.byte(if (timeCol(i)) TagTime else TagInt); r.long(l)
+          case n: java.lang.Integer => r.byte(TagInt); r.long(n.longValue)
+          case d: java.lang.Double =>
+            r.byte(TagFloat); r.long(java.lang.Double.doubleToRawLongBits(d))
+          case v: java.lang.Boolean => r.byte(TagBool); r.byte(if (v) 1 else 0)
+          case t: java.sql.Timestamp => // ns since epoch, TIME tag
+            r.byte(TagTime)
+            r.long(Math.floorDiv(t.getTime, 1000L) * 1000000000L +
+              t.getNanos.toLong)
+          case other => // TEXT: NUL-terminated UTF-8
+            r.byte(TagText); r.bytes(String.valueOf(other).getBytes(UTF_8))
+            r.byte(0)
         }
-        // engine time/date columns are ns LONGS in Spark — the schema
-        // metadata marker from Engine.tableDf decides TIME vs INT
-        val timeCol = schema.fields.map(f =>
-          f.metadata.contains("graft.nowType") &&
-            Set("time", "date")(f.metadata.getString("graft.nowType")))
-        rows.foreach { r =>
-          schema.indices.foreach { i =>
-            if (r.isNullAt(i)) { bos.write(TagNothing.toInt); bos.write(0) }
-            else r.get(i) match {
-              case l: java.lang.Long =>
-                num(if (timeCol(i)) TagTime else TagInt, l)
-              case n: java.lang.Integer => num(TagInt, n.longValue)
-              case d: java.lang.Double =>
-                bos.write(TagFloat.toInt)
-                bb.clear(); bb.putDouble(d)
-                bos.write(bb.array(), 0, 8)
-              case b: java.lang.Boolean =>
-                bos.write(TagBool.toInt); bos.write(if (b) 1 else 0)
-              case t: java.sql.Timestamp => // ns since epoch, TIME tag
-                num(TagTime, Math.floorDiv(t.getTime, 1000L) *
-                  1000000000L + t.getNanos.toLong)
-              case other => // TEXT: NUL-terminated UTF-8
-                bos.write(TagText.toInt)
-                bos.write(String.valueOf(other)
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                bos.write(0)
-            }
-          }
-          bos.write('\n'.toInt)
-        }
-        bos.flush()
-      case other => // non-row results frame identically in both modes
-        respondResult(other, eng, out)
-    } catch {
-      case e: Exception =>
-        out.println(s"-err ${esc(String.valueOf(e.getMessage))}")
+      }
+      r.byte('\n')
     }
+  }
 
-  /** Head-frame formatting shared by BOTH wire modes — one source of
-    * truth for every non-row-data frame. */
-  private def respondResult(res: Result, eng: Engine,
-                            out: PrintWriter): Unit = res match {
-    case Status(true, m) =>
-      out.println(if (m.isEmpty) "+ok" else s"+ok ${esc(m)}")
-    case Status(false, m) => out.println(s"-err ${esc(m)}")
-    case Report(loaded, errors) => out.println(s"+report $loaded $errors")
+  /** The head line of a result, the same in both row framings. */
+  private def head(res: Result, eng: Engine): String = res match {
+    case Status(true, m) => if (m.isEmpty) "+ok" else s"+ok ${esc(m)}"
+    case Status(false, m) => s"-err ${esc(m)}"
+    case Report(loaded, errors) => s"+report $loaded $errors"
     case Rows(df) =>
       // every remote result is a cursor (reference sendCursor,
       // ifc/nowdb.c:1185): the client decides the paging cadence
-      out.println(s"+cursor ${eng.openCursor(df)}")
-    case CursorRef(id) => out.println(s"+cursor $id")
-    case b: Batch => // callers frame Batch themselves (mode-specific)
-      out.println(s"+batch ${b.rows.length} ${if (b.more) 1 else 0}")
+      s"+cursor ${eng.openCursor(df)}"
+    case CursorRef(id) => s"+cursor $id"
+    case b: Batch => s"+batch ${b.rows.length} ${if (b.more) 1 else 0}"
   }
 }
 

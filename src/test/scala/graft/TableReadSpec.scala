@@ -120,6 +120,39 @@ class TableReadSpec extends AnyFunSuite {
     }
   }
 
+  test("building a SELECT over more than 32 day directories or data " +
+    "files runs no Spark job and answers right") {
+    scope
+    def built(stmt: String): DataFrame = {
+      val (r, jobs, _) = sparkWork(eng.sql(stmt))
+      assert(jobs == 0, s"$jobs Spark job(s) while building: $stmt")
+      frame(r)
+    }
+    // a 63-day window over the 40 days of `e`
+    val tables = java.nio.file.Paths.get(root, scope, "tables")
+    val dayDirs = Files.list(tables.resolve("e")).toArray
+      .map(_.asInstanceOf[Path].getFileName.toString)
+      .count(n => n.startsWith("stamp_date=") && !n.contains("DEFAULT"))
+    assert(dayDirs > 32, s"$dayDirs day directories")
+    val q = "select count(*), sum(qty), min(stamp), max(stamp) from %s " +
+      s"where stamp >= '${day(-12)}' and stamp < '${day(51)}'"
+    assert(built(q.format("e")).collect().toSeq == rows(q.format("raw")))
+    assert(rows(q.format("raw")).head.getLong(0) == days * 4)
+    // a vertex type of 40 separate appends, one data file each
+    ok(eng.sql("create type w (id uint pk, name text)"))
+    (1 to 40).foreach(i => ok(eng.sql(s"insert into w (id, name) ($i, 'n$i')")))
+    val files = Files.walk(tables.resolve("w")).toArray
+      .map(_.asInstanceOf[Path])
+      .count(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.startsWith(".") &&
+        !p.getFileName.toString.startsWith("_"))
+    assert(files >= 40, s"$files data files")
+    eng.attachTable("wraw", spark.range(1, 41).select(col("id"),
+      concat(lit("n"), col("id")).as("name")))
+    val v = "select count(*), sum(id), min(name), max(name) from %s"
+    assert(built(v.format("w")).collect().toSeq == rows(v.format("wraw")))
+  }
+
   test("pruned answers equal unpruned ones at day boundaries") {
     scope
     val d = s"${day(10)}"
