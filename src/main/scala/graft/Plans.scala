@@ -248,12 +248,13 @@ object Plans {
         "one scan + one multi-column agg per table, column-count-" +
         "sized output — the driver-divergence isolator"),
       "q369_correlated_subquery" -> ("correlated EXISTS / NOT " +
-        "EXISTS / IN desugared to one semi + one anti + one semi " +
-        "join on the correlation keys — never a per-row " +
-        "re-execution"),
+        "EXISTS / IN, decorrelated by Catalyst into one semi + one " +
+        "anti + one semi join on the correlation keys — never a " +
+        "per-row re-execution"),
       "q370_correlated_scalar" -> ("correlated scalar-aggregate " +
-        "subqueries as aggregated LEFT joins: inner groups once by " +
-        "the correlation key, map-side combined"),
+        "subqueries, decorrelated by Catalyst into aggregated LEFT " +
+        "joins: inner groups once by the correlation key, map-side " +
+        "combined"),
       "q371_bpe_merges" -> ("one-pass greedy BPE: per-round window " +
         "partitions on the WORD (vocab-bounded, never corpus-" +
         "bounded), pair-count agg + 1-row top-1 collect"),
@@ -261,8 +262,9 @@ object Plans {
         "aggregated LEFT join on the group key feeding the " +
         "aggregation — no per-group re-execution"),
       "q373_nested_scalar" -> ("scalar correlated to the enclosing " +
-        "subquery: nested aggregated frame joins onto the EXISTS " +
-        "scan, semi join above — joins all the way down"),
+        "subquery, decorrelated by Catalyst: nested aggregated frame " +
+        "joins onto the EXISTS scan, semi join above — joins all the " +
+        "way down"),
       "q374_notin_nulls" -> ("ANSI NOT IN: OR-blanked probe rides " +
         "the correlation-KEYED anti join as a residual predicate; " +
         "uncorrelated legs keep the equi anti join"),

@@ -11,7 +11,8 @@ import scala.collection.mutable
   * usual SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env. Runs the query
   * through the noop sink and prints, per completed stage: wall,
   * task count, executor run/cpu time, shuffle read/write bytes,
-  * input bytes, spill. Jobs are labelled so AQE stage trees group. */
+  * input bytes, spill, task deserialization and GC time. Jobs are
+  * labelled so AQE stage trees group. */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -73,12 +74,13 @@ object QueryProfile {
         s"${stages.size} stages ==")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"tasks"}%6s " +
         f"${"run_ms"}%8s ${"cpu_ms"}%8s ${"shR_mb"}%7s ${"shW_mb"}%7s " +
-        f"${"in_mb"}%7s ${"spill_mb"}%8s  name")
+        f"${"in_mb"}%7s ${"spill_mb"}%8s ${"deser_ms"}%8s ${"gc_ms"}%5s" +
+        "  name")
       stages.sortBy(-_.wallMs).take(30).foreach { s =>
         println(f"${s.id}%6d ${s.wallMs}%8d ${s.tasks}%6d " +
           f"${s.runMs}%8d ${s.cpuMs}%8d ${s.shRead / 1048576}%7d " +
           f"${s.shWrite / 1048576}%7d ${s.input / 1048576}%7d " +
-          f"${s.spill / 1048576}%8d ${s.deserMs}%6d ${s.gcMs}%5d" +
+          f"${s.spill / 1048576}%8d ${s.deserMs}%8d ${s.gcMs}%5d" +
           f"  ${s.name}")
       }
       val sumWall = stages.map(_.wallMs).sum

@@ -1735,14 +1735,7 @@ class Engine(val spark: SparkSession, root: String,
   private def containsAgg(e: Expr): Boolean = e match {
     case FnCall(n, args) =>
       Parser.isAggregate(n) || args.exists(containsAgg)
-    case BinOp(_, l, r) => containsAgg(l) || containsAgg(r)
-    case UnOp(_, x) => containsAgg(x)
-    case InList(x, vs, _) => containsAgg(x) || vs.exists(containsAgg)
-    case IsNull(x, _) => containsAgg(x)
-    case CaseExpr(bs, o) =>
-      bs.exists(b => containsAgg(b._1) || containsAgg(b._2)) ||
-        o.exists(containsAgg)
-    case _ => false
+    case _ => children(e).exists(containsAgg)
   }
 
   /** Inline select-item aliases into an expression (HAVING may refer
@@ -1750,21 +1743,9 @@ class Engine(val spark: SparkSession, root: String,
     * must resolve to the underlying aggregate when the predicate is
     * evaluated inside the aggregation). */
   private def substAliases(e: Expr, aliases: Map[String, Expr]): Expr =
-    e match {
+    rewriteExpr(e) {
       case Field(n, None) if aliases.contains(n.toLowerCase) =>
         aliases(n.toLowerCase)
-      case FnCall(n, args) => FnCall(n, args.map(substAliases(_, aliases)))
-      case BinOp(o, l, r) =>
-        BinOp(o, substAliases(l, aliases), substAliases(r, aliases))
-      case UnOp(o, x) => UnOp(o, substAliases(x, aliases))
-      case InList(x, vs, neg) =>
-        InList(substAliases(x, aliases), vs.map(substAliases(_, aliases)),
-          neg)
-      case IsNull(x, neg) => IsNull(substAliases(x, aliases), neg)
-      case CaseExpr(bs, o) => CaseExpr(
-        bs.map(b => (substAliases(b._1, aliases), substAliases(b._2, aliases))),
-        o.map(substAliases(_, aliases)))
-      case other => other
     }
 
   /** Build a Column where aggregate calls become agg expressions and
@@ -1877,7 +1858,7 @@ class Engine(val spark: SparkSession, root: String,
 
   /** Typing context for a whole select: from-table columns bare and
     * alias-qualified, edge-joined vertex columns qualified only —
-    * exactly the map buildSelectNoLimit assembles inline. */
+    * the one buildSelectCore types its expressions with. */
   private def selectCtx(sel: SelectStmt): ExprBuilder.Ctx =
     sel.from match {
       case None => Map.empty
@@ -1885,7 +1866,7 @@ class Engine(val spark: SparkSession, root: String,
         val fromAlias = sel.fromAlias.getOrElse(fromName)
         val base0 = typeCtx(fromName)
         // the TIMESTAMP field keyword resolves to the stamp column on
-        // stamped edges (buildSelectNoLimit's rewrite) — type it too
+        // stamped edges (buildSelectCore's rewrite) — type it too
         val base =
           if (isStampedEdge(fromName) && !base0.contains("timestamp"))
             base0 ++ base0.get("stamp").map("timestamp" -> _)
@@ -1917,7 +1898,7 @@ class Engine(val spark: SparkSession, root: String,
           {
             val fromCols =
               tryColsOf(fromName).getOrElse(base.keySet.toSet)
-            val joinedBare = sel.ansiJoins.filterNot(_.generated)
+            val joinedBare = sel.ansiJoins
               .flatMap(aj => typeCtx(aj.table).toSeq)
               .filterNot { case (k, _) =>
                 base.contains(k) || fromCols(k) }
@@ -2039,14 +2020,14 @@ class Engine(val spark: SparkSession, root: String,
   /** Inline every fully UNcorrelated ScalarSelect as its evaluated
     * literal; a scalar correlated to ANY enclosing scope — the
     * statement itself or a subquery we are currently inside (`outers`
-    * is innermost-first) — is left in place for the join desugars.
+    * is innermost-first) — is left in place for Catalyst.
     * Descending into an IN/EXISTS subquery pushes that subquery onto
     * the scope stack, so a scalar inside it that references the
     * subquery's own table is recognized as correlated there instead
     * of being misclassified against the top scope (r11 verdict task:
     * scalars correlated to an enclosing subquery). */
   private def substScalars(e: Expr, outers: Seq[SelectStmt]): Expr =
-    e match {
+    rewriteExpr(e) {
       case ss @ ScalarSelect(sub) =>
         // a scope that can PROVE the name resolves nowhere throws
         // UnknownColumn — but an outer scope further up may still
@@ -2057,21 +2038,10 @@ class Engine(val spark: SparkSession, root: String,
             try isCorrelatedSub(sub, o)
             catch { case _: Engine.UnknownColumn => false })) ss
         else evalScalar(sub)
-      case BinOp(o, l, r) =>
-        BinOp(o, substScalars(l, outers), substScalars(r, outers))
-      case UnOp(o, x) => UnOp(o, substScalars(x, outers))
-      case InList(x, vs, n) =>
-        InList(substScalars(x, outers), vs.map(substScalars(_, outers)), n)
       case InSelect(x, sub, n) => InSelect(substScalars(x, outers),
         sub.copy(where = sub.where.map(substScalars(_, sub +: outers))), n)
       case ExistsSel(sub, n) => ExistsSel(
         sub.copy(where = sub.where.map(substScalars(_, sub +: outers))), n)
-      case IsNull(x, n) => IsNull(substScalars(x, outers), n)
-      case CaseExpr(bs, o) => CaseExpr(
-        bs.map(b => (substScalars(b._1, outers), substScalars(b._2, outers))),
-        o.map(substScalars(_, outers)))
-      case FnCall(n, args) => FnCall(n, args.map(substScalars(_, outers)))
-      case other => other
     }
 
   private def conjuncts(e: Expr): Seq[Expr] = e match {
@@ -2080,47 +2050,20 @@ class Engine(val spark: SparkSession, root: String,
   }
 
   private def containsInSelect(e: Expr): Boolean = e match {
-    case _: InSelect => true
-    case _: ExistsSel => true
-    case BinOp(_, l, r) => containsInSelect(l) || containsInSelect(r)
-    case UnOp(_, x) => containsInSelect(x)
-    case InList(x, vs, _) =>
-      containsInSelect(x) || vs.exists(containsInSelect)
-    case IsNull(x, _) => containsInSelect(x)
-    case CaseExpr(bs, o) =>
-      bs.exists(b => containsInSelect(b._1) || containsInSelect(b._2)) ||
-        o.exists(containsInSelect)
-    case FnCall(_, args) => args.exists(containsInSelect)
-    case _ => false
+    case _: InSelect | _: ExistsSel => true
+    case _ => children(e).exists(containsInSelect)
   }
 
-  private def containsScalarSelect(e: Expr): Boolean = e match {
-    case _: ScalarSelect => true
-    case BinOp(_, l, r) =>
-      containsScalarSelect(l) || containsScalarSelect(r)
-    case UnOp(_, x) => containsScalarSelect(x)
-    case InList(x, vs, _) =>
-      containsScalarSelect(x) || vs.exists(containsScalarSelect)
-    case IsNull(x, _) => containsScalarSelect(x)
-    case CaseExpr(bs, o) =>
-      bs.exists(b =>
-        containsScalarSelect(b._1) || containsScalarSelect(b._2)) ||
-        o.exists(containsScalarSelect)
-    case FnCall(_, args) => args.exists(containsScalarSelect)
-    case _ => false
-  }
+  /** Does `e` hold a compiled correlated scalar subquery? */
+  private def hasSubquery(e: Expr): Boolean =
+    e.isInstanceOf[Compiled] || children(e).exists(hasSubquery)
+
+  private def containsScalarSelect(e: Expr): Boolean =
+    e.isInstanceOf[ScalarSelect] || children(e).exists(containsScalarSelect)
 
   private def fieldsOf(e: Expr): Seq[Field] = e match {
     case f: Field => Seq(f)
-    case BinOp(_, l, r) => fieldsOf(l) ++ fieldsOf(r)
-    case UnOp(_, x) => fieldsOf(x)
-    case InList(x, vs, _) => fieldsOf(x) ++ vs.flatMap(fieldsOf)
-    case IsNull(x, _) => fieldsOf(x)
-    case CaseExpr(bs, o) =>
-      bs.flatMap(b => fieldsOf(b._1) ++ fieldsOf(b._2)) ++
-        o.toSeq.flatMap(fieldsOf)
-    case FnCall(_, args) => args.flatMap(fieldsOf)
-    case _ => Seq.empty
+    case _ => children(e).flatMap(fieldsOf)
   }
 
   /** fieldsOf, but ALSO descending into nested subqueries (their
@@ -2131,18 +2074,10 @@ class Engine(val spark: SparkSession, root: String,
     * misleading unknown-column error). */
   private def deepFields(e: Expr): Seq[Field] = e match {
     case f: Field => Seq(f)
-    case BinOp(_, l, r) => deepFields(l) ++ deepFields(r)
-    case UnOp(_, x) => deepFields(x)
-    case InList(x, vs, _) => deepFields(x) ++ vs.flatMap(deepFields)
-    case IsNull(x, _) => deepFields(x)
-    case CaseExpr(bs, o) =>
-      bs.flatMap(b => deepFields(b._1) ++ deepFields(b._2)) ++
-        o.toSeq.flatMap(deepFields)
-    case FnCall(_, args) => args.flatMap(deepFields)
     case InSelect(x, s2, _) => deepFields(x) ++ deepFieldsSel(s2)
     case ExistsSel(s2, _) => deepFieldsSel(s2)
     case ScalarSelect(s2) => deepFieldsSel(s2)
-    case _ => Seq.empty
+    case _ => children(e).flatMap(deepFields)
   }
   private def deepFieldsSel(s: SelectStmt): Seq[Field] =
     s.items.map(_.expr).flatMap(deepFields) ++
@@ -2160,22 +2095,14 @@ class Engine(val spark: SparkSession, root: String,
   private def deepCols(s: SelectStmt): Set[String] =
     (s +: deepSubSelects(s)).flatMap(sel =>
       (sel.from.toSeq ++
-        sel.ansiJoins.filterNot(_.generated).map(_.table))
+        sel.ansiJoins.map(_.table))
         .flatMap(t => tryColsOf(t).getOrElse(Set.empty))).toSet
   /** IMMEDIATE subquery SELECTs in expression position. */
   private def subSelectsOf(e: Expr): Seq[SelectStmt] = e match {
-    case BinOp(_, l, r) => subSelectsOf(l) ++ subSelectsOf(r)
-    case UnOp(_, x) => subSelectsOf(x)
-    case InList(x, vs, _) => subSelectsOf(x) ++ vs.flatMap(subSelectsOf)
-    case IsNull(x, _) => subSelectsOf(x)
-    case CaseExpr(bs, o) =>
-      bs.flatMap(b => subSelectsOf(b._1) ++ subSelectsOf(b._2)) ++
-        o.toSeq.flatMap(subSelectsOf)
-    case FnCall(_, args) => args.flatMap(subSelectsOf)
     case InSelect(x, s2, _) => subSelectsOf(x) :+ s2
     case ExistsSel(s2, _) => Seq(s2)
     case ScalarSelect(s2) => Seq(s2)
-    case _ => Seq.empty
+    case _ => children(e).flatMap(subSelectsOf)
   }
   private def immediateSubSelects(s: SelectStmt): Seq[SelectStmt] =
     (s.items.map(_.expr) ++ s.where.toSeq ++ s.ansiJoins.map(_.on) ++
@@ -2257,7 +2184,7 @@ class Engine(val spark: SparkSession, root: String,
       // subquery's own columns would be misread as correlations —
       // TPC-H q2's scalar comma-joins four tables (r13)
       val innerCols = colsOf(sub.from.get) ++
-        sub.ansiJoins.filterNot(_.generated).flatMap(a => colsOf(a.table))
+        sub.ansiJoins.flatMap(a => colsOf(a.table))
       val outers = outerQualifiers(outerSel) -- subAliases
       // outer-scope column names, resolved lazily (only consulted for
       // unqualified names the inner table lacks); (cols, allResolved)
@@ -2284,11 +2211,11 @@ class Engine(val spark: SparkSession, root: String,
           // reference.
           !hasEdgeJoins &&
             (if (!innerKnown)
-              sub.ansiJoins.filterNot(_.generated).isEmpty
+              sub.ansiJoins.isEmpty
             else !innerCols(f.name.toLowerCase)) && {
             // a name resolving in NEITHER scope is a typo'd column,
             // not a correlation — routing it down the correlated
-            // desugar would fail with a confusing scoping error
+            // build would fail with a confusing scoping error
             // (review finding). Only provable when both scopes'
             // schemas resolved.
             val (oCols, oKnown) = outerColInfo
@@ -2301,139 +2228,67 @@ class Engine(val spark: SparkSession, root: String,
       })
     }
 
-  /** Shared scoping/qualification for correlated-subquery desugars
-    * (EXISTS/IN semi-anti joins and scalar-aggregate left joins):
-    * innermost-first name resolution, plus a rewriter that qualifies
-    * every field to its resolved scope so join conditions stay
-    * unambiguous when both sides share column names. */
-  private class CorrScope(sub: SelectStmt, outerSel: SelectStmt,
-      extraInner: Set[String] = Set.empty) {
-    val innerName: String = sub.from.getOrElse(
-      throw new IllegalArgumentException(
+  /** Scoping of one correlated subquery against the query it sits in:
+    * innermost-first name resolution (a field is the subquery's own
+    * when one of its tables has it, an outer reference otherwise) and
+    * the dialect's shape rules. The subquery itself is built by
+    * [[buildSelectNoLimit]] with its outer references marked, and
+    * Catalyst decorrelates it. */
+  private class CorrScope(sub: SelectStmt, outerSel: SelectStmt) {
+    /** The subquery's own tables, FROM first: (alias, table name). */
+    private val innerTables: Seq[(String, String)] = {
+      val from = sub.from.getOrElse(throw new IllegalArgumentException(
         "EXISTS/IN/scalar subquery needs a FROM table"))
-    val innerAliasRaw: String = sub.fromAlias.getOrElse(innerName)
-    val innerAlias: String = innerAliasRaw.toLowerCase
-    /** All the subquery's own tables: FROM plus comma/ANSI joins
-      * (r13 — TPC-H q2's correlated scalar joins four tables), as
-      * (aliasRaw, tableName) in declared order. Generated joins (the
-      * nested-scalar frames) are threaded via `extraInner` instead. */
-    val innerTables: Seq[(String, String)] =
-      (innerAliasRaw, innerName) +: sub.ansiJoins.filterNot(_.generated)
-        .map(a => (a.alias.getOrElse(a.table), a.table))
-    val innerColsByAlias: Seq[(String, Set[String])] =
-      innerTables.map { case (a, t) =>
-        a -> tableColumns(t).map(_.toLowerCase).toSet }
-    val innerAliases: Set[String] =
+      (sub.fromAlias.getOrElse(from), from) +:
+        sub.ansiJoins.map(a => (a.alias.getOrElse(a.table), a.table))
+    }
+    private val innerAliases: Set[String] =
       innerTables.map(_._1.toLowerCase).toSet
-    val innerCols: Set[String] = innerColsByAlias.flatMap(_._2).toSet
-    val outers: Set[String] = outerQualifiers(outerSel) -- innerAliases
-    val outerBase: String = outerSel.fromAlias.getOrElse(outerSel.from.get)
-    val outerBaseCols: Set[String] =
-      tableColumns(outerSel.from.get).map(_.toLowerCase).toSet
+    val innerCols: Set[String] = innerTables.flatMap { case (_, t) =>
+      tableColumns(t).map(_.toLowerCase) }.toSet
     val innerCtx: ExprBuilder.Ctx = innerTables.flatMap { case (a, t) =>
       val tc = typeCtx(t)
       tc ++ tc.map { case (k, v) => s"${a.toLowerCase}.$k" -> v }
     }.toMap
-    /** Alias-qualified inner typing only — safe to merge with an
-      * outer ctx without bare-name collisions. */
-    val innerCtxQualified: ExprBuilder.Ctx =
-      innerTables.flatMap { case (a, t) =>
-        typeCtx(t).map { case (k, v) => s"${a.toLowerCase}.$k" -> v }
-      }.toMap
+    val outers: Set[String] = outerQualifiers(outerSel) -- innerAliases
+    private val outerBase = outerSel.fromAlias.getOrElse(outerSel.from.get)
+    private lazy val outerBaseCols =
+      tableColumns(outerSel.from.get).map(_.toLowerCase).toSet
     def isOuter(f: Field): Boolean = f.qualifier match {
       case Some(q) => val ql = q.toLowerCase
         !innerAliases(ql) && outers(ql)
       case None => !innerCols(f.name.toLowerCase)
     }
-    /** Alias owning an unqualified inner column — FROM table first,
-      * then joined tables in declared order (SQL would call a true
-      * cross-table ambiguity an error; the declared-order preference
-      * only applies to names a single table owns in practice). */
-    private def innerOwner(name: String): Option[String] =
-      innerColsByAlias.collectFirst {
-        case (a, cols) if cols(name) => a }
-    def qualify(e: Expr, preferInner: Boolean): Expr = e match {
-      case f: Field if f.qualifier.isEmpty =>
-        if (preferInner && innerCols(f.name.toLowerCase))
-          f.copy(qualifier = innerOwner(f.name.toLowerCase))
-        else if (outerBaseCols(f.name.toLowerCase))
-          f.copy(qualifier = Some(outerBase))
-        else if (innerCols(f.name.toLowerCase))
-          f.copy(qualifier = innerOwner(f.name.toLowerCase))
-        else f
-      case BinOp(o, l, r) =>
-        BinOp(o, qualify(l, preferInner), qualify(r, preferInner))
-      case UnOp(o, x) => UnOp(o, qualify(x, preferInner))
-      case InList(x, vs, n) =>
-        InList(qualify(x, preferInner), vs.map(qualify(_, preferInner)), n)
-      case IsNull(x, n) => IsNull(qualify(x, preferInner), n)
-      case CaseExpr(bs, o) => CaseExpr(
-        bs.map(b => (qualify(b._1, preferInner), qualify(b._2, preferInner))),
-        o.map(qualify(_, preferInner)))
-      case FnCall(n, args) => FnCall(n, args.map(qualify(_, preferInner)))
-      case other => other
+    /** `e` with every outer field replaced by an [[OuterRef]] typed
+      * from `outerCtx`. An unqualified one takes the outer FROM alias
+      * when that table has it, so it cannot be ambiguous against the
+      * outer query's joined tables. Nested subqueries are left to
+      * their own build. */
+    def markOuter(e: Expr, outerCtx: ExprBuilder.Ctx): Expr = rewriteExpr(e) {
+      case f: Field if isOuter(f) =>
+        val q =
+          if (f.qualifier.isEmpty && outerBaseCols(f.name.toLowerCase))
+            f.copy(qualifier = Some(outerBase))
+          else f
+        OuterRef(q, ExprBuilder.declaredType(q, outerCtx))
+      case InSelect(x, s2, n) => InSelect(markOuter(x, outerCtx), s2, n)
     }
-    /** Split the subquery WHERE into (correlated, local) conjuncts;
-      * rejects nested subqueries inside. Scalar subqueries correlated
-      * to THIS subquery's scope are desugared away before this runs
-      * (correlatedSemiAnti); one left in place is therefore correlated
-      * to a scope we cannot thread — a distinct precise error from
-      * the IN/EXISTS nesting one (review finding: the ScalarSelect
-      * case used to fall through to a generic position error). */
-    def splitWhere(): (Seq[Expr], Seq[Expr]) = {
-      val subConj = sub.where.map(conjuncts).getOrElse(Seq.empty)
-      if (subConj.exists(containsInSelect))
-        throw new IllegalArgumentException(
-          "nested subqueries inside a correlated subquery are not supported")
-      if (subConj.exists(containsScalarSelect))
-        throw new IllegalArgumentException(
-          "a scalar subquery inside a correlated subquery may " +
-            "correlate to that subquery's own scope or to the " +
-            "enclosing query's scope (or be fully uncorrelated); " +
-            "correlating PAST the enclosing query, or mixing scopes " +
-            "in one subquery, is not supported")
-      // a qualifier naming NEITHER this scope nor the enclosing one
-      // is a correlation this desugar cannot thread (e.g. a scalar
-      // mixing its own scope with one two levels up) — name the rule
-      // instead of letting the resolver fail on the filtered scan
-      subConj.flatMap(fieldsOf).foreach(f => f.qualifier.foreach { q =>
+    /** A qualifier naming neither this scope nor the enclosing one is
+      * a correlation past the enclosing query — name the rule instead
+      * of letting the resolver fail. */
+    def checkScopes(conj: Seq[Expr]): Unit =
+      conj.flatMap(fieldsOf).foreach(f => f.qualifier.foreach { q =>
         val ql = q.toLowerCase
-        if (!innerAliases(ql) && !outers(ql) && !extraInner(ql))
+        if (!innerAliases(ql) && !outers(ql))
           throw new IllegalArgumentException(
             s"$q.${f.name} references a scope that is neither this " +
               "subquery's own nor its directly enclosing query's — " +
               "correlating past the enclosing scope (or mixing " +
               "scopes in one subquery) is not supported")
       })
-      subConj.partition(c => fieldsOf(c).exists(isOuter))
-    }
-    /** The subquery's own scan: FROM table joined with its declared
-      * (non-generated) ANSI/comma joins in order. Comma joins carry a
-      * TRUE condition — their equi-predicates arrive from the local
-      * WHERE conjuncts and Catalyst pushes them into the join. */
-    def innerScan: DataFrame =
-      sub.ansiJoins.filterNot(_.generated)
-        .foldLeft(tableDf(innerName).as(innerAliasRaw)) { (f, aj) =>
-          val aAlias = aj.alias.getOrElse(aj.table)
-          f.join(tableDf(aj.table).as(aAlias),
-            ExprBuilder.build(aj.on, innerCtx), aj.kind)
-        }
-    /** The inner scan, aliased, pre-filtered by the local conjuncts.
-      * `base` overrides the scan when the caller pre-joined desugared
-      * scalar-aggregate frames onto it. */
-    def innerFrame(local: Seq[Expr],
-                   base0: Option[DataFrame] = None): DataFrame = {
-      val base = base0.getOrElse(innerScan)
-      local.reduceOption(BinOp("and", _, _)).fold(base)(w =>
-        base.filter(ExprBuilder.build(qualify(w, preferInner = true),
-          innerCtx)))
-    }
-    /** Shape guard. r13 relaxations: ANSI/comma joins are legal in
-      * every correlated subquery (the inner side becomes a joined
-      * scan — TPC-H q2's scalar), and scalarJoin validates GROUP BY
-      * itself (legal exactly when it groups by the correlation
-      * keys). Edge joins, HAVING, LIMIT/OFFSET and ORDER BY inside a
-      * correlated subquery stay rejected by name. */
+    /** Edge joins, HAVING, LIMIT/OFFSET and ORDER BY inside a
+      * correlated subquery are rejected by name; GROUP BY is legal
+      * only in a scalar, which checks its keys itself. */
     def requirePlainShape(what: String,
                           allowGroupBy: Boolean = false): Unit = {
       if (sub.joins.nonEmpty)
@@ -2449,33 +2304,10 @@ class Engine(val spark: SparkSession, root: String,
     }
   }
 
-  /** Replace every ScalarSelect node `shouldRw` accepts, recursing
-    * through the expression tree (shared by the top-level and the
-    * nested correlated-scalar desugars). */
-  private def rewriteScalarSubs(e: Expr, shouldRw: SelectStmt => Boolean,
-      repl: SelectStmt => Expr): Expr = {
-    def rw(x: Expr): Expr = rewriteScalarSubs(x, shouldRw, repl)
-    e match {
-      case ScalarSelect(s2) if shouldRw(s2) => repl(s2)
-      case BinOp(o, l, r) => BinOp(o, rw(l), rw(r))
-      case UnOp(o, x) => UnOp(o, rw(x))
-      case InList(x, vs, n) => InList(rw(x), vs.map(rw), n)
-      case IsNull(x, n) => IsNull(rw(x), n)
-      case CaseExpr(bs, o2) =>
-        CaseExpr(bs.map(b => (rw(b._1), rw(b._2))), o2.map(rw))
-      case FnCall(n, args) => FnCall(n, args.map(rw))
-      case other => other
-    }
-  }
-
-  /** Apply one [NOT] IN/EXISTS (SELECT …) conjunct to `df` as a
-    * left-semi/left-anti join — the shared routing for top-level
-    * WHERE conjuncts and (r13) conjuncts nested inside a correlated
-    * subquery, where `df` is the subquery's own inner scan and
-    * `outerSel` the subquery itself. */
-  private def applySubPred(df0: DataFrame, pred: Expr,
-      outerSel: SelectStmt, ctx: ExprBuilder.Ctx): DataFrame = {
-    var df = df0
+  /** Apply one [NOT] IN/EXISTS (SELECT …) conjunct of `outerSel`'s
+    * WHERE to `df`, its frame. */
+  private def applySubPred(df: DataFrame, pred: Expr,
+      outerSel: SelectStmt, ctx: ExprBuilder.Ctx): DataFrame =
     pred match {
       case InSelect(x, sub, neg) if !isCorrelatedSub(sub, outerSel) =>
         val subDf = buildSelect(sub)
@@ -2488,264 +2320,165 @@ class Engine(val spark: SparkSession, root: String,
           // positive IN: a keyed semi join IS ANSI-exact (NULL probes
           // never equi-match; a NULL in the list can only flip
           // non-matches to NULL, which the filter drops either way)
-          df = df.join(probe, probeCol === col("__graft_in"), "left_semi")
+          df.join(probe, probeCol === col("__graft_in"), "left_semi")
         else {
           // NOT IN under ANSI 3VL: x NOT IN S is TRUE only when S is
           // empty, or x is non-NULL, S holds no NULL and no match.
           // One bounded aggregate job (1 row: n, n non-null) picks the
-          // shape, keeping the fast equi anti join for the dominant
-          // NULL-free case instead of an OR-blanked non-equi join.
+          // shape, keeping a keyed anti join for the dominant NULL-free
+          // case: without a broadcast, Catalyst's null-aware plan
+          // would be a nested-loop join.
           val st = subDf.select(col(subDf.columns.head).as("__graft_v"))
             .agg(count(lit(1)), count(col("__graft_v"))).collect()(0)
           val (n, nonNull) = (st.getLong(0), st.getLong(1))
-          df =
-            if (n == 0L) df // NOT IN (empty) is TRUE for every row
-            else if (n > nonNull) df.filter(lit(false)) // NULL ∈ S
-            else df.filter(probeCol.isNotNull)
-              .join(probe, probeCol === col("__graft_in"), "left_anti")
+          if (n == 0L) df // NOT IN (empty) is TRUE for every row
+          else if (n > nonNull) df.filter(lit(false)) // NULL ∈ S
+          else df.filter(probeCol.isNotNull)
+            .join(probe, probeCol === col("__graft_in"), "left_anti")
         }
       case InSelect(x, sub, neg) =>
-        df = correlatedSemiAnti(df, Some(x), sub, neg, outerSel, ctx)
+        correlatedFilter(df, Some(x), sub, neg, outerSel, ctx)
       case ExistsSel(sub, neg) =>
-        df = correlatedSemiAnti(df, None, sub, neg, outerSel, ctx)
-      case _ => ()
+        correlatedFilter(df, None, sub, neg, outerSel, ctx)
+      case _ => df
     }
-    df
-  }
 
-  /** Desugar a correlated (or shape-compatible uncorrelated)
-    * `[NOT] EXISTS` / `x [NOT] IN (SELECT …)` into ONE
-    * left-semi/left-anti join: the subquery's outer-referencing WHERE
-    * conjuncts become the join condition (plus the probe predicate for
-    * IN), its purely-local conjuncts filter the inner scan before the
-    * join. This is the scale shape — Catalyst extracts the equi-keys
-    * and both sides shuffle (or the inner broadcasts); nothing
-    * re-executes per outer row.
+  /** Filter `df` by a `[NOT] EXISTS` or correlated `x [NOT] IN`
+    * subquery, handed to Catalyst as an `Exists` or `InSubquery` over
+    * the subquery's own build: Catalyst decorrelates it into one
+    * left-semi/left-anti join on the correlation conjuncts (NOT IN
+    * null-aware, with ANSI three-valued semantics), never a per-row
+    * re-execution.
     *
-    * NOT IN carries ANSI three-valued NULL semantics (r11 verdict
-    * task 4): the anti-join condition is
-    * `probe = item OR probe IS NULL OR item IS NULL`, so an outer row
-    * is eliminated exactly when its correlated set is non-empty and
-    * either contains the probe, contains a NULL item, or the probe is
-    * NULL — the ANSI truth table. The correlation equalities still
-    * provide the join's equi-keys; the OR is a residual predicate on
-    * the same shuffled join, so the plan stays a keyed anti join.
-    *
-    * A scalar-aggregate subquery inside the correlated WHERE that
-    * correlates to THIS subquery's own scope desugars first (one more
-    * CorrScope level): its aggregated frame left-joins onto the inner
-    * scan, and the scalar node becomes a plain column reference —
-    * never a per-row re-execution. */
-  private def correlatedSemiAnti(df: DataFrame, probe: Option[Expr],
+    * Catalyst resolves outer references one scope up only. So a
+    * scalar inside the subquery that correlates to `outerSel` (and not
+    * to the subquery) is evaluated as a hidden column of `df`,
+    * referenced from inside as an outer field, and dropped after the
+    * filter; and an IN/EXISTS nested in the subquery that reaches
+    * `outerSel` is rejected by name. */
+  private def correlatedFilter(df: DataFrame, probe: Option[Expr],
       sub0: SelectStmt, neg: Boolean, outerSel: SelectStmt,
-      outerCtx: ExprBuilder.Ctx): DataFrame = {
-    // one more nesting level: scalars correlated to sub0's own scope
-    var nestedJoins = Vector.empty[(String, DataFrame, Expr)]
-    def corrToSub(s2: SelectStmt): Boolean =
-      try isCorrelatedSub(s2, sub0)
+      ctx: ExprBuilder.Ctx): DataFrame = {
+    def correlates(s2: SelectStmt, to: SelectStmt): Boolean =
+      try isCorrelatedSub(s2, to)
       catch { case _: Engine.UnknownColumn => false }
-    // distinct prefix: the OUTER df may already carry a top-level
-    // desugared __graft_sc0 frame, and a nested conjunct that also
-    // references the outer scope lands in the semi-join condition —
-    // a same-named alias on both sides would be AMBIGUOUS_REFERENCE
-    // (review finding)
-    val subA = sub0.copy(where = sub0.where.map(w =>
-      rewriteScalarSubs(w, corrToSub, { s2 =>
-        val (tn, aggDf, join, repl) = scalarJoin(s2, sub0,
-          nestedJoins.size, namePrefix = "__graft_nsc")
-        nestedJoins :+= ((tn, aggDf, join.on))
-        repl
-      })))
-    // r12: one level OUTWARD — a scalar correlated to the ENCLOSING
-    // query's scope joins its aggregated frame onto the OUTER side of
-    // the semi/anti join; the replacement field then rides the join
-    // condition as an outer reference (ANSI NULL semantics fall out
-    // of the left join: an empty correlated group leaves the scalar
-    // NULL, the comparison NULL, the row unmatched), and the hidden
-    // columns are dropped after the left-side-only semi/anti join so
-    // the outer schema is restored. Scalars correlated to a scope
-    // past the enclosing query, or mixing scopes, still reject below.
-    var outerJoins = Vector.empty[(String, DataFrame, Expr)]
-    def corrToOuter(s2: SelectStmt): Boolean =
-      try isCorrelatedSub(s2, outerSel)
-      catch { case _: Engine.UnknownColumn => false }
-    val sub = subA.copy(where = subA.where.map(w =>
-      rewriteScalarSubs(w, corrToOuter, { s2 =>
-        val (tn, aggDf, join, repl) = scalarJoin(s2, outerSel,
-          outerJoins.size, namePrefix = "__graft_osc")
-        outerJoins :+= ((tn, aggDf, join.on))
-        repl
-      })))
-    val outerSel2 =
-      if (outerJoins.isEmpty) outerSel
-      else outerSel.copy(ansiJoins = outerSel.ansiJoins ++
-        outerJoins.map { case (tn, _, on) =>
-          AnsiJoin(tn, None, "left", on, generated = true) })
-    val dfOut = outerJoins.foldLeft(df) { case (f, (tn, aggDf, on)) =>
-      f.join(aggDf.as(tn), ExprBuilder.build(on, outerCtx), "left") }
-    // r13 (verdict task 1): [NOT] IN/EXISTS conjuncts NESTED inside
-    // the correlated subquery — TPC-H q20's IN-inside-IN shape. Each
-    // is peeled off the subquery's WHERE and applied to the INNER
-    // scan as its own semi/anti join: uncorrelated ones exactly like
-    // the top-level path, ones correlated to the subquery's own scope
-    // via one more recursive desugar level. Never a re-execution per
-    // outer row. A nested subquery reaching the OUTERMOST scope would
-    // need correlation threading through two join levels — still
-    // rejected by name below.
-    val subConjAll = sub.where.map(conjuncts).getOrElse(Seq.empty).map {
-      case UnOp("not", ExistsSel(s2, n)) => ExistsSel(s2, !n)
-      case other => other
-    }
-    val (nestedSubPreds, plainConj) = subConjAll.partition(e =>
-      e.isInstanceOf[InSelect] || e.isInstanceOf[ExistsSel])
-    val sub2 =
-      if (nestedSubPreds.isEmpty) sub
-      else sub.copy(where = plainConj.reduceOption(BinOp("and", _, _)))
-    val sc = new CorrScope(sub2, outerSel2,
-      extraInner = nestedJoins.map(_._1.toLowerCase).toSet)
+    val hoisted = mutable.ArrayBuffer.empty[(String, Column)]
+    val sub = sub0.copy(where = sub0.where.map(rewriteExpr(_) {
+      case ScalarSelect(s2)
+          if !correlates(s2, sub0) && correlates(s2, outerSel) =>
+        val sq = scalarSubquery(s2, outerSel, ctx, inHaving = false)
+        val name = s"__graft_osc${hoisted.size}"
+        hoisted += name -> sq.col
+        OuterRef(Field(name), sq.typ)
+    }))
+    val sc = new CorrScope(sub, outerSel)
     sc.requirePlainShape("correlated subquery")
-    val (corr, local) = sc.splitWhere()
-    val mergedCtx: ExprBuilder.Ctx = outerCtx ++ sc.innerCtxQualified
-    val innerBase =
-      if (nestedJoins.isEmpty) None
-      else Some(nestedJoins.foldLeft(sc.innerScan) {
-        case (f, (tn, aggDf, on)) =>
-          f.join(aggDf.as(tn), ExprBuilder.build(on, sc.innerCtx), "left")
-      })
-    val inner0 = sc.innerFrame(local, innerBase)
-    val inner = nestedSubPreds.foldLeft(inner0) { (f, pred) =>
-      val (probeN, subN) = pred match {
-        case InSelect(x, s2, _) => (Some(x), s2)
-        case ExistsSel(s2, _) => (None, s2)
-        case other => sys.error(s"unreachable sub-predicate $other")
-      }
-      // deep scan (advice finding): qualified AND unqualified refs,
-      // recursing into still-deeper subqueries — an unqualified
-      // outermost-scope column, or one buried a level further down,
-      // must hit the named rejection here, not die later as a
-      // misleading unknown-column error. A name is an outermost
-      // reference when no scope between it and the outermost query
-      // (the nested sub's own tables, any deeper sub's tables, or
-      // the enclosing correlated sub's tables) resolves it but the
-      // outermost query's tables do.
-      val nestedAliases = deepAliases(subN)
-      val nestedCols = deepCols(subN)
-      lazy val outermostCols: Set[String] =
-        (outerSel2.from.toSeq ++ outerSel2.joins.map(_.typeName) ++
-          outerSel2.ansiJoins.filterNot(_.generated).map(_.table))
-          .flatMap(t => tryColsOf(t).getOrElse(Set.empty)).toSet
-      val reachesOutermost =
-        (subN.where.toSeq.flatMap(deepFields) ++
-          probeN.toSeq.flatMap(deepFields))
-          .exists(f => f.qualifier match {
-            case Some(q) =>
-              val ql = q.toLowerCase
-              !nestedAliases(ql) && sc.outers(ql)
-            case None =>
-              val n = f.name.toLowerCase
-              !nestedCols(n) && !sc.innerCols(n) && outermostCols(n)
-          })
-      if (reachesOutermost)
-        throw new IllegalArgumentException(
-          "a subquery nested inside a correlated subquery may " +
-            "correlate to that subquery's own scope or be " +
-            "uncorrelated; correlating past it to the outermost " +
-            "query is not supported")
-      applySubPred(f, pred, sub2, sc.innerCtx)
+    val conj = sub.where.map(conjuncts).getOrElse(Seq.empty)
+    sc.checkScopes(conj)
+    conj.foreach {
+      case InSelect(x, s2, _) => rejectOutermost(Some(x), s2, sc, outerSel)
+      case ExistsSel(s2, _) => rejectOutermost(None, s2, sc, outerSel)
+      case UnOp("not", ExistsSel(s2, _)) =>
+        rejectOutermost(None, s2, sc, outerSel)
+      case _ =>
     }
-    val probeCond = probe.map { x =>
-      val item = sub.items match {
-        case Seq(it) if !it.expr.isInstanceOf[Star] => it.expr
-        case _ => throw new IllegalArgumentException(
-          "IN subquery must return exactly one column")
-      }
-      val p = sc.qualify(x, preferInner = false)
-      val it = sc.qualify(item, preferInner = true)
-      val eq: Expr = BinOp("=", p, it)
-      if (neg) // ANSI 3VL blanking (see Scaladoc)
-        BinOp("or", BinOp("or", eq, IsNull(p, negated = false)),
-          IsNull(it, negated = false))
-      else eq
-    }
-    val cond = (probeCond.toSeq ++
-        corr.map(sc.qualify(_, preferInner = true)))
-      .reduceOption(BinOp("and", _, _))
-      .map(c => ExprBuilder.build(c, mergedCtx))
-      .getOrElse(lit(true))
-    val joined =
-      dfOut.join(inner, cond, if (neg) "left_anti" else "left_semi")
-    // drop the outer-joined scalar frames' hidden columns — the
-    // semi/anti join keeps only left-side columns, so this restores
-    // the caller's outer schema exactly
-    outerJoins.foldLeft(joined) { case (f, (tn, aggDf, _)) =>
-      aggDf.columns.foldLeft(f)((g, c) => g.drop(col(s"$tn.$c")))
-    }
+    if (probe.isDefined &&
+        (sub.items.size != 1 || sub.items.head.expr.isInstanceOf[Star]))
+      throw new IllegalArgumentException(
+        "IN subquery must return exactly one column")
+    // EXISTS reads no column of the subquery: select a constant
+    val built = buildSelectNoLimit(sub.copy(distinct = false,
+      items = if (probe.isDefined) sub.items
+              else Seq(SelectItem(Lit(1L, "uint"), None)),
+      where = sub.where.map(sc.markOuter(_, ctx))))
+    val cond = probe.fold(built.exists())(x =>
+      ExprBuilder.build(x, ctx).isin(built))
+    val filtered = hoisted.foldLeft(df) { case (d, (n, c)) =>
+      d.withColumn(n, c) }.filter(if (neg) !cond else cond)
+    if (hoisted.isEmpty) filtered
+    else filtered.drop(hoisted.map(_._1).toSeq: _*)
   }
 
-  /** Desugar ONE correlated scalar-aggregate subquery —
-    * `(SELECT agg(x) FROM t WHERE t.k = outer.k [AND local])` in a
-    * select item or WHERE comparison — into an aggregated LEFT join:
-    * the inner groups ONCE by its correlation keys (map-side combined
-    * at any scale), the outer left-joins on those keys, and the
-    * subquery node is replaced by a reference to the joined column
-    * (coalesced to 0 for count, per ANSI empty-group semantics;
-    * other aggregates stay NULL on no-match). Never a per-outer-row
-    * re-execution. Correlation conjuncts must be equalities with one
-    * operand per scope. Returns (bindName, aggregated frame, LEFT
-    * AnsiJoin, replacement expr). */
-  private def scalarJoin(sub: SelectStmt, outerSel: SelectStmt,
-      idx: Int, inHaving: Boolean = false,
-      namePrefix: String = "__graft_sc")
-      : (String, DataFrame, AnsiJoin, Expr) = {
+  /** Reject a subquery nested in a correlated one (`sc`) that refers
+    * to `outermost` — two scopes up, which Catalyst cannot resolve. A
+    * name is such a reference when no scope between it and
+    * `outermost` has it but `outermost`'s tables do; the scan is deep,
+    * so a reference buried further down is named here too. */
+  private def rejectOutermost(probe: Option[Expr], nested: SelectStmt,
+      sc: CorrScope, outermost: SelectStmt): Unit = {
+    val nestedAliases = deepAliases(nested)
+    val nestedCols = deepCols(nested)
+    lazy val outermostCols: Set[String] =
+      (outermost.from.toSeq ++ outermost.joins.map(_.typeName) ++
+        outermost.ansiJoins.map(_.table))
+        .flatMap(t => tryColsOf(t).getOrElse(Set.empty)).toSet
+    val reaches =
+      (nested.where.toSeq.flatMap(deepFields) ++
+        probe.toSeq.flatMap(deepFields)).exists(f => f.qualifier match {
+        case Some(q) =>
+          val ql = q.toLowerCase
+          !nestedAliases(ql) && sc.outers(ql)
+        case None =>
+          val n = f.name.toLowerCase
+          !nestedCols(n) && !sc.innerCols(n) && outermostCols(n)
+      })
+    if (reaches)
+      throw new IllegalArgumentException(
+        "a subquery nested inside a correlated subquery may " +
+          "correlate to that subquery's own scope or be " +
+          "uncorrelated; correlating past it to the outermost " +
+          "query is not supported")
+  }
+
+  /** Compile one correlated scalar-aggregate subquery of `outerSel` —
+    * `(SELECT agg(x) FROM t WHERE t.k = outer.k [AND local])` — to a
+    * Catalyst scalar subquery, which Catalyst decorrelates into an
+    * aggregated LEFT join (count is 0 on an empty group, the others
+    * NULL). The dialect's shape: one count/sum/min/max/avg, optionally
+    * wrapped in arithmetic over constants (TPC-H q17's
+    * `0.2 * avg(l_quantity)`); correlation conjuncts that are
+    * equalities with one operand per scope; a GROUP BY only of
+    * correlation keys, which is then dropped (it groups nothing the
+    * correlation does not); and in HAVING, correlation anchored on
+    * GROUP BY columns. */
+  private def scalarSubquery(sub: SelectStmt, outerSel: SelectStmt,
+      outerCtx: ExprBuilder.Ctx, inHaving: Boolean): Compiled = {
     val sc = new CorrScope(sub, outerSel)
     sc.requirePlainShape("correlated scalar subquery",
       allowGroupBy = true)
-    val aggFns = Set("count", "sum", "min", "max", "avg", "average")
-    val item0 = sub.items match {
+    val item = sub.items match {
       case Seq(it) => it.expr
       case _ => throw new IllegalArgumentException(
         "scalar subquery must return one column")
     }
-    // The item may wrap the aggregate in arithmetic over constants —
-    // TPC-H q17/q20's `0.2 * avg(l_quantity)` (r13). Exactly one
-    // aggregate call; the wrapper is re-applied to the joined column
-    // at the OUTER level, so empty-group semantics (count → 0 via
-    // coalesce, others NULL) stay ANSI-exact under the wrapper.
-    def findAggs(e: Expr): Seq[FnCall] = e match {
-      case f @ FnCall(n, _) if aggFns(n.toLowerCase) => Seq(f)
-      case BinOp(_, l, r) => findAggs(l) ++ findAggs(r)
-      case UnOp(_, x) => findAggs(x)
-      case FnCall(_, args) => args.flatMap(findAggs)
-      case CaseExpr(bs, o) =>
-        bs.flatMap(b => findAggs(b._1) ++ findAggs(b._2)) ++
-          o.toSeq.flatMap(findAggs)
-      case _ => Seq.empty
+    val aggFns = Set("count", "sum", "min", "max", "avg", "average")
+    def isAggCall(e: Expr): Boolean = e match {
+      case FnCall(n, _) => aggFns(n.toLowerCase)
+      case _ => false
     }
-    val aggs = findAggs(item0)
-    if (aggs.size != 1)
+    def aggsOf(e: Expr): Seq[Expr] =
+      if (isAggCall(e)) Seq(e) else children(e).flatMap(aggsOf)
+    def fieldsOutsideAgg(e: Expr): Seq[Field] = e match {
+      case f: Field => Seq(f)
+      case _ if isAggCall(e) => Nil
+      case _ => children(e).flatMap(fieldsOutsideAgg)
+    }
+    if (aggsOf(item).size != 1)
       throw new IllegalArgumentException(
         "correlated scalar subquery must SELECT a single aggregate " +
           "(count/sum/min/max/avg), optionally wrapped in arithmetic " +
           "over constants")
-    val aggNode = aggs.head
-    def replaceAgg(e: Expr, withE: Expr): Expr = e match {
-      case f: FnCall if f eq aggNode => withE
-      case BinOp(o, l, r) =>
-        BinOp(o, replaceAgg(l, withE), replaceAgg(r, withE))
-      case UnOp(o, x) => UnOp(o, replaceAgg(x, withE))
-      case FnCall(n, args) => FnCall(n, args.map(replaceAgg(_, withE)))
-      case CaseExpr(bs, o) => CaseExpr(
-        bs.map(b => (replaceAgg(b._1, withE), replaceAgg(b._2, withE))),
-        o.map(replaceAgg(_, withE)))
-      case other => other
-    }
-    if (fieldsOf(replaceAgg(item0, Lit(0L, "uint"))).nonEmpty)
+    if (fieldsOutsideAgg(item).nonEmpty)
       throw new IllegalArgumentException(
         "the expression around a correlated scalar subquery's " +
           "aggregate may only use constants")
-    val (aggName, aggArgs) = (aggNode.name.toLowerCase, aggNode.args)
-    val (corr, local) = sc.splitWhere()
-    val keys = corr.map {
+    val conj = sub.where.map(conjuncts).getOrElse(Seq.empty)
+    if (conj.exists(c => containsInSelect(c) || containsScalarSelect(c)))
+      throw new IllegalArgumentException(
+        "nested subqueries inside a correlated scalar subquery are " +
+          "not supported")
+    sc.checkScopes(conj)
+    val keys = conj.filter(c => fieldsOf(c).exists(sc.isOuter)).map {
       case BinOp("=", a, b) =>
         val aOut = fieldsOf(a).exists(sc.isOuter)
         val bOut = fieldsOf(b).exists(sc.isOuter)
@@ -2763,10 +2496,8 @@ class Engine(val spark: SparkSession, root: String,
       case _ => throw new IllegalArgumentException(
         "scalar-subquery correlation conjuncts must be equalities")
     }
-    // inside HAVING the joined scalar column is referenced from
-    // within the aggregation, where only grouping columns are legal
-    // correlation anchors (ANSI; DuckDB enforces the same) — validate
-    // so the failure names the rule instead of a resolver error
+    // in HAVING only grouping columns are legal correlation anchors
+    // (ANSI; DuckDB enforces the same)
     if (inHaving) {
       val groupNames = outerSel.groupBy.collect {
         case f: Field => f.name.toLowerCase }.toSet
@@ -2779,11 +2510,8 @@ class Engine(val spark: SparkSession, root: String,
               s"columns (not ${bad.map(_.name).mkString(", ")})")
       }
     }
-    // GROUP BY inside the scalar (r13, verdict task 5): legal exactly
-    // when it groups by correlation-key columns — the aggregated
-    // frame already groups by them, so the clause is declarative
-    // confirmation, not a plan change. Any other key set could yield
-    // more than one row per outer row, which a scalar cannot be.
+    // any other GROUP BY could yield more than one row per outer row,
+    // which a scalar cannot be
     if (sub.groupBy.nonEmpty) {
       val keyFields: Set[String] = keys.flatMap { case (inn, _) =>
         fieldsOf(inn).map(_.name.toLowerCase) }.toSet
@@ -2799,100 +2527,43 @@ class Engine(val spark: SparkSession, root: String,
               case e => e.toString
             }.mkString(", ") + ")")
     }
-    val tn = s"$namePrefix$idx"
-    def innerCol(e: Expr): Column =
-      ExprBuilder.build(sc.qualify(e, preferInner = true), sc.innerCtx)
-    def arg0: Expr = aggArgs.headOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"aggregate $aggName requires one argument"))
-    val aggCol = aggName match {
-      case "count" => aggArgs.headOption match {
-        case None | Some(Star()) => count(lit(1))
-        case Some(a) => count(innerCol(a))
-      }
-      case "sum" => sum(innerCol(arg0))
-      case "min" => min(innerCol(arg0))
-      case "max" => max(innerCol(arg0))
-      case _ => avg(innerCol(arg0))
+    // ANSI empty-group semantics: avg is NULL over no rows, where the
+    // dialect's own avg is 0
+    val ansiItem = rewriteExpr(item) {
+      case FnCall(n, Seq(x)) if n.equalsIgnoreCase("avg") ||
+          n.equalsIgnoreCase("average") =>
+        Compiled(avg(ExprBuilder.build(x, sc.innerCtx)), Some("float"))
     }
-    val keyCols = keys.zipWithIndex.map { case ((inn, _), i) =>
-      innerCol(inn).as(s"__graft_k$i") }
-    val aggDf = sc.innerFrame(local)
-      .groupBy(keyCols: _*).agg(aggCol.as("__graft_v"))
-    val onExpr = keys.zipWithIndex.map { case ((_, out), i) =>
-      BinOp("=", sc.qualify(out, preferInner = false),
-        Field(s"__graft_k$i", Some(tn))): Expr }
-      .reduce(BinOp("and", _, _))
-    val ref: Expr = Field("__graft_v", Some(tn))
-    // In HAVING the reference must itself be an aggregate: the joined
-    // value is constant per group (correlation on group keys, checked
-    // above), so min() IS the value — and min(coalesce(v, 0)) equals
-    // ANSI's COALESCE(count, 0) on empty groups. The constant wrapper
-    // (if any) re-applies OUTSIDE: wrapper(min(v)) == min(wrapper(v))
-    // is irrelevant — the value is per-group constant, and constants
-    // around an aggregate are legal HAVING expressions.
-    val refC: Expr =
-      if (aggName == "count")
-        FnCall("coalesce", Seq(ref, Lit(0L, "uint")))
-      else ref
-    val repl = replaceAgg(item0,
-      if (inHaving) FnCall("min", Seq(refC)) else refC)
-    (tn, aggDf, AnsiJoin(tn, None, "left", onExpr, generated = true),
-      repl)
-  }
-
-  /** Rewrite every correlated scalar subquery in the select items and
-    * WHERE into its aggregated-left-join form; returns the rewritten
-    * statement plus the transient table bindings for the generated
-    * aggregate frames. */
-  private def desugarScalarJoins(sel: SelectStmt)
-      : (SelectStmt, Map[String, DataFrame]) = {
-    var binds = Map.empty[String, DataFrame]
-    var joins = Vector.empty[AnsiJoin]
-    // UnknownColumn from the classification propagates — the precise
-    // typo'd-column error beats any downstream resolver failure
-    def rw(e: Expr, inHaving: Boolean): Expr =
-      rewriteScalarSubs(e, s2 => isCorrelatedSub(s2, sel), { s2 =>
-        val (tn, df, join, repl) =
-          scalarJoin(s2, sel, binds.size, inHaving)
-        binds += tn -> df; joins :+= join; repl
-      })
-    if (sel.from.isEmpty) (sel, binds)
-    else {
-      val items2 = sel.items.map(it =>
-        it.copy(expr = rw(it.expr, inHaving = false)))
-      val where2 = sel.where.map(rw(_, inHaving = false))
-      // HAVING evaluates inside the aggregation, so the joined scalar
-      // column is re-referenced through an aggregate there (min of a
-      // per-group constant — scalarJoin validates the correlation
-      // anchors are GROUP BY columns and wraps the replacement)
-      val having2 = sel.having.map(rw(_, inHaving = true))
-      (sel.copy(items = items2, where = where2, having = having2,
-        ansiJoins = sel.ansiJoins ++ joins), binds)
-    }
+    val built = buildSelectNoLimit(sub.copy(
+      items = Seq(SelectItem(ansiItem, None)), groupBy = Seq.empty,
+      distinct = false, where = sub.where.map(sc.markOuter(_, outerCtx))))
+    Compiled(built.scalar(), ExprBuilder.timeKind(item, sc.innerCtx)
+      .orElse(ExprBuilder.numKind(item, sc.innerCtx)))
   }
 
   private def buildSelectNoLimit(sel00: SelectStmt): DataFrame = {
     // Scalar subqueries first: uncorrelated ones are evaluated once
-    // and inlined as literals; correlated ones desugar to aggregated
-    // LEFT joins bound as transient tables — every later pass (stamp
-    // rewrite, ctx typing, agg split) then sees a plain expression
-    // tree over ordinary joined columns.
+    // and inlined as literals (stampPeriod prunes days on them);
+    // correlated ones compile to Catalyst scalar subqueries. Later
+    // passes then see a plain expression tree.
     val sel0 = sel00.copy(
       items = sel00.items.map(it =>
         it.copy(expr = substScalars(it.expr, Seq(sel00)))),
       where = sel00.where.map(substScalars(_, Seq(sel00))),
       having = sel00.having.map(substScalars(_, Seq(sel00))))
-    val (sel1, binds) = desugarScalarJoins(sel0)
-    if (binds.isEmpty) buildSelectCore(sel1)
-    else {
-      // the generated frames only need to resolve during plan
-      // CONSTRUCTION (Datasets analyze eagerly), so the bindings are
-      // scoped to this build and restored after
-      val saved = cteBindings.get
-      try { cteBindings.set(saved ++ binds); buildSelectCore(sel1) }
-      finally cteBindings.set(saved)
+    if (sel0.from.isEmpty) return buildSelectCore(sel0)
+    lazy val ctx = selectCtx(sel0)
+    // UnknownColumn from the classification propagates — the precise
+    // typo'd-column error beats any downstream resolver failure
+    def compile(e: Expr, inHaving: Boolean): Expr = rewriteExpr(e) {
+      case ScalarSelect(s2) if isCorrelatedSub(s2, sel0) =>
+        scalarSubquery(s2, sel0, ctx, inHaving)
     }
+    buildSelectCore(sel0.copy(
+      items = sel0.items.map(it =>
+        it.copy(expr = compile(it.expr, inHaving = false))),
+      where = sel0.where.map(compile(_, inHaving = false)),
+      having = sel0.having.map(compile(_, inHaving = true))))
   }
 
   private def buildSelectCore(sel0: SelectStmt): DataFrame = {
@@ -3012,10 +2683,9 @@ class Engine(val spark: SparkSession, root: String,
     // [NOT] IN (SELECT …) and [NOT] EXISTS (SELECT …): peel the
     // top-level AND conjuncts; each plans as a left-semi/left-anti
     // join (the 100 TB shape — both sides shuffle on the key, nothing
-    // collects, NEVER a per-row re-execution). Correlated forms
-    // desugar their correlation conjuncts into the join condition.
-    // Anywhere deeper in the boolean tree it cannot be a join, so
-    // reject with a clear message.
+    // collects, NEVER a per-row re-execution), correlated forms
+    // through Catalyst's decorrelation. The dialect allows them
+    // nowhere deeper in the boolean tree: reject with a clear message.
     val allConj = sel.where.map(conjuncts).getOrElse(Seq.empty).map {
       // NOT EXISTS parses as UnOp over the predicate — normalize so
       // it partitions as a sub-predicate conjunct
@@ -3028,7 +2698,19 @@ class Engine(val spark: SparkSession, root: String,
       throw new IllegalArgumentException(
         "IN/EXISTS (SELECT ...) must be a top-level AND conjunct of WHERE")
     subPreds.foreach { p => df = applySubPred(df, p, sel, ctx) }
+    // A correlated scalar in WHERE is evaluated as a hidden column
+    // that the filter reads (no projection below keeps it): Spark
+    // 4.1.2 fails at run time (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) when
+    // a conjunct holding a scalar subquery inline and an outer
+    // reference is pulled out of an EXISTS/IN subquery.
+    var hidden = 0
     val residualWhere = residualConj.reduceOption(BinOp("and", _, _))
+      .map(rewriteExpr(_) { case Compiled(c, typ) =>
+        val name = s"__graft_sc$hidden"
+        hidden += 1
+        df = df.withColumn(name, c)
+        Compiled(col(name), typ)
+      })
     val where = residualWhere.map(w => ExprBuilder.build(w, ctx))
     val filtered = where.fold(df)(df.filter)
 
@@ -3043,16 +2725,8 @@ class Engine(val spark: SparkSession, root: String,
         val vAlias = j.alias.getOrElse(j.typeName)
         scope.types(j.typeName).props.map(p => col(s"$vAlias.${p.name}"))
       } ++ sel.ansiJoins.flatMap { aj =>
-        // the hidden joins desugarScalarJoins appends carry internal
-        // __graft_k*/__graft_v columns — SELECT * must not leak them.
-        // Keyed off the explicit `generated` flag, not the table-name
-        // prefix: a user table that happened to be named __graft_sc*
-        // must keep its columns (review finding).
-        if (aj.generated) Seq.empty
-        else {
-          val aAlias = aj.alias.getOrElse(aj.table)
-          tableColumns(aj.table).map(c => col(s"$aAlias.$c"))
-        }
+        val aAlias = aj.alias.getOrElse(aj.table)
+        tableColumns(aj.table).map(c => col(s"$aAlias.$c"))
       }
     }
 
@@ -3081,7 +2755,7 @@ class Engine(val spark: SparkSession, root: String,
         tryColsOf(fromName).getOrElse(Set.empty) ++ ts ++
           sel.joins.flatMap(j =>
             scope.types(j.typeName).props.map(_.name.toLowerCase)) ++
-          sel.ansiJoins.filterNot(_.generated)
+          sel.ansiJoins
             .flatMap(aj => tryColsOf(aj.table).getOrElse(Set.empty))
       }
       val keySpecs: Seq[(Expr, String)] =
@@ -3147,7 +2821,19 @@ class Engine(val spark: SparkSession, root: String,
       // aggregation as a hidden boolean column; key-only predicates
       // filter the projected output.
       val havingRes = sel.having.map(substAliases(_, aliasMap))
-      val (aggHaving, keyHaving) = havingRes match {
+      // A HAVING holding a correlated scalar filters the aggregated
+      // rows instead, as Spark SQL plans it: Catalyst cannot evaluate
+      // the scalar inside the aggregation, and its outer references
+      // name GROUP BY keys, which those rows carry. Each aggregate call
+      // in it becomes a hidden column of the aggregation.
+      val postAggs = mutable.ArrayBuffer.empty[Column]
+      val postHaving = havingRes.filter(hasSubquery).map(rewriteExpr(_) {
+        case f @ FnCall(n, _) if Parser.isAggregate(n) =>
+          val h = s"__graft_ha${postAggs.size}"
+          postAggs += buildWithAggs(f, ctx).as(h)
+          Field(h)
+      })
+      val (aggHaving, keyHaving) = havingRes.filterNot(hasSubquery) match {
         case Some(h) if containsAgg(h) => (Some(h), None)
         case other => (None, other)
       }
@@ -3157,7 +2843,8 @@ class Engine(val spark: SparkSession, root: String,
       // KRANGE keys-only fast path, plan.c:1635-1644) — unless an
       // aggregate HAVING forces a real aggregation anyway, and never
       // for ROLLUP/CUBE (their subtotal rows aren't a distinct set)
-      if (aggCols.isEmpty && hvCol.isEmpty && sel.groupMode == "plain") {
+      if (aggCols.isEmpty && hvCol.isEmpty && postHaving.isEmpty &&
+          sel.groupMode == "plain") {
         val d0 = filtered.select(keySpecs.map { case (e, n) =>
           ExprBuilder.build(e, ctx).as(n) }: _*).distinct()
         val d = keyHaving.fold(d0)(h => d0.filter(ExprBuilder.build(h)))
@@ -3173,7 +2860,7 @@ class Engine(val spark: SparkSession, root: String,
       // hidden count (dropped by the declared-item projection below)
       // so the legal dialect query returns the subtotal grid instead
       // of crashing on allAggs.head
-      val allAggs0 = aggCols ++ hvCol
+      val allAggs0 = aggCols ++ hvCol ++ postAggs
       val allAggs = if (allAggs0.nonEmpty) allAggs0
         else Seq(count(lit(1)).as("__graft_hidden_cnt"))
       val grouped =
@@ -3184,9 +2871,14 @@ class Engine(val spark: SparkSession, root: String,
             case _        => filtered.groupBy(keys: _*)
           }
           g.agg(allAggs.head, allAggs.tail: _*)
-        } else filtered.agg(allAggs.head, allAggs.tail: _*)
-      val groupedF = if (hvCol.isDefined)
+        // a global aggregate is a select of aggregates: `Dataset.agg`
+        // cannot resolve a frame carrying a correlated subquery's outer
+        // references
+        } else filtered.select(allAggs: _*)
+      val groupedH = if (hvCol.isDefined)
         grouped.filter(col("__graft_having")) else grouped
+      val groupedF = postHaving.fold(groupedH)(h =>
+        groupedH.filter(ExprBuilder.build(h, ctx)))
       // project in declared item order (keys keep their names)
       val outCols = sel.items.zipWithIndex.map { case (it, i) =>
         it.expr match {
@@ -3205,7 +2897,14 @@ class Engine(val spark: SparkSession, root: String,
             }
         }
       }
-      val out0 = groupedF.select(outCols: _*)
+      // a global aggregate of aggregates only already holds the declared
+      // columns in order. Projecting them again would make Catalyst
+      // decorrelate a correlated scalar through an extra join with the
+      // outer query's distinct keys.
+      val out0 =
+        if (keys.isEmpty && (groupedF eq grouped) &&
+            aggCols.size == sel.items.size) grouped
+        else groupedF.select(outCols: _*)
       val out = keyHaving.fold(out0)(h => out0.filter(ExprBuilder.build(h)))
       if (sel.orderBy.nonEmpty) out.orderBy(orderCols(sel.orderBy): _*)
       else out

@@ -584,12 +584,12 @@ object EngineQueries extends QueryPack {
     }),
     // Correlated subqueries through the engine dialect (superset —
     // r10 verdict task 6): EXISTS / NOT EXISTS / correlated IN, each
-    // desugared to ONE left-semi/left-anti join on the correlation
-    // conjuncts (Engine.correlatedSemiAnti) — never a per-row
-    // re-execution, so the shape survives any scale: both sides
-    // shuffle on l_orderkey/c_custkey, AQE broadcasts the small side.
-    // The DuckDB oracle runs the SAME ANSI text natively, so the
-    // desugaring's semantics are value-checked by the driver.
+    // decorrelated by Catalyst into ONE left-semi/left-anti join on
+    // the correlation conjuncts — never a per-row re-execution, so
+    // the shape survives any scale: both sides shuffle on
+    // l_orderkey/c_custkey, AQE broadcasts the small side. The DuckDB
+    // oracle runs the SAME ANSI text natively, so the semantics are
+    // value-checked by the driver.
     "q369_correlated_subquery" -> ((s, d) => {
       val eng = freshEngine(s)
       eng.script("create scope corrscope; use corrscope")
@@ -614,11 +614,11 @@ object EngineQueries extends QueryPack {
       }
     }),
     // Correlated SCALAR-aggregate subqueries through the dialect
-    // (r11, completing the correlated family): each desugars to one
-    // aggregated LEFT join — the inner groups ONCE by the correlation
-    // key (map-side combined), never a per-outer-row re-execution.
-    // count coalesces to 0 on no-match (ANSI empty-group), max stays
-    // NULL. DuckDB runs the same ANSI text natively.
+    // (r11, completing the correlated family): Catalyst decorrelates
+    // each into one aggregated LEFT join — the inner groups ONCE by
+    // the correlation key (map-side combined), never a per-outer-row
+    // re-execution. count is 0 on no-match (ANSI empty-group), max
+    // stays NULL. DuckDB runs the same ANSI text natively.
     "q370_correlated_scalar" -> ((s, d) => {
       val eng = freshEngine(s)
       eng.script("create scope cscscope; use cscscope")
@@ -639,9 +639,9 @@ object EngineQueries extends QueryPack {
       }
     }),
     // Correlated scalar aggregate in HAVING (r12, closing the r11
-    // limitation): the scalar desugars to the same aggregated LEFT
-    // join as the select-item form, anchored on the GROUP BY column,
-    // and re-enters the aggregation as min() of a per-group constant.
+    // limitation): the scalar is the same Catalyst scalar subquery
+    // as the select-item form, anchored on the GROUP BY column, and
+    // filters the aggregated rows.
     // Nations with more customers than suppliers; the empty-supplier
     // case exercises the NULL comparison (ANSI: filtered). DuckDB
     // runs the same ANSI text natively.
@@ -662,9 +662,9 @@ object EngineQueries extends QueryPack {
       }
     }),
     // Scalar aggregate correlated to the directly ENCLOSING subquery
-    // (r12): one more CorrScope nesting level — the scalar's
-    // aggregated frame left-joins onto the EXISTS subquery's scan,
-    // which then semi-joins the outer. Orders having a line at or
+    // (r12): the scalar is part of the EXISTS subquery's own build —
+    // Catalyst left-joins its aggregated frame onto the subquery's
+    // scan, which then semi-joins the outer. Orders having a line at or
     // below (order's own min quantity + 1), restricted to big orders
     // so the EXISTS does real filtering. min keeps every comparison
     // exact (no avg double divergence). DuckDB runs the same text.
@@ -691,12 +691,14 @@ object EngineQueries extends QueryPack {
     // scope (r12, closing the last named correlated-scalar
     // limitation): inside the EXISTS over lineitem, the bound scalar
     // `min(l2.l_quantity) ... where l2.l_orderkey = o.o_orderkey`
-    // anchors on the OUTER order, so its aggregated frame joins onto
-    // the OUTER side of the semi/anti join — never a per-row
+    // anchors on the OUTER order, so it is evaluated as a hidden
+    // column of the OUTER frame (Catalyst resolves outer references
+    // one scope up only) and its aggregated frame joins onto the
+    // OUTER side of the semi/anti join — never a per-row
     // re-execution. Both the EXISTS and NOT EXISTS legs run (semi
-    // and anti with the outer-joined scalar); orders with no lines
-    // leave the scalar NULL, the comparison NULL, the row unmatched —
-    // ANSI semantics from the left join, which DuckDB reproduces
+    // and anti with the outer scalar); orders with no lines leave the
+    // scalar NULL, the comparison NULL, the row unmatched — ANSI
+    // semantics from the left join, which DuckDB reproduces
     // natively on the same text.
     "q383_outer_scalar" -> ((s, d) => {
       val eng = freshEngine(s)

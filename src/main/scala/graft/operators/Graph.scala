@@ -234,6 +234,18 @@ object Graph {
     ranks
   }
 
+  /** Drop the blocks of frames a loop checkpointed or persisted, once
+    * its result is sealed and nothing reads them. `Dataset.unpersist`
+    * does not reach a localCheckpoint frame, which scans a persisted
+    * RDD rather than a cached plan, so that RDD is unpersisted itself,
+    * as the engine's recursion loop does. */
+  private def release(frames: Iterable[DataFrame]): Unit =
+    frames.foreach(f => f.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => f.unpersist(blocking = false)
+    })
+
   /** Multi-source BFS hop distances over an undirected edge list:
     * (v, dist) with dist = fewest hops from any seed, bounded by
     * `maxHops`. Frontier-at-a-time expansion — each round is one
@@ -248,7 +260,6 @@ object Graph {
   def bfsDistances(edges: DataFrame, src: String, dst: String,
                    seeds: DataFrame, seedCol: String,
                    maxHops: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // symmetrize by in-row explode (one evaluation of the edge
     // subtree), not unionAll-of-two-selects (two) — edge frames are
     // often expensive aggregates (co-occurrence graphs)
@@ -257,9 +268,9 @@ object Graph {
         struct(col(dst).as("u"), col(src).as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var visited = seeds.select(col(seedCol).as("v")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint()
+    val held = scala.collection.mutable.ArrayBuffer(sym, visited)
     var frontier = visited.select(col("v"))
     var hop = 1L
     var done = false
@@ -280,7 +291,7 @@ object Graph {
         .join(visited, Seq("v"), "left_anti")
         .withColumn("dist", lit(hop))
         .localCheckpoint(true)
-      roundCaches += next
+      held += next
       // the final hop folds in unconditionally — an emptiness probe
       // there is dead work (the loop exits either way). For SHORT
       // bounded walks (≤6 hops) skip the probe entirely: each probe
@@ -291,17 +302,19 @@ object Graph {
       if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
       else {
         val grown = visited.unionAll(next)
-        visited = if (hop % 4 == 0) grown.localCheckpoint() else grown
+        visited =
+          if (hop % 4 == 0) { val c = grown.localCheckpoint(); held += c; c }
+          else grown
         frontier = next.select(col("v"))
       }
       hop += 1
     }
     // seal: materialize the (vertex-count-sized) result once, then
-    // release every round cache — otherwise each call pins maxHops
-    // MEMORY_AND_DISK frames for the application lifetime (the
-    // long-lived wire Server would accumulate them indefinitely)
+    // release every frame the loop held — otherwise each call pins
+    // them for the application lifetime (the long-lived wire Server
+    // would accumulate them indefinitely)
     val out = visited.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    release(held)
     out
   }
 
@@ -318,16 +331,15 @@ object Graph {
   def bfsDistancesLabeled(edges: DataFrame, src: String, dst: String,
                           seeds: DataFrame, seedCol: String,
                           maxHops: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val sym = edges.select(explode(array(
         struct(col(src).as("u"), col(dst).as("v")),
         struct(col(dst).as("u"), col(src).as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var visited = seeds.select(col(seedCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("v"))
       .withColumn("dist", lit(0L)).localCheckpoint()
+    val held = scala.collection.mutable.ArrayBuffer(sym, visited)
     var frontier = visited.select(col("seed"), col("v"))
     var hop = 1L
     var done = false
@@ -338,18 +350,20 @@ object Graph {
         .join(visited, Seq("seed", "v"), "left_anti")
         .withColumn("dist", lit(hop))
         .localCheckpoint(true)
-      roundCaches += next
+      held += next
       // short-walk probe skip — same reasoning as bfsDistances
       if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
       else {
         val grown = visited.unionAll(next)
-        visited = if (hop % 4 == 0) grown.localCheckpoint() else grown
+        visited =
+          if (hop % 4 == 0) { val c = grown.localCheckpoint(); held += c; c }
+          else grown
         frontier = next.select(col("seed"), col("v"))
       }
       hop += 1
     }
     val out = visited.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    release(held)
     out
   }
 
@@ -374,9 +388,9 @@ object Graph {
         .as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"), col("p.w").as("w"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var dist = seeds.select(col(seedCol).as("v")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint()
+    val held = scala.collection.mutable.ArrayBuffer(sym, dist)
     var frontier = dist
     var hop = 1
     var done = false
@@ -388,7 +402,7 @@ object Graph {
       val next = dist.unionAll(relax)
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))
         .localCheckpoint(true)
-      roundCaches += next
+      held += next
       if (hop == maxHops) {
         // last round: the result is `next` regardless — computing the
         // improved set would be a pure-overhead join + action
@@ -401,7 +415,7 @@ object Graph {
           .filter(col("old").isNull || col("dist") < col("old"))
           .select(col("v"), col("dist"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        roundCaches += improved
+        held += improved
         // short-walk probe skip — same reasoning as bfsDistances: an
         // undetected-converged frontier only adds no-op relax rounds
         // (min-fold of an empty relax set is `dist` unchanged)
@@ -413,9 +427,9 @@ object Graph {
       }
       hop += 1
     }
-    // seal + release round caches (same lifecycle as bfsDistances)
+    // seal + release (same lifecycle as bfsDistances)
     val out = dist.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    release(held)
     out
   }
 

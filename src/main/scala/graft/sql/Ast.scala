@@ -1,5 +1,7 @@
 package graft.sql
 
+import org.apache.spark.sql.Column
+
 /** AST for the NoWDB SQL dialect (grammar surface:
   * /root/reference/src/nowdb/sql/nowdbsql.y; statement inventory
   * SURVEY.md §2.11). Deliberately small — statements compile to
@@ -12,25 +14,30 @@ object Ast {
   /** typ ∈ uint|int|float|string|bool|null (NoWDB literal typing:
     * bare digits are UINT, signed are INT — sql.tex:190-205). */
   case class Lit(value: Any, typ: String) extends Expr
-  /** `x [NOT] IN (SELECT …)` — uncorrelated single-column subquery
-    * membership (superset). Planned as a left-semi / left-anti join;
-    * legal only as a top-level AND conjunct of WHERE. NOT IN is
-    * anti-join semantics (a NULL in the subquery does not blank the
-    * result — documented deviation from ANSI's three-valued NOT IN). */
+  /** `x [NOT] IN (SELECT …)` — subquery membership (superset), with
+    * ANSI three-valued NOT IN; legal only as a top-level AND conjunct
+    * of WHERE. Uncorrelated, it plans as a keyed left-semi/left-anti
+    * join; correlated, Catalyst decorrelates it. */
   case class InSelect(x: Expr, sel: SelectStmt, neg: Boolean)
       extends Expr
-  /** `(SELECT …)` in expression position — uncorrelated scalar
-    * subquery (superset): must yield exactly one row and one column;
-    * evaluated once per statement and inlined as a literal. */
+  /** `(SELECT …)` in expression position (superset). Uncorrelated, it
+    * must yield exactly one row and one column, and is evaluated once
+    * per statement and inlined as a literal; correlated, it must
+    * select one aggregate and reaches Catalyst as a scalar subquery. */
   case class ScalarSelect(sel: SelectStmt) extends Expr
   /** `[NOT] EXISTS (SELECT …)` — correlated or uncorrelated
-    * (superset). Desugared to a left-semi / left-anti JOIN on the
-    * subquery's correlation conjuncts (never a per-row re-execution);
-    * the subquery must be a plain FROM … WHERE shape, and the
-    * predicate is legal only as a top-level AND conjunct of WHERE.
-    * Correlated `x [NOT] IN (SELECT …)` rides [[InSelect]] and is
-    * desugared the same way with the probe equality added. */
+    * (superset); legal only as a top-level AND conjunct of WHERE, over
+    * a plain FROM … WHERE subquery. Catalyst decorrelates it into a
+    * left-semi/left-anti join, never a per-row re-execution. */
   case class ExistsSel(sel: SelectStmt, neg: Boolean) extends Expr
+  /** A field of an enclosing query referenced from inside a correlated
+    * subquery, with its NoWDB type (the enclosing scope's, since the
+    * subquery's own typing cannot see it). */
+  case class OuterRef(field: Field, typ: Option[String]) extends Expr
+  /** An expression the engine has compiled to a Spark column itself
+    * (a correlated scalar subquery, or an aggregate with ANSI rather
+    * than dialect semantics), with the NoWDB type of its result. */
+  case class Compiled(col: Column, typ: Option[String]) extends Expr
   /** Window frame spec `ROWS|RANGE [BETWEEN a AND b]` (r12 verdict
     * task 2). Bounds are offsets relative to the current row
     * (`k PRECEDING` = -k, `CURRENT ROW` = 0, `k FOLLOWING` = +k);
@@ -59,6 +66,36 @@ object Ast {
                       otherwise: Option[Expr]) extends Expr
 
   case class SelectItem(expr: Expr, alias: Option[String])
+
+  /** The direct sub-expressions of `e`. Subqueries and window
+    * functions are not entered: they open a scope of their own. */
+  def children(e: Expr): Seq[Expr] = e match {
+    case BinOp(_, l, r) => Seq(l, r)
+    case UnOp(_, x) => Seq(x)
+    case InList(x, vs, _) => x +: vs
+    case IsNull(x, _) => Seq(x)
+    case CaseExpr(bs, o) => bs.flatMap(b => Seq(b._1, b._2)) ++ o
+    case FnCall(_, args) => args
+    case _ => Nil
+  }
+
+  /** Rewrite `e` top-down: `pf` replaces the nodes it is defined at,
+    * and every other node is rebuilt over its rewritten
+    * [[children]]. */
+  def rewriteExpr(e: Expr)(pf: PartialFunction[Expr, Expr]): Expr =
+    pf.applyOrElse(e, (x: Expr) => {
+      def t(y: Expr): Expr = rewriteExpr(y)(pf)
+      x match {
+        case BinOp(o, l, r) => BinOp(o, t(l), t(r))
+        case UnOp(o, y) => UnOp(o, t(y))
+        case InList(y, vs, n) => InList(t(y), vs.map(t), n)
+        case IsNull(y, n) => IsNull(t(y), n)
+        case CaseExpr(bs, o) =>
+          CaseExpr(bs.map(b => (t(b._1), t(b._2))), o.map(t))
+        case FnCall(n, args) => FnCall(n, args.map(t))
+        case other => other
+      }
+    })
 
   // ── statements ─────────────────────────────────────────────────────
   sealed trait Statement
@@ -186,14 +223,8 @@ object Ast {
     * edge-join): `[INNER|LEFT|RIGHT|FULL [OUTER]] JOIN t [alias] ON
     * <expr>`. Edge joins apply first, then ANSI joins in declared
     * order. */
-  /** `generated` marks joins the engine itself appends while
-    * desugaring correlated scalar subqueries — SELECT * must skip
-    * their internal columns, and keying that off the name prefix
-    * would silently drop columns of a user table that happened to
-    * share it (review finding). */
   case class AnsiJoin(table: String, alias: Option[String],
-                      kind: String, on: Expr,
-                      generated: Boolean = false)
+                      kind: String, on: Expr)
   case class SelectStmt(items: Seq[SelectItem], from: Option[String],
                         fromAlias: Option[String],
                         joins: Seq[JoinClause], where: Option[Expr],

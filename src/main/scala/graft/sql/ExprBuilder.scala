@@ -48,18 +48,28 @@ object ExprBuilder {
       case None => col(f.name)
     }
 
-  private def isTimeField(f: Field, ctx: Ctx): Boolean =
-    ctx.get(fieldKey(f)).orElse(ctx.get(f.name.toLowerCase))
-      .exists(t => t == "time" || t == "date")
+  /** The NoWDB type of a field, an outer reference or a compiled
+    * subquery: looked up in `ctx` for a field, carried by the node for
+    * the other two. None for any other expression. */
+  private[graft] def declaredType(e: Expr, ctx: Ctx): Option[String] =
+    e match {
+      case f: Field => ctx.get(fieldKey(f)).orElse(ctx.get(f.name.toLowerCase))
+      case OuterRef(_, t) => t
+      case Compiled(_, t) => t
+      case _ => None
+    }
+
+  private def isTimeField(e: Expr, ctx: Ctx): Boolean =
+    declaredType(e, ctx).exists(t => t == "time" || t == "date")
 
   /** Coerce a literal to the ns-stamp domain when compared to a
     * TIME/DATE field. */
   private def coercePair(l: Expr, r: Expr, ctx: Ctx): (Column, Column) = {
     (l, r) match {
-      case (f: Field, Lit(s: String, "string")) if isTimeField(f, ctx) =>
+      case (f, Lit(s: String, "string")) if isTimeField(f, ctx) =>
         (build(f, ctx), lit(parseTime(s).getOrElse(
           throw new IllegalArgumentException(s"bad time literal '$s'"))))
-      case (Lit(s: String, "string"), f: Field) if isTimeField(f, ctx) =>
+      case (Lit(s: String, "string"), f) if isTimeField(f, ctx) =>
         (lit(parseTime(s).getOrElse(
           throw new IllegalArgumentException(s"bad time literal '$s'"))),
           build(f, ctx))
@@ -76,8 +86,8 @@ object ExprBuilder {
   private[graft] def numKind(e: Expr, ctx: Ctx): Option[String] = e match {
     case Lit(_, "uint" | "int") => Some("int")
     case Lit(_, "float") => Some("float")
-    case f: Field =>
-      ctx.get(fieldKey(f)).orElse(ctx.get(f.name.toLowerCase)) match {
+    case _: Field | _: OuterRef | _: Compiled =>
+      declaredType(e, ctx) match {
         case Some("float") => Some("float")
         case Some("int" | "uint" | "time" | "date") => Some("int")
         case _ => None
@@ -139,9 +149,8 @@ object ExprBuilder {
     * domain (reference arithmetic is plain int64 ns); `*`/`/`/`%`/`^`
     * leave it. */
   private[graft] def timeKind(e: Expr, ctx: Ctx): Option[String] = e match {
-    case f: Field =>
-      ctx.get(fieldKey(f)).orElse(ctx.get(f.name.toLowerCase))
-        .filter(t => t == "time" || t == "date")
+    case _: Field | _: OuterRef | _: Compiled =>
+      declaredType(e, ctx).filter(t => t == "time" || t == "date")
     case FnCall("totime" | "now" | "dawn" | "dusk" | "epoch", _) =>
       Some("time")
     case FnCall("min" | "max" | "sum" | "mode" | "spread" | "abs" |
@@ -163,6 +172,8 @@ object ExprBuilder {
     case Lit(null, _) => lit(null)
     case Lit(v, _) => lit(v)
     case f: Field => fieldCol(f)
+    case OuterRef(f, _) => fieldCol(f).outer()
+    case Compiled(c, _) => c
     case Star() => col("*")
     case BinOp(op, l, r) =>
       val (lc, rc) = op match {
@@ -198,7 +209,7 @@ object ExprBuilder {
       throw new IllegalArgumentException(s"unknown unary $op")
     case InList(x, vs, neg) =>
       val base = x match {
-        case f: Field if isTimeField(f, ctx) =>
+        case f if isTimeField(f, ctx) =>
           build(f, ctx).isin(vs.map {
             case Lit(s: String, "string") => parseTime(s).getOrElse(
               throw new IllegalArgumentException(s"bad time literal '$s'"))

@@ -254,4 +254,30 @@ class GraphSpec extends AnyFunSuite {
       maxHops = 5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sp == Map(1L -> 0L, 2L -> 5L, 3L -> 10L))
   }
+
+  test("BFS, labeled BFS and SSSP keep no persisted RDD but their " +
+    "sealed result's") {
+    // each loop checkpoints its symmetrized edges, its seed frame,
+    // every hop and periodically the visited set; once the result is
+    // sealed none of them may stay persisted
+    val sc = spark.sparkContext
+    val chain = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 4L, 2L), (4L, 5L, 1L),
+      (5L, 6L, 4L)).toDF("s", "d", "w")
+    val seeds = Seq(1L, 4L).toDF("v0")
+    def leftBehind(call: => org.apache.spark.sql.DataFrame): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call
+      val sealedRdd = out.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => Set(r.rdd.id)
+        case _ => Set.empty[Int]
+      }
+      sc.getPersistentRDDs.keySet.toSet -- before -- sealedRdd
+    }
+    assert(leftBehind(Graph.bfsDistances(chain, "s", "d", seeds, "v0",
+      maxHops = 10)).isEmpty)
+    assert(leftBehind(Graph.bfsDistancesLabeled(chain, "s", "d", seeds,
+      "v0", maxHops = 10)).isEmpty)
+    assert(leftBehind(Graph.ssspBounded(chain, "s", "d", "w", seeds, "v0",
+      maxHops = 10)).isEmpty)
+  }
 }

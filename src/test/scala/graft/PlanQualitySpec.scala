@@ -396,6 +396,35 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("uncorrelated NOT IN over a NULL-free set plans a keyed anti " +
+    "join with broadcasts off") {
+    // Catalyst's null-aware NOT IN is a nested-loop join unless its
+    // build side broadcasts; the engine's one-row NULL count keeps an
+    // equi anti join for a NULL-free set whatever the broadcast limit
+    import java.nio.file.Files
+    import spark.implicits._
+    val eng = new graft.engine.Engine(spark,
+      Files.createTempDirectory("plan-notin").toString)
+    eng.attachTable("nio", (1L to 20L).map(i => (i, i % 7)).toDF("id", "k"))
+    eng.attachTable("nip", Seq(1L, 3L, 5L).toDF("k"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = eng.sql("select id from nio where k not in " +
+        "(select k from nip)") match {
+        case graft.engine.Rows(d) => d
+        case other => fail(s"$other")
+      }
+      val p = plan(df)
+      assert(p.contains("LeftAnti"), p)
+      assert(!p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"), p)
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
+        (1L to 20L).filterNot(i => Set(1L, 3L, 5L)(i % 7)))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("dialect superset plans: view pushdown, semi-join IN, keyed window") {
     import java.nio.file.Files
     val eng = new graft.engine.Engine(spark,
