@@ -94,16 +94,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_SHUFFLE decouples shuffle parallelism from executor
     // threads for the scale decades (SCALING §11: partition count must
     // scale WITH the data, the way a real cluster would be sized)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
+      Sessions.cores)
+    val spark = Sessions.builder()
       .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Long-lived-driver hygiene (SCALING §15.1: the in-memory app
       // status store retains 1000 jobs/stages/executions by default
       // and its bookkeeping grows per-round cost measurably — capping
@@ -261,14 +258,14 @@ object Bench {
     // settle the warmup's + prebuilds' listener traffic so the first
     // timed query's pressure window starts clean
     busWait(); pressure.drain()
-    // per-rep (wall, spill, peak); the reported tuple is the one FROM
-    // the median rep, so the pressure record belongs to the run that
-    // produced the recorded wall (review finding: mixing metrics from
-    // different reps). Median, not min (r12 task 1): min hides real
-    // cost; median absorbs a one-off GC/JIT stall without hiding a
-    // plan regression.
+    // per-rep (wall, spill, peak, RDDs the query left persisted); the
+    // reported tuple is the one FROM the median rep, so the pressure
+    // record belongs to the run that produced the recorded wall
+    // (review finding: mixing metrics from different reps). Median,
+    // not min (r12 task 1): min hides real cost; median absorbs a
+    // one-off GC/JIT stall without hiding a plan regression.
     def measure(name: String, fn: (SparkSession, String) => org.apache
-        .spark.sql.DataFrame, reps: Int): (Double, Long, Long) = {
+        .spark.sql.DataFrame, reps: Int): (Double, Long, Long, Int) = {
       val repRuns = (0 until reps).map { _ =>
         val t0 = System.nanoTime()
         val failed =
@@ -283,6 +280,7 @@ object Bench {
         val dt = if (failed) 1e9 else (System.nanoTime() - t0) / 1e9
         busWait()
         val (sp, pk) = pressure.drain()
+        val left = spark.sparkContext.getPersistentRDDs.size
         // operators persist reused intermediates for the duration of
         // their query; drop them (plus any leftover checkpoint RDD
         // blocks) and let the JVM settle so late queries aren't taxed
@@ -291,7 +289,7 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         System.gc()
-        (dt, sp, pk)
+        (dt, sp, pk, left)
       }
       val ok = repRuns.filter(_._1 < 1e9)
       if (ok.isEmpty) repRuns.head
@@ -305,7 +303,7 @@ object Bench {
         val m = measure(name, fn, repsFor(name))
         val rt = Runtime.getRuntime
         val heapMb = (rt.totalMemory() - rt.freeMemory()) / 1048576
-        name -> ((m._1, m._2 / 1048576, m._3 / 1048576, heapMb))
+        name -> ((m._1, m._2 / 1048576, m._3 / 1048576, heapMb, m._4))
     }
     // r12 task 1, second half: any query whose suite number moved
     // >1.5× vs the prior citable record in EITHER direction gets an
@@ -318,7 +316,7 @@ object Bench {
     // can't hide behind eleven larger noise movers.
     val movers: Seq[(String, Double, Double)] =
       if (forcedReps.isDefined || only.nonEmpty) Seq.empty
-      else results.flatMap { case (name, (wall, _, _, _)) =>
+      else results.flatMap { case (name, (wall, _, _, _, _)) =>
         priorWalls.get(name).collect {
           case prior if prior >= 0.3 && wall < 1e8 &&
             (wall > prior * 1.5 || wall < prior / 1.5) =>
@@ -401,10 +399,13 @@ object Bench {
       // (memory+disk, all stages in the query window), peak execution
       // memory MB (max stage aggregate), driver heap MB after the
       // post-query GC — the four numbers that separate "this plan
-      // regressed" from "the suite environment squeezed this query"
-      val press = results.map { case (k, (w, sp, pk, hp)) =>
+      // regressed" from "the suite environment squeezed this query" —
+      // and the RDDs the query left persisted before the sweep (a
+      // per-query leak)
+      val press = results.map { case (k, (w, sp, pk, hp, left)) =>
         "\"" + k + f"""\":{"wall":$w%.3f,"spill_mb":$sp,""" +
-          f""""peak_exec_mb":$pk,"heap_after_mb":$hp}"""
+          f""""peak_exec_mb":$pk,"heap_after_mb":$hp,""" +
+          f""""persisted_after":$left}"""
       }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         fullLine.dropRight(1) +

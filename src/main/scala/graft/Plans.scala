@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for headline queries → PLANS.md, the
   * reviewable evidence that scans prune, filters push down, dims
@@ -14,10 +13,7 @@ object Plans {
     val sfDir = args.headOption.orElse(
       sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse(
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val headline = Seq(
       "q01_pricing_summary" -> "group-agg with scaled-long exact sums",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.engine._
 
 /** Interactive NoWDB-dialect shell over the engine — the counterpart
@@ -13,12 +12,8 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       sys.env.getOrElse("GRAFT_SCOPE_ROOT", "/tmp/graft-scopes"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val b = Sessions.builder()
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val eng = new Engine(spark, root)
     println(s"graft shell — scopes at $root; end statements with ';', \\q quits")

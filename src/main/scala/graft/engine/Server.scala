@@ -253,12 +253,8 @@ object Server {
     val port = args.headOption.map(_.toInt).getOrElse(55505)
     val root = args.drop(1).headOption.getOrElse(
       sys.env.getOrElse("GRAFT_SCOPE_ROOT", "/tmp/graft-scopes"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val b = graft.Sessions.builder()
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val srv = new Server(spark, root, port).start()
     println(s"graft server listening on ${srv.boundPort}, scopes at $root")

@@ -774,8 +774,8 @@ object Dedup {
       val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
       verts.toSeq.sorted.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
     } else {
-      // connectedComponents eagerly checkpoints its symmetrized edge
-      // set up front, so p's cache is releasable as soon as it returns
+      // connectedComponents returns a sealed result, so p's cache is
+      // releasable as soon as it returns
       val labels = Graph.connectedComponents(p, "doc_a", "doc_b")
         .select(col("v").as("doc_id"), col("comp").as("cluster_id"))
       p.unpersist(blocking = false)

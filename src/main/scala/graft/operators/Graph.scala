@@ -1,6 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Graph operators over the NoWDB edge model (SURVEY §1.1: a graph is
@@ -11,9 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale: degree/neighbor ops are single shuffles on vertex ids;
   * multi-hop ops chain equi-joins (AQE picks broadcast vs SMJ by
-  * side size); connected components is iterative min-label
-  * propagation with per-iteration localCheckpoint to keep lineage
-  * flat — the standard large-graph pattern.
+  * side size). The iterative operators all run on one superstep
+  * driver ([[superstep]]), Pregelix's shape: each round is a join
+  * plus a group-by over the live state, with the lineage cut, the
+  * halt probe and the release of every intermediate owned by the
+  * driver, and the result sealed once.
   */
 object Graph {
 
@@ -54,6 +60,106 @@ object Graph {
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
 
+  /** The superstep driver's held-frame scope. An operator cuts its
+    * shared inputs with [[cut]] and runs its rounds with [[rounds]];
+    * [[superstep]] seals what the operator returns and then releases
+    * every frame cut here. */
+  private final class Scope {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    /** Lazy lineage cut: the first job that reads the frame
+      * materialises it once; its blocks are held until the seal. */
+    def cut(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(false)
+      held += rddOf(c)
+      c
+    }
+
+    /** Runs `step(state, round)` for rounds 1..`n` from `init`; the
+      * last state is left to the seal. With a `probe` column every
+      * state is cut, and the loop stops early once the column's sum
+      * over the cut state repeats — one job per round that also
+      * materialises the cut, so no later round ships an unmaterialised
+      * plan in its task binaries (OPTIMIZATION_r16 §G). A stamp column
+      * (the round that last changed the row) repeats its sum exactly
+      * when the round's delta had no rows; CC's labels repeat theirs
+      * once they stop moving. Without a probe the round count is
+      * fixed, as the oracle replays those loops round for round, and
+      * states are cut only when the step reads its state more than
+      * once: that plan would double each round, while a step that
+      * reads it once grows it by one round and runs with the seal as
+      * one DAG (a cut there costs each round its own jobs). */
+    def rounds(init: DataFrame, n: Int, probe: Option[String] = None)(
+        step: (DataFrame, Int) => DataFrame): DataFrame =
+      if (probe.isEmpty && n > 0 && reads(step, init) < 2)
+        (1 to n).foldLeft(init)((state, r) => step(state, r))
+      else {
+        @scala.annotation.tailrec
+        def go(state: DataFrame, r: Int, last: Option[BigInt]): DataFrame = {
+          val next = step(state, r)
+          if (r == n) next
+          else {
+            val c = cut(next)
+            val now = probe.map(sumOf(c, _))
+            if (now.isDefined && now == last) c else go(c, r + 1, now)
+          }
+        }
+        val s0 = cut(init)
+        if (n < 1) s0
+        else go(s0, 1, if (n > 1) probe.map(sumOf(s0, _)) else None)
+      }
+
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
+  }
+
+  /** A cut frame scans the persisted RDD it was checkpointed into. */
+  private def rddOf(cut: DataFrame): RDD[InternalRow] =
+    cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+
+  /** How many times `step` reads its state: round 1 is built (not
+    * run) over `init` under a marker alias and the markers are
+    * counted, a self-join's re-aliased copy included. */
+  private def reads(step: (DataFrame, Int) => DataFrame,
+                    init: DataFrame): Int =
+    step(init.as("superstep_state"), 1).queryExecution.analyzed.collect {
+      case a: SubqueryAlias if a.alias == "superstep_state" => a
+    }.size
+
+  /** Σ of an integral column over a cut frame, in one job on its RDD
+    * (unbounded, so 64-bit vertex ids cannot overflow it). */
+  private def sumOf(cut: DataFrame, c: String): BigInt = {
+    val i = cut.schema.fieldIndex(c)
+    val t = cut.schema(i).dataType
+    rddOf(cut).map(row => row.get(i, t) match {
+      case n: Number => BigInt(n.longValue)
+      case _ => BigInt(0)
+    }).fold(BigInt(0))(_ + _)
+  }
+
+  /** Runs an operator on a fresh [[Scope]], seals its result with one
+    * eager materialisation and releases every frame the scope held,
+    * also on failure — a long-lived caller (the wire `Server`) would
+    * otherwise accumulate them for the application's lifetime.
+    * `Dataset.unpersist` does not reach a localCheckpoint frame, so the
+    * release unpersists the RDDs themselves. */
+  private def superstep(body: Scope => DataFrame): DataFrame = {
+    val scope = new Scope
+    try body(scope).localCheckpoint(true)
+    finally scope.release()
+  }
+
+  /** Both directions of every edge as (u, v, carry…), by in-row
+    * explode: one evaluation of the edge subtree, where a unionAll of
+    * two selects evaluates it twice (edge frames are often expensive
+    * aggregates such as co-occurrence graphs). */
+  def symmetrize(edges: DataFrame, src: String, dst: String,
+                 carry: Column*): DataFrame =
+    edges.select(explode(array(
+        struct(col(src).as("u") +: col(dst).as("v") +: carry: _*),
+        struct(col(dst).as("u") +: col(src).as("v") +: carry: _*)))
+        .as("p"))
+      .select(col("p.*"))
+
   /** Global triangle count of the undirected simple graph given by
     * `edges`, with degree-ordered orientation (Suri–Vassilvitskii):
     * every edge is directed from its lower-(degree, id) endpoint to
@@ -65,7 +171,8 @@ object Graph {
     * generates ~m^1.5 total work instead of 10^14 wedges. Plain
     * id-ordering (the naive oracle formulation) has no such bound.
     * Output: one row, `n_triangles`. */
-  def triangleCount(edges: DataFrame, src: String, dst: String): DataFrame = {
+  def triangleCount(edges: DataFrame, src: String,
+                    dst: String): DataFrame = superstep { s =>
     val e = edges
       .select(least(col(src), col(dst)).as("u"),
         greatest(col(src), col(dst)).as("v"))
@@ -80,8 +187,7 @@ object Graph {
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           struct(col("u").as("a"), col("v").as("b")))
           .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-    val o = ranked.select(col("e.a").as("a"), col("e.b").as("b")).persist()
-    o.count()
+    val o = s.cut(ranked.select(col("e.a").as("a"), col("e.b").as("b")))
     // wedges at the low endpoint, π-ordered so (b, c) is oriented
     val w1 = o.select(col("a"), col("b"))
     val w2 = o.select(col("a"), col("b").as("c"))
@@ -95,51 +201,50 @@ object Graph {
     val closedRev = wedges.join(
       o.select(col("a").as("c"), col("b").as("b")), Seq("b", "c"),
       "left_semi")
-    val res = closedFwd.unionAll(closedRev)
-      .agg(count(lit(1)).as("n_triangles"))
-    val out = res.localCheckpoint(true)
-    o.unpersist(blocking = false)
-    out
+    closedFwd.unionAll(closedRev).agg(count(lit(1)).as("n_triangles"))
+  }
+
+  /** The (s, d) edge set and its vertex set, both cut in `s`. */
+  private def edgesAndVerts(s: Scope, edges: DataFrame, src: String,
+                            dst: String): (DataFrame, DataFrame) = {
+    val e = s.cut(edges.select(col(src).as("s"), col(dst).as("d"))
+      .distinct())
+    (e, s.cut(e.select(col("s").as("v"))
+      .unionAll(e.select(col("d").as("v"))).distinct()))
   }
 
   /** PageRank by synchronous power iteration: rank' = (1−d)/N +
     * d·Σ rank/out_deg over incoming edges (+ redistributed dangling
     * mass, so Σrank stays 1). Each iteration: one join on src + one
-    * aggregation on dst, lineage cut per iteration — the same
-    * flat-plan pattern as [[connectedComponents]]. Output: (vertex,
-    * rank). */
+    * aggregation on dst. Output: (vertex, rank). */
   def pageRank(edges: DataFrame, src: String, dst: String,
-               iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
-    val verts = e.select(col("s").as("v"))
-      .unionAll(e.select(col("d").as("v"))).distinct().localCheckpoint()
-    val n = verts.count()
-    val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    var ranks = verts.withColumn("rank", lit(1.0 / n)).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val withDeg = ranks.join(outDeg, ranks("v") === outDeg("s"), "left")
-        .select(col("v"), col("rank"), col("deg"))
-      // dangling vertices (no out-edges) spread their rank uniformly.
-      // The mass is a 1-row aggregate broadcast back into the update —
-      // NOT a driver collect — so each iteration stays a single job
-      // and no driver round-trip sits inside the loop at scale.
-      val dangling = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      val contrib = withDeg.filter(col("deg").isNotNull)
-        .join(e, col("s") === col("v"))
-        .select(col("d"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("d")).agg(sum(col("c")).as("in_rank"))
-      ranks = verts.join(contrib, verts("v") === contrib("d"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("v"), (lit((1.0 - damping) / n) +
-          lit(damping) * (coalesce(col("in_rank"), lit(0.0)) +
-            col("dm") / n)).as("rank"))
-        // lazy lineage cut — no per-iteration driver job (see kCore)
-        .localCheckpoint(false)
+               iters: Int = 10, damping: Double = 0.85): DataFrame =
+    superstep { s =>
+      val (e, verts) = edgesAndVerts(s, edges, src, dst)
+      val n = verts.count()
+      val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
+      s.rounds(verts.withColumn("rank", lit(1.0 / n)), iters) { (ranks, _) =>
+        val withDeg = ranks.join(outDeg, ranks("v") === outDeg("s"), "left")
+          .select(col("v"), col("rank"), col("deg"))
+        // dangling vertices (no out-edges) spread their rank uniformly.
+        // The mass is a 1-row aggregate broadcast back into the update —
+        // NOT a driver collect — so no driver round-trip sits inside the
+        // loop at scale.
+        val dangling = withDeg.filter(col("deg").isNull)
+          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
+        val contrib = withDeg.filter(col("deg").isNotNull)
+          .join(e, col("s") === col("v"))
+          .select(col("d"), (col("rank") / col("deg")).as("c"))
+          .groupBy(col("d")).agg(sum(col("c")).as("in_rank"))
+        verts.join(contrib, verts("v") === contrib("d"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("v"), (lit((1.0 - damping) / n) +
+            lit(damping) * (coalesce(col("in_rank"), lit(0.0)) +
+              col("dm") / n)).as("rank"))
+      }
     }
-    ranks
-  }
+
+  private def idiv(a: Column, b: Column): Column = call_function("div", a, b)
 
   /** Integer-exact PageRank: [[pageRank]] recast in scaled-integer
     * arithmetic so the result is BIT-IDENTICAL across engines —
@@ -154,37 +259,31 @@ object Graph {
     * vertices drop their mass instead of redistributing it (the
     * "strongly preferential" variant — redistributing needs a
     * per-iteration driver scalar, which this form deliberately avoids:
-    * no collect anywhere, the iteration is pure joins + aggregates, so
-    * N iterations schedule as one DAG). Callers with dangling-heavy
-    * graphs should add self-loops upstream or use [[pageRank]].
-    * `iters` is expected to be small (rank queries, not convergence
-    * runs); lineage stays shallow because each iteration is two joins
-    * deep over the same cached edge frame. */
+    * no collect anywhere, the iteration is pure joins + aggregates).
+    * Callers with dangling-heavy graphs should add self-loops upstream
+    * or use [[pageRank]]. `iters` is expected to be small (rank
+    * queries, not convergence runs). */
   def pageRankInt(edges: DataFrame, src: String, dst: String,
-                  iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
-    val verts = e.select(col("s").as("v"))
-      .unionAll(e.select(col("d").as("v"))).distinct().localCheckpoint()
-    val n = verts.agg(count(lit(1)).as("n_verts"))
-    val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
-    var ranks = verts.crossJoin(broadcast(n))
-      .select(col("v"), idiv(lit(scale), col("n_verts")).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
-        .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
-        .join(e, "s")
-        .groupBy(col("d")).agg(sum(col("c")).as("in_sum"))
-      ranks = verts.join(contrib, verts("v") === contrib("d"), "left")
-        .crossJoin(broadcast(n))
-        .select(col("v"),
-          (idiv(lit(15L) * idiv(lit(scale), col("n_verts")), lit(100L)) +
-            idiv(lit(85L) * coalesce(col("in_sum"), lit(0L)), lit(100L)))
-            .as("rank"))
+                  iters: Int = 3, scale: Long = 1000000000000L): DataFrame =
+    superstep { s =>
+      val (e, verts) = edgesAndVerts(s, edges, src, dst)
+      val n = verts.agg(count(lit(1)).as("n_verts"))
+      val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
+      val ranks0 = verts.crossJoin(broadcast(n))
+        .select(col("v"), idiv(lit(scale), col("n_verts")).as("rank"))
+      s.rounds(ranks0, iters) { (ranks, _) =>
+        val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
+          .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
+          .join(e, "s")
+          .groupBy(col("d")).agg(sum(col("c")).as("in_sum"))
+        verts.join(contrib, verts("v") === contrib("d"), "left")
+          .crossJoin(broadcast(n))
+          .select(col("v"),
+            (idiv(lit(15L) * idiv(lit(scale), col("n_verts")), lit(100L)) +
+              idiv(lit(85L) * coalesce(col("in_sum"), lit(0L)), lit(100L)))
+              .as("rank"))
+      }
     }
-    ranks
-  }
 
   /** Personalized PageRank in exact integer arithmetic (Haveliwala
     * 2002): identical update to [[pageRankInt]] except the teleport
@@ -196,126 +295,63 @@ object Graph {
     * all arithmetic is integer div so DuckDB replays it bit-exactly. */
   def personalizedPageRankInt(edges: DataFrame, src: String,
       dst: String, seeds: DataFrame, seedCol: String, iters: Int = 3,
-      scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
-    val verts = e.select(col("s").as("v"))
-      .unionAll(e.select(col("d").as("v"))).distinct().localCheckpoint()
-    val sd = seeds.select(col(seedCol).as("v")).distinct()
-      .join(verts, Seq("v"), "left_semi").localCheckpoint()
+      scale: Long = 1000000000000L): DataFrame = superstep { s =>
+    val (e, verts) = edgesAndVerts(s, edges, src, dst)
+    val sd = s.cut(seeds.select(col(seedCol).as("v")).distinct()
+      .join(verts, Seq("v"), "left_semi"))
     // fail fast on an empty (post-semi-join) seed set: n_seeds = 0
     // would null every integer-div teleport term and silently emit
     // all-null ranks (review finding). 1-row bounded collect.
-    val nSeeds = sd.count()
-    require(nSeeds > 0,
+    require(sd.count() > 0,
       "personalizedPageRankInt: seed set shares no vertex with the " +
         "graph - ranks would be all-null")
     val ns = sd.agg(count(lit(1)).as("n_seeds"))
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
-    val base = verts
+    val base = s.cut(verts
       .join(sd.withColumn("is_seed", lit(1L)), Seq("v"), "left")
       .crossJoin(broadcast(ns))
       .select(col("v"), (coalesce(col("is_seed"), lit(0L))
-        * idiv(lit(scale), col("n_seeds"))).as("tp"))
-      .localCheckpoint()
+        * idiv(lit(scale), col("n_seeds"))).as("tp")))
     val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    var ranks = base.select(col("v"), col("tp").as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
-        .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
-        .join(e, "s")
-        .groupBy(col("d")).agg(sum(col("c")).as("in_sum"))
-      ranks = base.join(contrib, base("v") === contrib("d"), "left")
-        .select(base("v"),
-          (idiv(lit(15L) * col("tp"), lit(100L)) +
-            idiv(lit(85L) * coalesce(col("in_sum"), lit(0L)),
-              lit(100L))).as("rank"))
+    s.rounds(base.select(col("v"), col("tp").as("rank")), iters) {
+      (ranks, _) =>
+        val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
+          .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
+          .join(e, "s")
+          .groupBy(col("d")).agg(sum(col("c")).as("in_sum"))
+        base.join(contrib, base("v") === contrib("d"), "left")
+          .select(base("v"),
+            (idiv(lit(15L) * col("tp"), lit(100L)) +
+              idiv(lit(85L) * coalesce(col("in_sum"), lit(0L)),
+                lit(100L))).as("rank"))
     }
-    ranks
   }
-
-  /** Drop the blocks of frames a loop checkpointed or persisted, once
-    * its result is sealed and nothing reads them. `Dataset.unpersist`
-    * does not reach a localCheckpoint frame, which scans a persisted
-    * RDD rather than a cached plan, so that RDD is unpersisted itself,
-    * as the engine's recursion loop does. */
-  private def release(frames: Iterable[DataFrame]): Unit =
-    frames.foreach(f => f.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => f.unpersist(blocking = false)
-    })
 
   /** Multi-source BFS hop distances over an undirected edge list:
     * (v, dist) with dist = fewest hops from any seed, bounded by
     * `maxHops`. Frontier-at-a-time expansion — each round is one
     * semi-join (frontier → neighbors) + one anti-join (drop already
-    * visited), lineage cut per round like [[connectedComponents]].
-    * Seeds with no edges still appear at dist 0. This is the
-    * distance-labelled generalization of the reference's k-hop
-    * reach cursors (SURVEY §2.3; reference edge traversal is one
-    * origin-index probe per hop, reader.c): per hop exactly one
-    * shuffle keyed on the frontier, nothing quadratic, so it scales
-    * to billion-edge graphs where per-vertex Dijkstra never would. */
+    * visited); `dist` doubles as the round stamp, so the walk stops
+    * once a hop reaches no new vertex. Seeds with no edges still
+    * appear at dist 0. This is the distance-labelled generalization
+    * of the reference's k-hop reach cursors (SURVEY §2.3; reference
+    * edge traversal is one origin-index probe per hop, reader.c): per
+    * hop exactly one shuffle keyed on the frontier, nothing
+    * quadratic, so it scales to billion-edge graphs where per-vertex
+    * Dijkstra never would. */
   def bfsDistances(edges: DataFrame, src: String, dst: String,
                    seeds: DataFrame, seedCol: String,
-                   maxHops: Int): DataFrame = {
-    // symmetrize by in-row explode (one evaluation of the edge
-    // subtree), not unionAll-of-two-selects (two) — edge frames are
-    // often expensive aggregates (co-occurrence graphs)
-    val sym = edges.select(explode(array(
-        struct(col(src).as("u"), col(dst).as("v")),
-        struct(col(dst).as("u"), col(src).as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .localCheckpoint()
-    var visited = seeds.select(col(seedCol).as("v")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    val held = scala.collection.mutable.ArrayBuffer(sym, visited)
-    var frontier = visited.select(col("v"))
-    var hop = 1L
-    var done = false
-    while (!done && hop <= maxHops) {
-      // EAGER checkpoint per hop (r16, reversing the r15 lazy-persist
-      // choice): a lazily-persisted leg only truncates the PLAN after
-      // it materializes, and with the ≤6-hop probe skip nothing
-      // materializes until the final job — so every hop's AQE stage
-      // shipped the whole accumulated plan, and thread sampling
-      // showed per-task ObjectInputStream.readObject (task-binary
-      // deser, paid per task × 32 partitions) dominating executor
-      // CPU. One extra job per hop buys flat Scan-ExistingRDD plans
-      // downstream: paired A/B (q315 control flat) q316 2.34→0.93 s,
-      // q128 0.59→0.50, q134 1.23→1.03.
-      val next = sym
-        .join(frontier.select(col("v").as("u")), Seq("u"), "left_semi")
-        .select(col("v")).distinct()
-        .join(visited, Seq("v"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
-      held += next
-      // the final hop folds in unconditionally — an emptiness probe
-      // there is dead work (the loop exits either way). For SHORT
-      // bounded walks (≤6 hops) skip the probe entirely: each probe
-      // schedules one extra job, and an undetected-empty frontier
-      // just makes the remaining rounds no-op joins over zero rows —
-      // bit-identical output, fewer driver round-trips. Long walks
-      // keep the probe (there the skipped rounds are the savings).
-      if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
-      else {
-        val grown = visited.unionAll(next)
-        visited =
-          if (hop % 4 == 0) { val c = grown.localCheckpoint(); held += c; c }
-          else grown
-        frontier = next.select(col("v"))
-      }
-      hop += 1
+                   maxHops: Int): DataFrame = superstep { s =>
+    val sym = s.cut(symmetrize(edges, src, dst))
+    s.rounds(seeds.select(col(seedCol).as("v")).distinct()
+        .withColumn("dist", lit(0L)), maxHops, Some("dist")) {
+      (visited, hop) =>
+        visited.unionAll(sym
+          .join(visited.filter(col("dist") === hop - 1)
+            .select(col("v").as("u")), Seq("u"), "left_semi")
+          .select(col("v")).distinct()
+          .join(visited, Seq("v"), "left_anti")
+          .withColumn("dist", lit(hop.toLong)))
     }
-    // seal: materialize the (vertex-count-sized) result once, then
-    // release every frame the loop held — otherwise each call pins
-    // them for the application lifetime (the long-lived wire Server
-    // would accumulate them indefinitely)
-    val out = visited.localCheckpoint(true)
-    release(held)
-    out
   }
 
   /** Per-seed BFS hop distances over an undirected edge list:
@@ -326,45 +362,21 @@ object Graph {
     * multi-source labelled BFS used for landmark centrality
     * estimates (Eppstein–Wang style), and all L walks advance in the
     * SAME per-hop join — one shuffle per hop regardless of L, never
-    * one BFS job per landmark. Same eager per-hop checkpoint
-    * discipline as [[bfsDistances]] (r16 — see its in-loop note). */
+    * one BFS job per landmark. */
   def bfsDistancesLabeled(edges: DataFrame, src: String, dst: String,
                           seeds: DataFrame, seedCol: String,
-                          maxHops: Int): DataFrame = {
-    val sym = edges.select(explode(array(
-        struct(col(src).as("u"), col(dst).as("v")),
-        struct(col(dst).as("u"), col(src).as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .localCheckpoint()
-    var visited = seeds.select(col(seedCol).as("seed")).distinct()
-      .select(col("seed"), col("seed").as("v"))
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    val held = scala.collection.mutable.ArrayBuffer(sym, visited)
-    var frontier = visited.select(col("seed"), col("v"))
-    var hop = 1L
-    var done = false
-    while (!done && hop <= maxHops) {
-      val next = sym
-        .join(frontier.select(col("seed"), col("v").as("u")), Seq("u"))
+                          maxHops: Int): DataFrame = superstep { s =>
+    val sym = s.cut(symmetrize(edges, src, dst))
+    s.rounds(seeds.select(col(seedCol).as("seed")).distinct()
+        .select(col("seed"), col("seed").as("v"), lit(0L).as("dist")),
+        maxHops, Some("dist")) { (visited, hop) =>
+      visited.unionAll(sym
+        .join(visited.filter(col("dist") === hop - 1)
+          .select(col("seed"), col("v").as("u")), Seq("u"))
         .select(col("seed"), col("v")).distinct()
         .join(visited, Seq("seed", "v"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
-      held += next
-      // short-walk probe skip — same reasoning as bfsDistances
-      if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
-      else {
-        val grown = visited.unionAll(next)
-        visited =
-          if (hop % 4 == 0) { val c = grown.localCheckpoint(); held += c; c }
-          else grown
-        frontier = next.select(col("seed"), col("v"))
-      }
-      hop += 1
+        .withColumn("dist", lit(hop.toLong)))
     }
-    val out = visited.localCheckpoint(true)
-    release(held)
-    out
   }
 
   /** Bounded-hop single-source (multi-seed) shortest paths over a
@@ -374,122 +386,54 @@ object Graph {
     * round relax their edges; the others provably contribute nothing
     * new). Weights must be non-negative. Each round is one join on
     * the frontier + one min-reduce keyed on the vertex — the min-plus
-    * generalization of [[bfsDistances]], same eager per-round
-    * checkpoint discipline (r16 — see bfsDistances' in-loop note). Early-exits when a round
-    * improves nothing (then longer paths can't either). */
+    * generalization of [[bfsDistances]]. `at` stamps the round that
+    * last improved a vertex (the min over (dist, at) keeps the older
+    * stamp on a tie), so the frontier is last round's stamp and the
+    * walk stops once a round improves nothing (then longer paths
+    * can't either). */
   def ssspBounded(edges: DataFrame, src: String, dst: String,
                   wCol: String, seeds: DataFrame, seedCol: String,
-                  maxHops: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // in-row symmetrization — see bfsDistances for why not unionAll
-    val sym = edges.select(explode(array(
-        struct(col(src).as("u"), col(dst).as("v"), col(wCol).as("w")),
-        struct(col(dst).as("u"), col(src).as("v"), col(wCol).as("w"))))
-        .as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"), col("p.w").as("w"))
-      .localCheckpoint()
-    var dist = seeds.select(col(seedCol).as("v")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    val held = scala.collection.mutable.ArrayBuffer(sym, dist)
-    var frontier = dist
-    var hop = 1
-    var done = false
-    while (!done && hop <= maxHops) {
-      val relax = sym.join(
-          frontier.select(col("v").as("u"), col("dist").as("du")),
-          Seq("u"))
-        .select(col("v"), (col("du") + col("w")).as("dist"))
-      val next = dist.unionAll(relax)
-        .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      held += next
-      if (hop == maxHops) {
-        // last round: the result is `next` regardless — computing the
-        // improved set would be a pure-overhead join + action
-        dist = next
-        done = true
-      } else {
-        val improved = next
-          .join(dist.select(col("v"), col("dist").as("old")), Seq("v"),
-            "left")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select(col("v"), col("dist"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        held += improved
-        // short-walk probe skip — same reasoning as bfsDistances: an
-        // undetected-converged frontier only adds no-op relax rounds
-        // (min-fold of an empty relax set is `dist` unchanged)
-        if (maxHops > 6 && improved.isEmpty) done = true
-        else {
-          dist = next // already eagerly checkpointed above (r16)
-          frontier = improved
-        }
-      }
-      hop += 1
-    }
-    // seal + release (same lifecycle as bfsDistances)
-    val out = dist.localCheckpoint(true)
-    release(held)
-    out
+                  maxHops: Int): DataFrame = superstep { s =>
+    val sym = s.cut(symmetrize(edges, src, dst, col(wCol).as("w")))
+    s.rounds(seeds.select(col(seedCol).as("v")).distinct()
+        .select(col("v"), lit(0L).as("dist"), lit(0L).as("at")),
+        maxHops, Some("at")) { (best, hop) =>
+      val relax = sym.join(best.filter(col("at") === hop - 1)
+          .select(col("v").as("u"), col("dist").as("du")), Seq("u"))
+        .select(col("v"), (col("du") + col("w")).as("dist"),
+          lit(hop.toLong).as("at"))
+      best.unionAll(relax).groupBy(col("v"))
+        .agg(min(struct(col("dist"), col("at"))).as("m"))
+        .select(col("v"), col("m.dist").as("dist"), col("m.at").as("at"))
+    }.drop("at")
   }
 
   /** Undirected connected components by min-label propagation with
     * pointer jumping. Converges in O(log diameter) rounds; each round
     * is a neighbor-propagation join + min-reduce, then a label-lookup
-    * join that adopts comp(comp) (label doubling), each followed by a
-    * localCheckpoint for flat lineage. Convergence is detected from
-    * Σcomp, which strictly decreases until the fixpoint, so the check
-    * rides a tiny aggregate instead of a join-and-compare pass. The
-    * sum is carried as decimal(38,0): with billions of 64-bit vertex
-    * ids a long Σ would overflow (ANSI abort / silent wrap), while
-    * decimal(38,0) holds ~1e19 max-magnitude ids loss-free. */
+    * join that adopts comp(comp) (label doubling). Convergence is
+    * detected from Σcomp, which strictly decreases until the
+    * fixpoint, so the check rides the driver's one-job probe instead
+    * of a join-and-compare pass. */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
-                          maxIter: Int = 20): DataFrame = {
-    // (a,b) with a<b plus the mirror — already distinct if the input
-    // pair list is; a duplicate edge would not change min-labels anyway
-    val sym = edges.select(col(src).as("a"), col(dst).as("b"))
-      .unionAll(edges.select(col(dst).as("a"), col(src).as("b")))
-      .localCheckpoint()
-    var labels = sym.select(col("a").as("v")).distinct()
-      .withColumn("comp", col("v")).localCheckpoint()
-    // CONVERGENCE-COLLECT CONTRACT (same as pageRank's dangling-mass
-    // broadcast): this collect() returns exactly ONE aggregate row per
-    // iteration — a scalar driver probe, never data-sized. The loop
-    // cost is maxIter single-row fetches, independent of graph size;
-    // do not imitate this shape for anything that scales with |V|.
-    def compSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
-        .collect()(0).getDecimal(0)
-    var prevSum = compSum(labels)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val prop = sym.join(labels, sym("b") === labels("v"))
-        .select(col("a").as("v"), col("comp"))
-      // materialized before the self-join below (also sidesteps
-      // Catalyst's constraint rewrite over self-joined Union plans)
-      val stepped = labels.unionAll(prop)
-        .groupBy(col("v")).agg(min(col("comp")).as("comp"))
-        .localCheckpoint()
-      // pointer jump (label doubling): also adopt the label OF the
-      // label — comp values are vertex ids, so the self-join resolves
-      // comp → comp(comp), halving label distances each round. Total
-      // convergence is O(log diameter) instead of O(diameter), which
-      // is the difference between 9 and 300 rounds on a 300-link
-      // chain (maxIter would silently truncate the latter).
-      val lookup = stepped
-        .select(col("v").as("lv"), col("comp").as("lcomp"))
-      val next = stepped.join(lookup, col("comp") === col("lv"))
-        .select(col("v"), least(col("comp"), col("lcomp")).as("comp"))
-        .localCheckpoint()
-      val newSum = compSum(next)
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      labels = next
-      it += 1
+                          maxIter: Int = 20): DataFrame = superstep { s =>
+    val sym = s.cut(symmetrize(edges, src, dst))
+    s.rounds(sym.select(col("u").as("v")).distinct()
+        .withColumn("comp", col("v")), maxIter, Some("comp")) {
+      (labels, _) =>
+        val stepped = labels
+          .unionAll(sym.join(labels.select(col("v").as("u"), col("comp")),
+            "u").select(col("v"), col("comp")))
+          .groupBy(col("v")).agg(min(col("comp")).as("comp"))
+        // pointer jump (label doubling): also adopt the label OF the
+        // label — comp values are vertex ids, so the self-join resolves
+        // comp → comp(comp), halving label distances each round: 9
+        // rounds instead of 300 on a 300-link chain.
+        val lookup = stepped
+          .select(col("v").as("lv"), col("comp").as("lcomp"))
+        stepped.join(lookup, col("comp") === col("lv"))
+          .select(col("v"), least(col("comp"), col("lcomp")).as("comp"))
     }
-    labels
   }
 
   /** k-core of the undirected simple graph given by `edges`: the
@@ -505,44 +449,22 @@ object Graph {
     * `rounds` is FIXED rather than convergence-probed: the whole
     * computation stays a deterministic stage-for-stage-replayable DAG
     * (the q196 oracle unrolls exactly the same rounds), at the cost
-    * of no-op rounds after the fixpoint. A production variant would
-    * ride a one-row Σ|V| probe per round like [[connectedComponents]]
-    * and early-exit; peeling depth is usually ≤ a few dozen rounds on
-    * real graphs (degeneracy ordering removes whole shells at once).
-    * Output: (vertex, core_deg) over the surviving subgraph — empty
-    * if the graph has no k-core. */
+    * of no-op rounds after the fixpoint. Output: (vertex, core_deg)
+    * over the surviving subgraph — empty if the graph has no k-core. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
-            rounds: Int): DataFrame = {
-    // undirected simple graph, symmetrized in-row (see bfsDistances
-    // for why explode beats unionAll on expensive edge frames)
+            rounds: Int): DataFrame = superstep { s =>
     val und = edges
       .select(least(col(src), col(dst)).as("u"),
         greatest(col(src), col(dst)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    var g = und.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .localCheckpoint()
-    var r = 0
-    while (r < rounds) {
+    s.rounds(symmetrize(und, "u", "v"), rounds) { (g, _) =>
       // symmetric edge list ⇒ grouping on u alone counts every
       // vertex's full neighborhood
       val alive = g.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("u"))
-      // lineage cut per round: the surviving edge list feeds THREE
-      // consumers next round (degree agg + both semi-joins); without
-      // the cut the plan tree doubles per round. LAZY checkpoint:
-      // an eager one schedules a driver job per round (6 jobs of
-      // pure overhead on a bounded edge cut); lazy still
-      // materializes-once-and-reuses at first consumption, so the
-      // whole peel compiles into one job — identical results
-      g = g.join(alive, Seq("u"), "left_semi")
+      g.join(alive, Seq("u"), "left_semi")
         .join(alive.select(col("u").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint(false)
-      r += 1
-    }
-    g.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
+    }.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("vertex"), col("core_deg"))
   }
 
@@ -554,38 +476,24 @@ object Graph {
     * one and an external engine replays the whole run stage-for-stage
     * (q201's oracle). Each round costs one edge join + one (v, label)
     * weight aggregate + one argmax reduce — all vertex-keyed
-    * shuffles, lineage cut per round; communities emerge in a handful
-    * of rounds on modular graphs. `rounds` is FIXED for oracle
-    * parity; a production variant probes label churn (one-row
-    * aggregate, see connectedComponents' convergence-collect
-    * contract) and stops early. Output: (vertex, label). */
+    * shuffles; communities emerge in a handful of rounds on modular
+    * graphs. `rounds` is FIXED for oracle parity. Output: (vertex,
+    * label). */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-                       wCol: String, rounds: Int): DataFrame = {
-    val sym = edges.select(explode(array(
-        struct(col(src).as("u"), col(dst).as("v"), col(wCol).as("w")),
-        struct(col(dst).as("u"), col(src).as("v"), col(wCol).as("w"))))
-        .as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"), col("p.w").as("w"))
-      .localCheckpoint()
-    var labels = sym.select(col("u").as("v")).distinct()
-      .withColumn("lbl", col("v")).localCheckpoint()
-    var r = 0
-    while (r < rounds) {
-      // argmax via struct max: (weight sum, −label) orders first by
-      // ws descending, then by label ASCENDING — the deterministic
-      // tie-break the oracle mirrors with ORDER BY ws DESC, lbl ASC
-      labels = sym
-        .join(labels.select(col("v").as("u"), col("lbl")), "u")
-        .groupBy(col("v"), col("lbl"))
-        .agg(sum(col("w")).as("ws"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("ws"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("v"), (-col("m.nl")).as("lbl"))
-        // lazy: cut lineage without scheduling a job per round (the
-        // kCore reasoning — materialize-once at first consumption)
-        .localCheckpoint(false)
-      r += 1
+                       wCol: String, rounds: Int): DataFrame =
+    superstep { s =>
+      val sym = s.cut(symmetrize(edges, src, dst, col(wCol).as("w")))
+      s.rounds(sym.select(col("u").as("v")).distinct()
+          .withColumn("lbl", col("v")), rounds) { (labels, _) =>
+        // argmax via struct max: (weight sum, −label) orders first by
+        // ws descending, then by label ASCENDING — the deterministic
+        // tie-break the oracle mirrors with ORDER BY ws DESC, lbl ASC
+        sym.join(labels.select(col("v").as("u"), col("lbl")), "u")
+          .groupBy(col("v"), col("lbl"))
+          .agg(sum(col("w")).as("ws"))
+          .groupBy(col("v"))
+          .agg(max(struct(col("ws"), (-col("lbl")).as("nl"))).as("m"))
+          .select(col("v"), (-col("m.nl")).as("lbl"))
+      }.select(col("v").as("vertex"), col("lbl").as("label"))
     }
-    labels.select(col("v").as("vertex"), col("lbl").as("label"))
-  }
 }

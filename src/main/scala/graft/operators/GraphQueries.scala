@@ -141,17 +141,11 @@ object GraphQueries extends QueryPack {
     // a floating-point PageRank can never be (per-engine summation
     // order drifts the last ulps). Symmetric graph ⇒ no dangling
     // vertices, so the no-redistribution variant loses only
-    // floor-division remainders. Pure joins+aggregates: the whole
-    // 3-iteration DAG schedules as one job, no driver scalar per
-    // iteration.
+    // floor-division remainders. Pure joins+aggregates, no driver
+    // scalar per iteration.
     "q145_pagerank" -> ((s, d) => {
       val co = supplierCo(s, d, 10L)
-      // symmetrize by in-row explode, not unionAll-of-two-selects —
-      // a union would evaluate the whole co-occurrence aggregate twice
-      val e = co.select(explode(array(
-          struct(col("d_a").as("u"), col("d_b").as("v")),
-          struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
+      val e = Graph.symmetrize(co, "d_a", "d_b")
       Graph.pageRankInt(e, "u", "v", iters = 3)
         .select(col("v").as("suppkey"), col("rank"))
     }),
@@ -165,8 +159,7 @@ object GraphQueries extends QueryPack {
     // sort). 6 synchronous peeling rounds at k=3: long-tail shells
     // peel away round by round, the dense collaboration core survives
     // with its in-core degree. Fixed rounds keep the DAG replayable
-    // by the oracle stage-for-stage; see Graph.kCore's scaladoc for
-    // the convergence-probe variant.
+    // by the oracle stage-for-stage.
     "q196_kcore" -> ((s, d) => {
       val e = supplierCoTop2000(s, d)
       Graph.kCore(e, "d_a", "d_b", k = 3, rounds = 6)
@@ -266,10 +259,7 @@ object GraphQueries extends QueryPack {
     // changes, so the two are directly comparable rank-for-rank.
     "q289_personalized_pagerank" -> ((s, d) => {
       val co = supplierCo(s, d, 10L)
-      val e = co.select(explode(array(
-          struct(col("d_a").as("u"), col("d_b").as("v")),
-          struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
+      val e = Graph.symmetrize(co, "d_a", "d_b")
       val seeds = e.select(col("u")).distinct()
         .filter(col("u") % 50L === 0L)
       Graph.personalizedPageRankInt(e, "u", "v", seeds, "u", iters = 3)
@@ -287,10 +277,7 @@ object GraphQueries extends QueryPack {
       val co = supplierCo(s, d, 10L)
       // the edge list feeds hub pick + BOTH CC runs — checkpoint it
       // once or the co-occurrence aggregate re-runs three times
-      val e = co.select(explode(array(
-          struct(col("d_a").as("u"), col("d_b").as("v")),
-          struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
+      val e = Graph.symmetrize(co, "d_a", "d_b")
         .localCheckpoint()
       val hubs = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("u").asc).limit(5)
@@ -320,10 +307,7 @@ object GraphQueries extends QueryPack {
     // one fixed-order double expression at the end.
     "q305_assortativity" -> ((s, d) => {
       val co = supplierCo(s, d, 10L)
-      val e = co.select(explode(array(
-          struct(col("d_a").as("u"), col("d_b").as("v")),
-          struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
+      val e = Graph.symmetrize(co, "d_a", "d_b")
       val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       e.join(deg.select(col("u"), col("deg").as("dx")), Seq("u"))
         .join(deg.select(col("u").as("v"), col("deg").as("dy")),

@@ -257,9 +257,10 @@ class GraphSpec extends AnyFunSuite {
 
   test("BFS, labeled BFS and SSSP keep no persisted RDD but their " +
     "sealed result's") {
-    // each loop checkpoints its symmetrized edges, its seed frame,
-    // every hop and periodically the visited set; once the result is
-    // sealed none of them may stay persisted
+    // each loop checkpoints its symmetrized edges, its seed frame and
+    // its rounds' states; once the result is sealed none of them may
+    // stay persisted. Every other graph operator is held to the same
+    // rule, each result consumed once as a caller would.
     val sc = spark.sparkContext
     val chain = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 4L, 2L), (4L, 5L, 1L),
       (5L, 6L, 4L)).toDF("s", "d", "w")
@@ -267,6 +268,7 @@ class GraphSpec extends AnyFunSuite {
     def leftBehind(call: => org.apache.spark.sql.DataFrame): Set[Int] = {
       val before = sc.getPersistentRDDs.keySet
       val out = call
+      out.write.format("noop").mode("overwrite").save()
       val sealedRdd = out.queryExecution.logical match {
         case r: org.apache.spark.sql.execution.LogicalRDD => Set(r.rdd.id)
         case _ => Set.empty[Int]
@@ -279,5 +281,15 @@ class GraphSpec extends AnyFunSuite {
       "v0", maxHops = 10)).isEmpty)
     assert(leftBehind(Graph.ssspBounded(chain, "s", "d", "w", seeds, "v0",
       maxHops = 10)).isEmpty)
+    assert(leftBehind(Graph.pageRank(chain, "s", "d", iters = 2)).isEmpty)
+    assert(leftBehind(Graph.pageRankInt(chain, "s", "d")).isEmpty)
+    assert(leftBehind(Graph.personalizedPageRankInt(chain, "s", "d", seeds,
+      "v0")).isEmpty)
+    assert(leftBehind(Graph.connectedComponents(chain, "s", "d")).isEmpty)
+    assert(leftBehind(Graph.kCore(chain, "s", "d", k = 1, rounds = 5))
+      .isEmpty)
+    assert(leftBehind(Graph.labelPropagation(chain, "s", "d", "w",
+      rounds = 4)).isEmpty)
+    assert(leftBehind(Graph.triangleCount(chain, "s", "d")).isEmpty)
   }
 }
