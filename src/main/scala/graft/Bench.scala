@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Per-query pressure meter (r8 verdict ask #6): accumulates shuffle/
@@ -258,15 +260,19 @@ object Bench {
     // settle the warmup's + prebuilds' listener traffic so the first
     // timed query's pressure window starts clean
     busWait(); pressure.drain()
-    // per-rep (wall, spill, peak, RDDs the query left persisted); the
+    // per-rep (wall, spill, peak, RDDs the query left persisted, Janino
+    // compiles and their ms); the
     // reported tuple is the one FROM the median rep, so the pressure
     // record belongs to the run that produced the recorded wall
     // (review finding: mixing metrics from different reps). Median,
     // not min (r12 task 1): min hides real cost; median absorbs a
     // one-off GC/JIT stall without hiding a plan regression.
     def measure(name: String, fn: (SparkSession, String) => org.apache
-        .spark.sql.DataFrame, reps: Int): (Double, Long, Long, Int) = {
+        .spark.sql.DataFrame, reps: Int)
+        : (Double, Long, Long, Int, Long, Double) = {
       val repRuns = (0 until reps).map { _ =>
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val failed =
           try {
@@ -281,6 +287,9 @@ object Bench {
         busWait()
         val (sp, pk) = pressure.drain()
         val left = spark.sparkContext.getPersistentRDDs.size
+        val compiles =
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
         // operators persist reused intermediates for the duration of
         // their query; drop them (plus any leftover checkpoint RDD
         // blocks) and let the JVM settle so late queries aren't taxed
@@ -289,7 +298,7 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         System.gc()
-        (dt, sp, pk, left)
+        (dt, sp, pk, left, compiles, compileMs)
       }
       val ok = repRuns.filter(_._1 < 1e9)
       if (ok.isEmpty) repRuns.head
@@ -303,7 +312,8 @@ object Bench {
         val m = measure(name, fn, repsFor(name))
         val rt = Runtime.getRuntime
         val heapMb = (rt.totalMemory() - rt.freeMemory()) / 1048576
-        name -> ((m._1, m._2 / 1048576, m._3 / 1048576, heapMb, m._4))
+        name -> ((m._1, m._2 / 1048576, m._3 / 1048576, heapMb, m._4,
+          m._5, m._6))
     }
     // r12 task 1, second half: any query whose suite number moved
     // >1.5× vs the prior citable record in EITHER direction gets an
@@ -316,7 +326,7 @@ object Bench {
     // can't hide behind eleven larger noise movers.
     val movers: Seq[(String, Double, Double)] =
       if (forcedReps.isDefined || only.nonEmpty) Seq.empty
-      else results.flatMap { case (name, (wall, _, _, _, _)) =>
+      else results.flatMap { case (name, (wall, _, _, _, _, _, _)) =>
         priorWalls.get(name).collect {
           case prior if prior >= 0.3 && wall < 1e8 &&
             (wall > prior * 1.5 || wall < prior / 1.5) =>
@@ -400,12 +410,15 @@ object Bench {
       // memory MB (max stage aggregate), driver heap MB after the
       // post-query GC — the four numbers that separate "this plan
       // regressed" from "the suite environment squeezed this query" —
-      // and the RDDs the query left persisted before the sweep (a
-      // per-query leak)
-      val press = results.map { case (k, (w, sp, pk, hp, left)) =>
+      // the RDDs the query left persisted before the sweep (a
+      // per-query leak), and the Janino compiles the query paid for
+      // with their ms (misses of Spark's codegen cache)
+      val press = results.map {
+          case (k, (w, sp, pk, hp, left, compiles, compileMs)) =>
         "\"" + k + f"""\":{"wall":$w%.3f,"spill_mb":$sp,""" +
           f""""peak_exec_mb":$pk,"heap_after_mb":$hp,""" +
-          f""""persisted_after":$left}"""
+          f""""persisted_after":$left,"codegen_compiles":$compiles,""" +
+          f""""codegen_ms":$compileMs%.1f}"""
       }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         fullLine.dropRight(1) +

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType}
 import graft.catalog.Catalog
 import graft.catalog.Catalog.{Prop, Scope}
-import graft.sql.{Ast, ExprBuilder, Parser}
+import graft.sql.{Ast, BoundLiteral, ExprBuilder, Parser}
 import graft.sql.Ast._
 import graft.functions.{IntegralAggregator, NowFunctions}
 
@@ -47,6 +47,7 @@ class Engine(val spark: SparkSession, root: String,
   private val cursorSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   spark.udf.register("now_integral", udaf(new IntegralAggregator))
+  BoundLiteral.register(spark)
 
   // built-in pipeline procedures (dedup/ANN/curation over scope
   // tables) — preinstalled per session like the reference's proc
@@ -486,21 +487,20 @@ class Engine(val spark: SparkSession, root: String,
   }
 
   // ── cursors (reference FETCH/CLOSE protocol, ifc/nowdb.c) ─────────
-  /** Open a cursor over `df`: rows stream through `toLocalIterator`,
-    * one partition in driver memory at a time, each FETCH pulling the
+  /** Open a cursor over `df`: rows stream through [[CursorPages]], one
+    * partition in driver memory at a time, each FETCH pulling the
     * partitions its page needs. Nothing is persisted: the page jobs all
-    * run over the one RDD the iterator was made from, so a
-    * shuffle-bearing plan writes its shuffle once and every later page
-    * job skips that map stage and reads the shuffle output. A cache
-    * would only add a materialisation job and block-manager traffic.
-    * The frame is the cursor's: when the cursor closes (CLOSE,
-    * exhaustion or session end) the broadcasts its plan built are
-    * destroyed ([[Engine.releaseBroadcasts]]), so `df` must not be run
-    * again after that. */
+    * run over the one RDD the plan executed to, so a shuffle-bearing
+    * plan writes its shuffle once and every later page job skips that
+    * map stage and reads the shuffle output. A cache would only add a
+    * materialisation job and block-manager traffic. The frame is the
+    * cursor's: when the cursor closes (CLOSE, exhaustion or session end)
+    * the broadcasts its plan built are destroyed
+    * ([[Engine.releaseBroadcasts]]), so `df` must not be run again
+    * after that. */
   def openCursor(df: DataFrame): Long = {
-    import scala.jdk.CollectionConverters._
     val id = cursorSeq.incrementAndGet()
-    cursors += id -> (df.toLocalIterator().asScala, df.schema, df)
+    cursors += id -> (CursorPages(df), df.schema, df)
     id
   }
 

@@ -160,8 +160,8 @@ object LuaProcs {
     t
   }
 
-  /** Cursor over a SELECT result. Rows stream through
-    * `toLocalIterator` — one partition in driver memory at a time, so
+  /** Cursor over a SELECT result. Rows stream through [[CursorPages]]
+    * as a wire cursor's do — one partition in driver memory at a time, so
     * a proc can fold over a result far larger than the driver heap
     * (the reference pages cursors the same way, ifc/nowdb.c
     * fetch loop). `field(i)` reads the FIRST row lazily for the
@@ -170,7 +170,7 @@ object LuaProcs {
     val t = new LTable
     t.set(LStr("__kind"), LStr("cursor"))
     t.set(LStr("__df"), LOpaque(df))
-    var it: java.util.Iterator[Row] = null
+    var it: Iterator[Row] = null
     var first: IndexedSeq[Any] = null
     def firstRow(): IndexedSeq[Any] = {
       if (first == null)
@@ -195,9 +195,8 @@ object LuaProcs {
       Seq(if (i >= 0 && i < r.length) toLua(r(i)) else LNil)
     }
     reg("rows") { _ =>
-      // no cache, as in Engine.openCursor: the per-partition page jobs
-      // share one RDD, so a shuffle runs once
-      if (it == null) it = df.toLocalIterator()
+      // each rows() after the last one ran dry iterates afresh
+      if (it == null) it = CursorPages(df)
       val iter = LBuiltin("cursor-rows-it", { _ =>
         if (it != null && it.hasNext)
           Seq(rowTable(it.next().toSeq.toIndexedSeq))

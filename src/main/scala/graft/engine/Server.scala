@@ -130,19 +130,19 @@ private[engine] object Wire {
     val r = new Reply
     try eng.sql(stmt) match {
       case b @ Batch(rows, schema, _) =>
-        r.line(head(b, eng))
-        r.line("#" + schema.fieldNames.map(esc).mkString("\t"))
+        head(r, b, eng)
+        r.byte('#')
+        r.cells(schema.length)(i => schema.fields(i).name)
         if (binary) binaryRows(r, b)
         else rows.foreach { row =>
-          r.line(schema.indices.map { i =>
-            if (row.isNullAt(i)) "\\N" else esc(String.valueOf(row.get(i)))
-          }.mkString("\t"))
+          r.cells(schema.length)(i =>
+            if (row.isNullAt(i)) null else String.valueOf(row.get(i)))
         }
-      case other => r.line(head(other, eng))
+      case other => head(r, other, eng)
     } catch {
       case e: Exception =>
         r.reset()
-        r.line(s"-err ${esc(String.valueOf(e.getMessage))}")
+        head(r, Status(ok = false, String.valueOf(e.getMessage)), eng)
     }
     r.writeTo(out)
   }
@@ -152,10 +152,6 @@ private[engine] object Wire {
     out.write((line + "\n").getBytes(UTF_8))
     out.flush()
   }
-
-  def esc(s: String): String = s
-    .replace("\\", "\\\\").replace("\t", "\\t")
-    .replace("\r", "\\r").replace("\n", "\\n")
 
   /** One reply's bytes, grown as it renders; allocated per reply, so
     * no session keeps a large page's buffer alive. */
@@ -170,6 +166,65 @@ private[engine] object Wire {
       room(a.length); System.arraycopy(a, 0, buf, n, a.length); n += a.length
     }
     def line(s: String): Unit = { bytes(s.getBytes(UTF_8)); byte('\n') }
+    /** `s`, all of whose chars are ASCII, byte for byte. */
+    def ascii(s: String): Unit = {
+      room(s.length)
+      var i = 0
+      while (i < s.length) { buf(n + i) = s.charAt(i).toByte; i += 1 }
+      n += s.length
+    }
+    /** `s` as UTF-8 with backslash, tab, CR and LF escaped `\\` `\t`
+      * `\r` `\n`, in one pass over its chars; an unpaired surrogate
+      * becomes `?`, as `String.getBytes(UTF_8)` writes it. */
+    def escaped(s: String): Unit = {
+      room(3 * s.length) // an escape is 2 bytes, a char at most 3
+      var i = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c < 0x80) {
+          val e = c match {
+            case '\\' => '\\'
+            case '\t' => 't'
+            case '\r' => 'r'
+            case '\n' => 'n'
+            case _ => 0
+          }
+          if (e == 0) { buf(n) = c.toByte; n += 1 }
+          else { buf(n) = '\\'; buf(n + 1) = e.toByte; n += 2 }
+        } else if (c < 0x800) {
+          buf(n) = (0xc0 | (c >> 6)).toByte
+          buf(n + 1) = (0x80 | (c & 0x3f)).toByte
+          n += 2
+        } else if (!Character.isSurrogate(c)) {
+          buf(n) = (0xe0 | (c >> 12)).toByte
+          buf(n + 1) = (0x80 | ((c >> 6) & 0x3f)).toByte
+          buf(n + 2) = (0x80 | (c & 0x3f)).toByte
+          n += 3
+        } else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+                   Character.isLowSurrogate(s.charAt(i + 1))) {
+          val cp = Character.toCodePoint(c, s.charAt(i + 1))
+          buf(n) = (0xf0 | (cp >> 18)).toByte
+          buf(n + 1) = (0x80 | ((cp >> 12) & 0x3f)).toByte
+          buf(n + 2) = (0x80 | ((cp >> 6) & 0x3f)).toByte
+          buf(n + 3) = (0x80 | (cp & 0x3f)).toByte
+          n += 4
+          i += 1
+        } else { buf(n) = '?'; n += 1 }
+        i += 1
+      }
+    }
+    /** One text line of `k` tab-separated cells, `cell(i)` escaped;
+      * a null cell is written `\N`. */
+    def cells(k: Int)(cell: Int => String): Unit = {
+      var i = 0
+      while (i < k) {
+        if (i > 0) byte('\t')
+        val c = cell(i)
+        if (c == null) ascii("\\N") else escaped(c)
+        i += 1
+      }
+      byte('\n')
+    }
     /** 8 little-endian bytes. */
     def long(v: Long): Unit = {
       room(8)
@@ -229,16 +284,17 @@ private[engine] object Wire {
   }
 
   /** The head line of a result, the same in both row framings. */
-  private def head(res: Result, eng: Engine): String = res match {
-    case Status(true, m) => if (m.isEmpty) "+ok" else s"+ok ${esc(m)}"
-    case Status(false, m) => s"-err ${esc(m)}"
-    case Report(loaded, errors) => s"+report $loaded $errors"
+  private def head(r: Reply, res: Result, eng: Engine): Unit = res match {
+    case Status(true, "") => r.line("+ok")
+    case Status(ok, m) =>
+      r.ascii(if (ok) "+ok " else "-err "); r.escaped(m); r.byte('\n')
+    case Report(loaded, errors) => r.line(s"+report $loaded $errors")
     case Rows(df) =>
       // every remote result is a cursor (reference sendCursor,
       // ifc/nowdb.c:1185): the client decides the paging cadence
-      s"+cursor ${eng.openCursor(df)}"
-    case CursorRef(id) => s"+cursor $id"
-    case b: Batch => s"+batch ${b.rows.length} ${if (b.more) 1 else 0}"
+      r.line(s"+cursor ${eng.openCursor(df)}")
+    case CursorRef(id) => r.line(s"+cursor $id")
+    case b: Batch => r.line(s"+batch ${b.rows.length} ${if (b.more) 1 else 0}")
   }
 }
 

@@ -63,14 +63,15 @@ object ExprBuilder {
     declaredType(e, ctx).exists(t => t == "time" || t == "date")
 
   /** Coerce a literal to the ns-stamp domain when compared to a
-    * TIME/DATE field. */
+    * TIME/DATE field; the stamp is a [[BoundLiteral]] like any other
+    * numeric constant. */
   private def coercePair(l: Expr, r: Expr, ctx: Ctx): (Column, Column) = {
     (l, r) match {
       case (f, Lit(s: String, "string")) if isTimeField(f, ctx) =>
-        (build(f, ctx), lit(parseTime(s).getOrElse(
+        (build(f, ctx), BoundLiteral(parseTime(s).getOrElse(
           throw new IllegalArgumentException(s"bad time literal '$s'"))))
       case (Lit(s: String, "string"), f) if isTimeField(f, ctx) =>
-        (lit(parseTime(s).getOrElse(
+        (BoundLiteral(parseTime(s).getOrElse(
           throw new IllegalArgumentException(s"bad time literal '$s'"))),
           build(f, ctx))
       case _ => (build(l, ctx), build(r, ctx))
@@ -170,6 +171,8 @@ object ExprBuilder {
 
   def build(e: Expr, ctx: Ctx = Map.empty): Column = e match {
     case Lit(null, _) => lit(null)
+    // numeric constants are bound, so one statement shape compiles once
+    case Lit(v @ (_: Long | _: Double), _) => BoundLiteral(v)
     case Lit(v, _) => lit(v)
     case f: Field => fieldCol(f)
     case OuterRef(f, _) => fieldCol(f).outer()
