@@ -1,26 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Depth probe for the recursive-CTE fixpoint (r15 verdict task 8):
-  * drives an N-node single-successor ring — one new node per round,
-  * the worst case for UNION-distinct recursion — through the engine
-  * and reports wall clock per round. The per-round series (printed
-  * every 30 rounds via `graft.recursion.debugRounds`) is the SCALING
-  * §15 evidence: plan width and persisted-block census stay constant
-  * with depth, while absolute per-round wall creeps from driver
-  * bookkeeping accumulation in a long-lived context.
+/** Depth probe for the recursive-CTE fixpoint: drives an N-node
+  * single-successor ring — one new node per round, the worst case for
+  * UNION-distinct recursion — through the engine and prints the wall
+  * clock, the mean per round and the persisted-RDD census after the
+  * query (the SCALING §15 evidence that memory stays flat with depth).
   *
-  * Usage: `sbt "runMain graft.RingProbe 999"`. Env knobs: WSCG/AQE
+  * Usage: `sbt "runMain graft.RingProbe 999"`. The session comes from
+  * [[Sessions.builder]] (`SPARK_GRAFT_CPUS` cores). Env knobs: WSCG/AQE
   * ("false" to disable codegen / adaptive execution), ABJT (auto
   * broadcast threshold) — used to attribute the per-round floor.
   */
 object RingProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
+    val spark = Sessions.builder()
       .config("spark.sql.codegen.wholeStage",
         sys.env.getOrElse("WSCG", "true"))
       .config("spark.sql.adaptive.enabled",
@@ -38,7 +31,6 @@ object RingProbe {
     val eng = new graft.engine.Engine(spark,
       java.nio.file.Files.createTempDirectory("ringprobe").toString)
     eng.script("create scope rp; use rp")
-    spark.conf.set("graft.recursion.debugRounds", "true")
     val n = args.headOption.map(_.toInt).getOrElse(120)
     eng.attachTable("ring", spark.range(0, n).toDF("v"))
     val t0 = System.nanoTime()

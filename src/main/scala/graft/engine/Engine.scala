@@ -6,7 +6,13 @@ import java.util.concurrent.TimeUnit
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.collection.mutable
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSparkInternals, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType}
 import graft.catalog.Catalog
@@ -647,15 +653,25 @@ class Engine(val spark: SparkSession, root: String,
     * (never the accumulated set), unions the new rows in, and stops
     * when a round yields nothing. UNION (distinct) additionally
     * drops rows already seen — the fixpoint form that terminates on
-    * cyclic data. Scale shape: each round is one distributed plan
-    * over the delta (a keyed join when the step joins real tables);
-    * every delta is localCheckpoint'ed so lineage never grows with
-    * the iteration count (same discipline as operators/Graph.scala),
-    * and the accumulated result is a shallow union of checkpointed
-    * legs. Driver state is one boolean per round (isEmpty), never
-    * row data. Depth-capped at [[Engine.maxRecursionRounds]] with a
-    * named error — an unbounded recursive step is a user error, not
-    * a hang. */
+    * cyclic data. The step is cast to the base term's column types.
+    *
+    * Every row the loop holds is an `UnsafeRow` the round's executed
+    * plan produced, in one of two tiers chosen by their exact bytes
+    * against `graft.recursion.broadcastSeenBytes`:
+    *  - driver tier (at or under the gate): each round is one job that
+    *    collects the step, whose frontier binds as a broadcast-hinted
+    *    `LocalRelation`; UNION dedups in a hash set of float-normalized
+    *    rows, whose byte equality is the one Spark's `distinct` uses;
+    *  - distributed tier (over it): each round's delta is one
+    *    localCheckpoint'ed leg, UNION drops seen rows with an anti-join
+    *    against the union of legs, and the legs fold into one every
+    *    [[Engine.recursionCompactLegs]] rounds so lineage, task closures
+    *    and the persisted-block census stay bounded at any depth.
+    * The loop starts in the driver tier and hands its rows over as one
+    * leg the round they overflow the gate. Depth-capped at
+    * [[Engine.maxRecursionRounds]] (`graft.recursion.maxRounds`) with a
+    * named error — an unbounded recursive step is a user error, not a
+    * hang. */
   private def buildRecursiveCte(b: CteBinding): DataFrame = {
     val nl = b.name.toLowerCase
     // 1) split `base UNION [ALL] step` — flatten the top-level UNION
@@ -751,466 +767,227 @@ class Engine(val spark: SparkSession, root: String,
         base0.toDF(b.cols: _*)
       }
     val cols = base1.columns.toSeq
+    // every tier holds rows of this schema: the base term's types, all
+    // nullable because the step may yield nulls where the base has none
+    val schema = StructType(base1.schema.map(_.copy(nullable = true)))
     // 4) iterate
     val maxRounds = spark.conf
       .get("graft.recursion.maxRounds", Engine.maxRecursionRounds.toString)
       .toInt
+    val gate = spark.conf
+      .get("graft.recursion.broadcastSeenBytes", "33554432").toLong
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val saved = cteBindings.get
-    // the one-job-per-round scheme below marks the round delta for
-    // RDD localCheckpoint and lets the seen-union's count job force
-    // it; by default Spark only truncates the job's FINAL marked RDD
-    // (doCheckpoint does not descend once it finds checkpoint data),
-    // so the delta's lineage would never cut and round R's task
-    // closures would serialize R nested plans — stack overflow at
-    // three-digit depths (ring probe). This thread-local property
-    // makes every job checkpoint ALL marked ancestors.
+    // each distributed round marks its delta for RDD localCheckpoint
+    // and lets the count job force it; by default Spark only truncates
+    // the job's FINAL marked RDD (doCheckpoint does not descend once it
+    // finds checkpoint data), so the delta's lineage would never cut
+    // and round R's task closures would serialize R nested plans —
+    // stack overflow at three-digit depths (ring probe). This
+    // thread-local property makes every job checkpoint ALL marked
+    // ancestors.
     val sc = spark.sparkContext
     val ancestorsKey = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevAncestors = sc.getLocalProperty(ancestorsKey)
     sc.setLocalProperty(ancestorsKey, "true")
-    val bindingRdds = mutable.ArrayBuffer[org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow]]()
+    val bindingRdds = mutable.ArrayBuffer[RDD[InternalRow]]()
     try {
-      // Materialize a round frame with a TRUNCATED identity, in ONE
-      // job: persist the plan's InternalRow RDD and count it (the
-      // count doubles as the emptiness probe, folding what used to
-      // be a separate isEmpty job into the materialization), then
-      // re-wrap the bytes through the GraftSparkInternals bridge.
-      // The bridge matters: localCheckpoint preserves the origin
-      // plan's attribute ids AND constraints in its LogicalRDD, so a
-      // step that projects a scanned column verbatim (`select r2.v
-      // from reach join ring r2 …`) emits the SAME attribute id
-      // every round and carries constraints referencing attributes
-      // outside its own output — Catalyst's Union.rewriteConstraints
-      // faults on exactly that (key-not-found, reproduced by
-      // DeepRecursionSpec's 999-round ring). The row .copy() is
-      // required: toRdd serves reused UnsafeRow buffers.
-      // Materialize a round frame in ONE job, with truncated
-      // identity AND truncated lineage: RDD-level localCheckpoint
-      // persists the InternalRow bytes and cuts the parent chain at
-      // the first job (the count — which doubles as the emptiness
-      // probe, folding what used to be a separate isEmpty job into
-      // the materialization). Then re-wrap through the
-      // GraftSparkInternals bridge: Dataset.localCheckpoint would
-      // preserve the origin plan's attribute ids and constraints in
-      // its LogicalRDD, and a step that projects a scanned column
-      // verbatim (`select r2.v from reach join ring r2 …`) then
-      // emits the SAME attribute id every round with constraints
-      // referencing attributes outside its own output — Catalyst's
-      // Union.rewriteConstraints faults on exactly that
-      // (key-not-found, reproduced by DeepRecursionSpec's ring).
-      // The row .copy() is required: toRdd serves reused UnsafeRow
-      // buffers. A bare persist() instead of localCheckpoint keeps
-      // the whole parent chain alive — at three-digit round counts
-      // the nested task closures overflow the stack (ring probe).
-      def wrap(rdd: org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow],
-          schema: StructType): DataFrame =
-        org.apache.spark.sql.GraftSparkInternals.wrapInternal(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          rdd, schema)
-      def materialize(df: DataFrame)
-          : (DataFrame, Long, org.apache.spark.rdd.RDD[
-              org.apache.spark.sql.catalyst.InternalRow]) = {
-        val rdd = df.queryExecution.toRdd.map(_.copy())
-          .localCheckpoint()
-        val cnt = rdd.count()
-        (wrap(rdd, df.schema), cnt, rdd)
+      // Re-wrap checkpointed rows with fresh attribute ids and no
+      // constraints (see GraftSparkInternals for the fault this avoids).
+      def wrap(rdd: RDD[InternalRow], s: StructType): DataFrame =
+        GraftSparkInternals.wrapInternal(session, rdd, s)
+      // ONE job: persist the plan's rows with a cut lineage, and count
+      // them and their bytes. The copy is required: toRdd serves reused
+      // UnsafeRow buffers.
+      def materialize(df: DataFrame): (RDD[InternalRow], Long, Long) = {
+        val rdd = df.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+        val sizes = sc.runJob(rdd, FixpointJobs.countBytes)
+        (rdd, sizes.map(_._1).sum, sizes.map(_._2).sum)
       }
       // Non-recursive CTE bindings the recursive term references are
       // LAZY plans — left alone, every round's step re-executes them
       // in full (q418's ring re-scanned + re-deduplicated its edge
-      // CTE's source table 60 times; q409 re-built a 2-scan UNION ALL
-      // each round). Materialize each once as checkpointed
-      // InternalRows and rebind for the loop: rounds then join
-      // against cached bytes, and per-round cost no longer carries
-      // the CTE's build. The materialized binding RDDs are unpersisted
-      // once the fixpoint exits (the returned frame is backed by the
-      // packed legs / local rows, never by the bindings) — without
-      // that a long-lived driver accumulates dead persisted blocks
-      // until the ContextCleaner happens to GC them (advice finding).
+      // CTE's source table 60 times). Plain ATTACHED tables the step
+      // joins are re-read from storage every round too (q410 re-decoded
+      // its parquet fact table once per walk level). Snapshot each once
+      // as checkpointed rows and rebind for the loop; an attached table
+      // only under a byte bound read from the optimizer's own size
+      // estimate, so a 100 TB edge table keeps streaming. Only attached
+      // tables WITHOUT declared time columns are eligible: typeCtx
+      // derives their kinds from the frame schema exactly as it does
+      // for CTE bindings, so shadowing cannot change expression typing.
+      // The returned frame never reads the snapshots, so they retire
+      // when the fixpoint exits.
+      def snapshot(n: String, df: DataFrame): (String, DataFrame) = {
+        val (rdd, _, _) = materialize(df)
+        bindingRdds += rdd
+        n -> wrap(rdd, df.schema)
+      }
       val loopRefs = referencedTables(rec).map(_.toLowerCase).distinct
+        .filter(_ != nl)
       val loopBindings: Map[String, DataFrame] = saved ++
-        loopRefs
-          .filter(n => n != nl && saved.contains(n))
-          .map { n =>
-            val (df, _, r) = materialize(saved(n))
-            bindingRdds += r
-            n -> df
-          } ++
-        // Plain ATTACHED tables the step joins are re-read from
-        // storage every round too (q410 re-decoded its parquet fact
-        // table once per walk level — the dominant per-round cost).
-        // Snapshot small ones once behind a byte gate read from the
-        // optimizer's own size estimate (parquet file bytes), so a
-        // 100 TB edge table keeps streaming while a bounded dimension
-        // iterates against cached bytes. Only attached tables WITHOUT
-        // declared time columns are eligible: typeCtx derives their
-        // kinds from the frame schema exactly as it does for CTE
-        // bindings, so shadowing cannot change expression typing
-        // (scope tables type from catalog props and stay unshadowed).
-        loopRefs
-          .filter(n => n != nl && !saved.contains(n) &&
-            attached.contains(n) &&
-            attachedTimeCols.getOrElse(n, Set.empty).isEmpty)
-          .flatMap { n =>
-            val df = attached(n)
-            val cacheTableBytes = spark.conf
-              .get("graft.recursion.cacheTableBytes", "67108864").toLong
-            val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-            if (est <= cacheTableBytes) {
-              val (m, _, r) = materialize(df)
-              bindingRdds += r
-              Some(n -> m)
-            } else None
-          }
-      val (f0, f0n, f0r) = materialize(
-        if (distinctMode) base1.distinct() else base1)
-      var frontier = f0
-      // UNION ALL mode: the result is the union of every round's leg,
-      // so all legs stay persisted until the consumer is done.
-      // Distinct mode never reads the legs (the result IS the seen
-      // frame), so it skips the buffer and instead RETIRES superseded
-      // blocks each round — without that, D rounds leave D persisted
-      // seen-snapshots behind and per-round wall creeps up with
-      // depth (measured: 326→404 ms/round from ring-120 to ring-240
-      // before the unpersists).
-      val legs = mutable.ArrayBuffer[DataFrame]()
-      if (!distinctMode) legs += frontier
-      // Distinct mode keeps the cumulative seen-set as a FLAT RDD
-      // union of checkpointed per-round delta legs — sc.union is
-      // O(1) driver work and, unlike re-materializing `seen ∪ delta`
-      // every round (the r15-mid-build scheme), the per-round count
-      // job scans only the DELTA, so a D-round fixpoint does O(|D|)
-      // total count work instead of O(D·|total|) re-scans. The legs
-      // buffer is compacted into one checkpointed frame every
-      // `compactEvery` rounds, so task-closure size (one RDD ref per
-      // leg) and partition count stay bounded at any depth
-      // (DeepRecursionSpec holds a 999-round ring flat). Plan width
-      // is still CONSTANT: the union happens at the RDD layer, one
-      // LogicalRDD leaf regardless of leg count.
-      // seen is wrapped SEPARATELY from frontier (fresh attribute
-      // ids): the anti-join below references both sides, and sharing
-      // ids with the step's projection would make the join condition
-      // self-referential (trivially true) on the first round.
-      var seen: DataFrame =
-        if (distinctMode) wrap(f0r, base1.schema) else null
-      var seenN: Long = f0n
-      val seenLegs = mutable.ArrayBuffer[org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow]]()
-      if (distinctMode) seenLegs += f0r
-      val compactEvery = spark.conf
-        .get("graft.recursion.compactLegs", "32").toInt
-      // The broadcast gate: the optimizer sees only stats-less
-      // LogicalRDDs (default size = huge) so left alone every round
-      // pays a two-sided shuffle SortMergeJoin; WE know the seen
-      // set's exact cardinality from the counts the loop already
-      // takes. Below the byte bound the anti-join build side is
-      // broadcast (one shuffle per round instead of three); above
-      // it the planner's shuffle join is kept — the gate is data-
-      // driven, not a local-mode constant.
-      val bcSeenBytes = spark.conf
-        .get("graft.recursion.broadcastSeenBytes", "33554432").toLong
-      // Gate on MEASURED bytes, not schema.defaultSize (advice
-      // finding): defaultSize prices strings/binary/arrays at ~20
-      // bytes, so a wide-string seen set could pass the 32 MB gate
-      // while actually being GBs — sample the materialized base leg's
-      // UnsafeRow sizes and take the max of both estimates.
-      val rowEstBytes: Long = {
-        val sample = f0r.take(64)
-        val measured =
-          if (sample.isEmpty) 0L
-          else sample.map {
-            case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-              u.getSizeInBytes.toLong
-            case _ => base1.schema.defaultSize.toLong
-          }.sum / sample.length
-        math.max(1L, math.max(base1.schema.defaultSize.toLong, measured))
-      }
-      var deferRetire: org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow] = null
-      // fold leg RDDs into ONE checkpointed, narrowly-coalesced RDD
-      def packLegs(ls: Seq[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]])
-          : org.apache.spark.rdd.RDD[
-            org.apache.spark.sql.catalyst.InternalRow] = {
-        val packed = sc.union(ls)
-          .coalesce(math.max(1, math.min(
-            ls.map(_.getNumPartitions).max, sc.defaultParallelism)))
-          .localCheckpoint()
-        packed.count()
-        packed
-      }
-      var rounds = 0
-      var done = f0n == 0
-      val dbgRounds = spark.conf
-        .get("graft.recursion.debugRounds", "false") == "true"
-
-      // ── Driver-resident fast path (r16, guide §3.1/§5) ───────────
-      // Below the SAME byte gate that already shipped the seen set to
-      // the driver for a broadcast build EVERY round, keep the
-      // accumulated rows at the driver ONCE and make each round a
-      // single job: the frontier binds as a broadcast-hinted
-      // LocalRelation (its broadcast builds driver-side, zero tasks),
-      // the step's rows are collected (bounded by the gate), and the
-      // dedup-against-seen runs on a driver hash set. The r15 scheme
-      // ran ~6 jobs/round on q418's 60-round ring (357 stages: a
-      // BroadcastExchange collect job that re-scanned ALL seen legs,
-      // AQE shuffle-stage jobs for the distinct, the delta count) —
-      // this path runs exactly one. Over the gate — or the moment a
-      // round's output or the accumulated set overflows it — the
-      // distributed anti-join path below takes over, so the choice is
-      // data-driven bytes, never a local-mode constant.
-      def hasMapType(dt: org.apache.spark.sql.types.DataType): Boolean =
-        dt match {
-          case _: org.apache.spark.sql.types.MapType => true
-          case s: StructType => s.fields.exists(f => hasMapType(f.dataType))
-          case a: org.apache.spark.sql.types.ArrayType =>
-            hasMapType(a.elementType)
-          case _ => false
-        }
-      // Spark's set semantics normalize -0.0 to 0.0 and treat
-      // NaN = NaN (NormalizeFloatingNumbers on join/grouping keys);
-      // driver-side rows must reproduce both: stored values get -0.0
-      // flipped to 0.0 (what a normalized shuffle would have written),
-      // set keys additionally collapse NaN (Scala == on boxed doubles
-      // is primitive ==, where NaN != NaN) and wrap byte arrays
-      // (reference equality otherwise).
-      def normVal(v: Any): Any = v match {
-        case d: java.lang.Double =>
-          if (d.doubleValue() == 0.0d) java.lang.Double.valueOf(0.0d) else d
-        case f: java.lang.Float =>
-          if (f.floatValue() == 0.0f) java.lang.Float.valueOf(0.0f) else f
-        case r: Row => Row.fromSeq(r.toSeq.map(normVal))
-        case s: Seq[_] => s.map(normVal)
-        case other => other
-      }
-      def keyVal(v: Any): Any = v match {
-        case d: java.lang.Double if d.isNaN => "\u0000NaN:d"
-        case f: java.lang.Float if f.isNaN => "\u0000NaN:f"
-        case b: Array[Byte] => b.toSeq
-        case r: Row => r.toSeq.map(keyVal).toList
-        case s: Seq[_] => s.map(keyVal).toList
-        case other => other
-      }
-      def keyOf(r: Row): Seq[Any] = r.toSeq.map(keyVal)
-      // conservative external-row byte estimate for the driver gate
-      def extBytes(v: Any): Long = v match {
-        case null => 8L
-        case s: String => 24L + 2L * s.length
-        case b: Array[Byte] => 24L + b.length
-        case sq: Seq[_] => 24L + sq.map(extBytes).sum
-        case r: Row => 16L + r.toSeq.map(extBytes).sum
-        case _ => 8L
-      }
-      def extRowBytes(r: Row): Long = 16L + r.toSeq.map(extBytes).sum
-      import scala.jdk.CollectionConverters._
-      val maxDriverRows: Long =
-        math.min(4000000L, math.max(1024L, bcSeenBytes / rowEstBytes))
-      val resultRows = mutable.ArrayBuffer[Row]()
-      val seenKeys = mutable.HashSet[Seq[Any]]()
-      var frontRows: Seq[Row] = Nil
-      var driverBytes = 0L
-      var driverMode =
-        !base1.schema.fields.exists(f => hasMapType(f.dataType)) &&
-          f0n > 0 && f0n <= maxDriverRows
-      if (driverMode) {
-        wrap(f0r, base1.schema).collect().foreach { r0 =>
-          val r = normVal(r0).asInstanceOf[Row]
-          if (distinctMode) {
-            val k = keyOf(r)
-            if (!seenKeys.contains(k)) { seenKeys += k; resultRows += r }
-          } else resultRows += r
-        }
-        frontRows = resultRows.toSeq
-        driverBytes = resultRows.iterator.map(extRowBytes).sum
-        if (driverBytes > bcSeenBytes) {
-          resultRows.clear(); seenKeys.clear(); frontRows = Nil
-          driverMode = false
-        }
-      }
-      // fold the driver-resident state back into the distributed
-      // loop's invariants (called when the gate overflows mid-loop)
-      def switchToDistributed(): Unit = {
-        val (allF, allN, allR) = materialize(
-          spark.createDataFrame(resultRows.asJava, base1.schema))
-        val (fF, _, _) = materialize(
-          spark.createDataFrame(frontRows.asJava, base1.schema))
-        if (distinctMode) {
-          seenLegs.foreach(_.unpersist(false))
-          seenLegs.clear()
-          seenLegs += allR
-          seen = wrap(allR, base1.schema)
-          seenN = allN
-        } else {
-          f0r.unpersist(false)
-          legs.clear()
-          legs += allF
-        }
-        frontier = fF
-        resultRows.clear(); seenKeys.clear(); frontRows = Nil
-        driverMode = false
-      }
-
-      def distributedRound(): Unit = {
+        loopRefs.filter(saved.contains).map(n => snapshot(n, saved(n))) ++
+        loopRefs.filter(n => !saved.contains(n) && attached.contains(n) &&
+            attachedTimeCols.getOrElse(n, Set.empty).isEmpty &&
+            attached(n).queryExecution.optimizedPlan.stats.sizeInBytes <=
+              Engine.recursionCacheTableBytes)
+          .map(n => snapshot(n, attached(n)))
+      // the step over a frontier, cast to the loop schema's types
+      // positionally (output names may repeat or need backticks; the
+      // loop's rows take their names from `schema` alone)
+      def stepOver(frontier: DataFrame): DataFrame = {
         cteBindings.set(loopBindings + (nl -> frontier))
-        val stepRaw = buildSelect(rec)
-        if (stepRaw.columns.length != cols.length)
+        val s = buildSelect(rec)
+        if (s.columns.length != cols.length)
           throw new IllegalArgumentException(
             s"recursive CTE ${b.name}: the recursive term produces " +
-              s"${stepRaw.columns.length} columns, expected " +
-              s"${cols.length}")
-        val step = stepRaw.toDF(cols: _*)
-        // distinct mode: drop rows already seen — ONE anti-join of
-        // the round's step against the cumulative seen frame,
-        // deduplicated after (LeftAnti + Distinct is exactly what
-        // Catalyst rewrites EXCEPT to, with the same null-safe `<=>`
-        // keys — spelling it out lets us pick the build side).
-        if (!distinctMode) {
-          val (delta, deltaN, _) = materialize(step)
-          if (deltaN == 0) done = true
-          else { frontier = delta; legs += delta }
-        } else {
-          val planT0 = System.nanoTime()
-          // both sides renamed POSITIONALLY to fresh unique names
-          // (advice finding: name-based `col("__rec_s.`c`")` faults
-          // on duplicate or backticked output columns); the rename
-          // projections also give each side fresh attribute ids, so
-          // resolution survives Catalyst's relation deduplication
-          // even when step projects a frontier column verbatim
-          val sNames = cols.indices.map(i => s"__rec_s$i")
-          val vNames = cols.indices.map(i => s"__rec_v$i")
-          val sAl = step.toDF(sNames: _*)
-          val vAl = seen.toDF(vNames: _*)
-          val antiCond = cols.indices.map(i =>
-            col(sNames(i)) <=> col(vNames(i))).reduce(_ && _)
-          val pruned =
-            (if (seenN * rowEstBytes <= bcSeenBytes)
-              sAl.join(broadcast(vAl), antiCond, "left_anti")
-            else sAl.join(vAl, antiCond, "left_anti")).toDF(cols: _*)
-          val buildT = System.nanoTime()
-          // ONE counted job per round, and it scans ONLY the delta:
-          // the checkpoint is forced by the delta count itself.
-          val qe = pruned.distinct().queryExecution
-          val optT0 = System.nanoTime()
-          qe.optimizedPlan // force analysis+optimization separately
-          val optT1 = System.nanoTime()
-          val deltaRdd = qe.toRdd
-            .map(_.copy()).localCheckpoint()
-          if (dbgRounds && rounds % 30 == 0)
-            System.err.println(f"[graft-rec]   plan: " +
-              f"${(System.nanoTime() - planT0) / 1e6}%.0f ms " +
-              f"(build ${(buildT - planT0) / 1e6}%.0f, " +
-              f"analyze+opt ${(optT1 - optT0) / 1e6}%.0f, " +
-              f"phys ${(System.nanoTime() - optT1) / 1e6}%.0f)")
-          val deltaN = deltaRdd.count()
-          // a frontier deferred at the last compaction was consumed
-          // by the count job above — safe to retire its blocks now
-          if (deferRetire != null) {
-            deferRetire.unpersist(false); deferRetire = null
-          }
-          if (deltaN == 0) { deltaRdd.unpersist(false); done = true }
-          else {
-            seenLegs += deltaRdd
-            seenN += deltaN
-            frontier = wrap(deltaRdd, frontier.schema)
-            if (seenLegs.length >= compactEvery) {
-              // compact: fold the legs into one checkpointed frame
-              // (narrow coalesce bounds partition growth), retire
-              // the superseded blocks. The newest leg doubles as the
-              // live frontier — its retirement is DEFERRED until the
-              // next round's count has consumed it.
-              val packed = packLegs(seenLegs.toSeq)
-              seenLegs.foreach(l =>
-                if (l ne deltaRdd) l.unpersist(false))
-              deferRetire = deltaRdd
-              seenLegs.clear()
-              seenLegs += packed
-            }
-            seen =
-              if (seenLegs.length == 1) wrap(seenLegs.head, seen.schema)
-              else wrap(sc.union(seenLegs.toSeq), seen.schema)
-          }
-        }
+              s"${s.columns.length} columns, expected ${cols.length}")
+        val tmp = cols.indices.map(i => s"__rec_t$i")
+        s.toDF(tmp: _*).select(schema.fields.toSeq.zip(tmp).map {
+          case (f, t) => col(t).cast(f.dataType)
+        }: _*)
       }
 
-      while (!done) {
-        val roundT0 = System.nanoTime()
-        rounds += 1
-        if (rounds > maxRounds)
-          throw new IllegalStateException(
-            s"recursive CTE ${b.name} exceeded $maxRounds rounds — " +
-              "add a depth bound to the recursive term (or raise " +
-              "graft.recursion.maxRounds)")
-        if (driverMode) {
-          val localFrontier = broadcast(spark.createDataFrame(
-            frontRows.asJava, base1.schema))
-          cteBindings.set(loopBindings + (nl -> localFrontier))
-          val stepRaw = buildSelect(rec)
-          if (stepRaw.columns.length != cols.length)
-            throw new IllegalArgumentException(
-              s"recursive CTE ${b.name}: the recursive term produces " +
-                s"${stepRaw.columns.length} columns, expected " +
-                s"${cols.length}")
-          val step = stepRaw.toDF(cols: _*)
-          // ONE job: collect the step, capped one past the gate so an
-          // overflowing round is detected (its truncated result is
-          // discarded and the round re-runs distributed)
-          val taken = step.limit(maxDriverRows.toInt + 1).collect()
-          if (taken.length > maxDriverRows) {
-            switchToDistributed()
-            distributedRound()
-          } else {
-            val fresh = mutable.ArrayBuffer[Row]()
-            taken.foreach { r0 =>
-              val r = normVal(r0).asInstanceOf[Row]
-              if (distinctMode) {
-                val k = keyOf(r)
-                if (!seenKeys.contains(k)) { seenKeys += k; fresh += r }
-              } else fresh += r
-            }
-            if (fresh.isEmpty) done = true
-            else {
-              resultRows ++= fresh
-              frontRows = fresh.toSeq
-              driverBytes += fresh.iterator.map(extRowBytes).sum
-              if (driverBytes > bcSeenBytes) switchToDistributed()
-            }
-          }
-        } else distributedRound()
-        if (dbgRounds && rounds % 30 == 0)
-          System.err.println(f"[graft-rec] round $rounds: " +
-            f"${(System.nanoTime() - roundT0) / 1e6}%.0f ms")
+      // driver tier: every row so far, the distinct-mode set over them
+      // and their bytes
+      val rows = mutable.ArrayBuffer[UnsafeRow]()
+      val seenRows = new java.util.HashSet[UnsafeRow]()
+      var rowBytes = 0L
+      val normalize = GraftSparkInternals.floatNormalizer(schema)
+      // distributed tier: every row so far as checkpointed legs, and
+      // their bytes
+      val legs = mutable.ArrayBuffer[RDD[InternalRow]]()
+      var legBytes = 0L
+      var driverTier = true
+      var frontier: DataFrame = null
+      var retireNext: RDD[InternalRow] = null
+
+      // ONE job: the plan's rows, or None once they pass the gate. Each
+      // task stops one row past the gate, and the driver drops what it
+      // holds once the partitions' sum passes it, so it never keeps
+      // more than the gate plus one partition's rows.
+      def collectUnderGate(df: DataFrame): Option[Seq[UnsafeRow]] = {
+        val qe = df.queryExecution
+        val rdd = SQLExecution.withNewExecutionId(qe, Some("recursive cte"))(
+          qe.executedPlan.execute())
+        val got = mutable.ArrayBuffer[UnsafeRow]()
+        var bytes = 0L
+        sc.runJob(rdd, FixpointJobs.upTo(gate), 0 until rdd.getNumPartitions,
+          (_: Int, part: Array[UnsafeRow]) => if (bytes <= gate) {
+            got ++= part
+            bytes += part.iterator.map(_.getSizeInBytes.toLong).sum
+            if (bytes > gate) got.clear()
+          })
+        if (bytes > gate) None else Some(got.toSeq)
       }
-      if (driverMode) {
-        // pure driver-resident run: every accumulated row is already
-        // local — return a LocalRelation-backed frame (values are
-        // identical to the distributed path's; consumers aggregate or
-        // re-distribute). The base leg's persisted blocks are dead.
-        f0r.unpersist(false)
-        seenLegs.clear(); legs.clear()
-        spark.createDataFrame(resultRows.asJava, base1.schema)
-      } else if (distinctMode) {
-        // one final compaction folds the in-flight legs into a single
-        // checkpointed frame — the persisted-block census leaves the
-        // loop constant (≤1 seen frame, DeepRecursionSpec) and the
-        // consumer re-scans one coalesced RDD instead of a
-        // many-legged union
-        if (seenLegs.length > 1) {
-          val packed = packLegs(seenLegs.toSeq)
-          seenLegs.foreach(_.unpersist(false))
-          seenLegs.clear()
-          seenLegs += packed
+      // the driver tier's rows become the first leg
+      def handOver(): Unit = {
+        val leg = sc.parallelize[InternalRow](rows.toSeq, sc.defaultParallelism)
+          .localCheckpoint()
+        leg.count()
+        legs += leg
+        legBytes = rowBytes
+        rows.clear(); seenRows.clear()
+        driverTier = false
+      }
+      // fold the legs into ONE checkpointed, narrowly coalesced leg and
+      // retire the rest — except `live`, the frontier the next round
+      // still reads, whose retirement waits for that round's job
+      def packLegs(live: RDD[InternalRow]): Unit = {
+        val packed = sc.union(legs.toSeq)
+          .coalesce(math.max(1, math.min(
+            legs.map(_.getNumPartitions).max, sc.defaultParallelism)))
+          .localCheckpoint()
+        packed.count()
+        legs.foreach(l => if (l ne live) l.unpersist(false))
+        legs.clear()
+        legs += packed
+      }
+      def distributedRound(step: DataFrame): Boolean = {
+        // distinct mode: drop rows already seen — ONE anti-join of the
+        // round's step against the union of legs, deduplicated after
+        // (LeftAnti + Distinct is what Catalyst rewrites EXCEPT to,
+        // with the same null-safe `<=>` keys — spelling it out lets us
+        // pick the build side). Both sides are renamed POSITIONALLY to
+        // fresh unique names, which also gives each side fresh attribute
+        // ids, so resolution survives Catalyst's relation deduplication
+        // even when the step projects a frontier column verbatim. The
+        // optimizer sees only stats-less LogicalRDDs, so without a hint
+        // every round pays a two-sided shuffle join; under the gate the
+        // seen legs are broadcast instead.
+        val delta =
+          if (!distinctMode) step
+          else {
+            val sNames = cols.indices.map(i => s"__rec_s$i")
+            val vNames = cols.indices.map(i => s"__rec_v$i")
+            val seen = wrap(sc.union(legs.toSeq), schema).toDF(vNames: _*)
+            val cond = cols.indices.map(i =>
+              col(sNames(i)) <=> col(vNames(i))).reduce(_ && _)
+            step.toDF(sNames: _*)
+              .join(if (legBytes <= gate) broadcast(seen) else seen, cond,
+                "left_anti")
+              .distinct()
+          }
+        val (rdd, n, bytes) = materialize(delta)
+        if (retireNext != null) {
+          retireNext.unpersist(false)
+          retireNext = null
         }
-        wrap(seenLegs.head, base1.schema)
-      } else legs.reduce(_ unionAll _)
+        if (n == 0) rdd.unpersist(false)
+        else {
+          legs += rdd
+          legBytes += bytes
+          frontier = wrap(rdd, schema)
+          if (legs.length >= Engine.recursionCompactLegs) {
+            packLegs(rdd)
+            retireNext = rdd
+          }
+        }
+        n > 0
+      }
+
+      // round 0 runs the base term; each later round the step
+      var step = base1
+      var rounds = 0
+      var growing = true
+      while (growing) {
+        growing =
+          if (driverTier) collectUnderGate(step) match {
+            case Some(got) =>
+              val fresh =
+                if (distinctMode)
+                  got.map(r => normalize(r).copy()).filter(seenRows.add)
+                else got
+              rows ++= fresh
+              rowBytes += fresh.iterator.map(_.getSizeInBytes.toLong).sum
+              frontier = broadcast(
+                GraftSparkInternals.localRelation(session, fresh, schema))
+              if (rowBytes > gate) handOver()
+              fresh.nonEmpty
+            case None =>
+              handOver()
+              distributedRound(step)
+          }
+          else distributedRound(step)
+        if (growing) {
+          rounds += 1
+          if (rounds > maxRounds)
+            throw new IllegalStateException(
+              s"recursive CTE ${b.name} exceeded $maxRounds rounds — " +
+                "add a depth bound to the recursive term (or raise " +
+                "graft.recursion.maxRounds)")
+          step = stepOver(frontier)
+        }
+      }
+      if (driverTier)
+        GraftSparkInternals.localRelation(session, rows.toSeq, schema)
+      else {
+        if (legs.length > 1) packLegs(null)
+        wrap(legs.head, schema)
+      }
     } finally {
       cteBindings.set(saved)
       sc.setLocalProperty(ancestorsKey, prevAncestors)
-      // retire the loop-binding materializations (advice finding):
-      // the returned frame never reads them — packed legs or local
-      // rows only — so their persisted blocks are dead the moment
-      // the fixpoint exits
       bindingRdds.foreach(_.unpersist(false))
     }
   }
@@ -3038,6 +2815,14 @@ object Engine {
     * a named error instead of a hang. */
   val maxRecursionRounds: Int = 1000
 
+  /** Distributed-tier legs the fixpoint folds into one, so a deep
+    * recursion's task closures and partition count stay bounded. */
+  val recursionCompactLegs: Int = 32
+
+  /** Largest optimizer size estimate at which an attached table the
+    * recursive term joins is snapshot once for the whole loop. */
+  val recursionCacheTableBytes: Long = 64L << 20
+
   /** A name provably resolving in neither the subquery's nor the
     * enclosing scope (a typo'd column). Distinct type so multi-scope
     * classification can fail one scope without masking another. */
@@ -3078,4 +2863,36 @@ object Engine {
     * RW locks shared by sessions of one process). */
   private val lockRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, SessionRWLock]()
+}
+
+/** Task functions of the recursive-CTE fixpoint's jobs, kept in a small
+  * object because Spark's closure cleaner reads the declaring class. */
+private object FixpointJobs {
+  /** A partition's row count and bytes. Executed plans yield
+    * `UnsafeRow`s, which Spark's own collect relies on too. */
+  val countBytes: (TaskContext, Iterator[InternalRow]) => (Long, Long) =
+    (_, rows) => {
+      var n = 0L
+      var bytes = 0L
+      rows.foreach { r =>
+        n += 1
+        bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes
+      }
+      (n, bytes)
+    }
+
+  /** A partition's rows, copied out of the operator's reused buffer,
+    * stopping after the first row that takes them past `budget` bytes. */
+  def upTo(budget: Long)
+      : (TaskContext, Iterator[InternalRow]) => Array[UnsafeRow] =
+    (_, rows) => {
+      val out = mutable.ArrayBuffer[UnsafeRow]()
+      var bytes = 0L
+      while (bytes <= budget && rows.hasNext) {
+        val r = rows.next().asInstanceOf[UnsafeRow].copy()
+        bytes += r.getSizeInBytes
+        out += r
+      }
+      out.toArray
+    }
 }

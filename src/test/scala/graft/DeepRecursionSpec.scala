@@ -63,52 +63,73 @@ class DeepRecursionSpec extends AnyFunSuite {
       f"$before -> $after")
   }
 
-  // r16: the fixpoint has two executions — driver-resident below the
-  // broadcastSeenBytes gate (one job/round) and the distributed
-  // anti-join above it — plus a mid-loop handover when the gate
-  // overflows. All three must produce identical multisets.
+  // The fixpoint has two tiers — driver-resident rows at or under the
+  // broadcastSeenBytes gate, checkpointed legs over it — plus a
+  // mid-loop handover when the gate overflows. All three runs must
+  // produce identical multisets, with Spark's float semantics: UNION
+  // merges -0.0 with 0.0 and NaN with NaN, UNION ALL keeps -0.0.
   test("driver-resident, distributed, and mid-loop-overflow recursion " +
     "paths agree exactly (UNION and UNION ALL)") {
     val eng = freshEngine()
     eng.script("create scope modering; use modering")
     val n = 40
+    // two rows per node: (-0.0, 0.0) at even v, (NaN, NaN) at odd v
     eng.attachTable("ring", spark.range(0, n).toDF("v")
-      .select(col("v").cast("long").as("v")))
-    def run(q: String): Seq[Seq[Any]] = eng.sql(q) match {
-      case Rows(d) => d.collect().toSeq.map(_.toSeq)
-        .sortBy(_.mkString("|"))
+      .select(col("v").cast("long").as("v"))
+      .crossJoin(spark.range(0, 2).toDF("k"))
+      .select(col("v"),
+        when(col("v") % 2 === 1, lit(Double.NaN))
+          .when(col("k") === 0, lit(-0.0)).otherwise(lit(0.0)).as("z")))
+    // rows as strings: boxed-Double equality calls NaN != NaN and
+    // -0.0 == 0.0; the returned frame's leaf names the tier
+    def run(q: String): (Seq[String], String) = eng.sql(q) match {
+      case Rows(d) =>
+        (d.collect().toSeq.map(_.toSeq.map(String.valueOf(_)).mkString("|"))
+          .sorted,
+          d.queryExecution.analyzed.collectLeaves()
+            .map(_.getClass.getSimpleName).distinct.mkString(","))
       case other => fail(s"recursion failed: $other")
     }
     val distinctQ =
       "with recursive reach as (" +
-        "  select v from ring where v = 0 " +
+        "  select v, z from ring where v = 0 " +
         "  union " +
-        s"  select r2.v from reach r join ring r2 " +
+        s"  select r2.v, r2.z from reach r join ring r2 " +
         s"    on r2.v = (r.v + 1) % $n) " +
-        "select v from reach"
+        "select v, z from reach"
     val allQ =
-      "with recursive steps(v, d) as (" +
-        "  select v, 0 from ring where v < 3 " +
+      "with recursive steps(v, d, z) as (" +
+        "  select v, 0, z from ring where v < 3 " +
         "  union all " +
-        "  select v + 1, d + 1 from steps where d < 5) " +
-        "select v, d from steps"
-    def inMode(bytes: String)(q: String): Seq[Seq[Any]] = {
+        "  select v + 1, d + 1, z from steps where d < 5) " +
+        "select v, d, z from steps"
+    def inMode(bytes: String)(q: String): (Seq[String], String) = {
       spark.conf.set("graft.recursion.broadcastSeenBytes", bytes)
       try run(q)
       finally spark.conf.unset("graft.recursion.broadcastSeenBytes")
     }
-    val driver = run(distinctQ)             // default gate: driver-resident
-    val dist = inMode("0")(distinctQ)       // gate 0: distributed anti-join
-    val mid = inMode("600")(distinctQ)      // overflows after ~some rounds
+    // 480 B overflows both queries mid-loop. UNION keeps one 24 B row
+    // (bitset word + two 8 B slots) per round: the 21st, in round 20
+    // of 40, crosses. UNION ALL adds six 32 B rows per round: 576 B
+    // after round 2 of 5 crosses.
+    val (driver, driverTier) = run(distinctQ)       // default gate
+    val (dist, distTier) = inMode("0")(distinctQ)   // gate 0: legs only
+    val (mid, midTier) = inMode("480")(distinctQ)
     assert(driver == dist, "driver vs distributed mismatch")
     assert(driver == mid, "driver vs mid-loop-overflow mismatch")
-    assert(driver.length == n)
-    val driverAll = run(allQ)
-    val distAll = inMode("0")(allQ)
-    val midAll = inMode("600")(allQ)
+    assert(driver == (0 until n)
+      .map(v => s"$v|${if (v % 2 == 0) "0.0" else "NaN"}").sorted)
+    assert((driverTier, distTier, midTier) ==
+      (("LocalRelation", "LogicalRDD", "LogicalRDD")))
+    val (driverAll, driverAllTier) = run(allQ)
+    val (distAll, distAllTier) = inMode("0")(allQ)
+    val (midAll, midAllTier) = inMode("480")(allQ)
     assert(driverAll == distAll, "UNION ALL driver vs distributed")
     assert(driverAll == midAll, "UNION ALL driver vs overflow")
-    assert(driverAll.length == 3 * 6)
+    assert(driverAll.length == 6 * 6)
+    assert(driverAll.count(_.endsWith("|-0.0")) == 2 * 6, driverAll)
+    assert((driverAllTier, distAllTier, midAllTier) ==
+      (("LocalRelation", "LogicalRDD", "LogicalRDD")))
   }
 
   test("depth cap fails by name and names the knob") {
