@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.{ByteType, DateType, DecimalType,
+  DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
 import graft.catalog.Catalog
 import graft.catalog.Catalog.{Prop, Scope}
 import graft.sql.{Ast, BoundLiteral, ExprBuilder, Parser}
@@ -653,7 +654,8 @@ class Engine(val spark: SparkSession, root: String,
     * (never the accumulated set), unions the new rows in, and stops
     * when a round yields nothing. UNION (distinct) additionally
     * drops rows already seen — the fixpoint form that terminates on
-    * cyclic data. The step is cast to the base term's column types.
+    * cyclic data. The step is cast to the base term's column types,
+    * rounding into integral columns as DuckDB does.
     *
     * Every row the loop holds is an `UnsafeRow` the round's executed
     * plan produced, in one of two tiers chosen by their exact bytes
@@ -791,6 +793,10 @@ class Engine(val spark: SparkSession, root: String,
     val prevAncestors = sc.getLocalProperty(ancestorsKey)
     sc.setLocalProperty(ancestorsKey, "true")
     val bindingRdds = mutable.ArrayBuffer[RDD[InternalRow]]()
+    // distributed tier: every row so far as checkpointed legs, and the
+    // frontier whose retirement waits for the next round's job
+    val legs = mutable.ArrayBuffer[RDD[InternalRow]]()
+    var retireNext: RDD[InternalRow] = null
     try {
       // Re-wrap checkpointed rows with fresh attribute ids and no
       // constraints (see GraftSparkInternals for the fault this avoids).
@@ -834,7 +840,10 @@ class Engine(val spark: SparkSession, root: String,
           .map(n => snapshot(n, attached(n)))
       // the step over a frontier, cast to the loop schema's types
       // positionally (output names may repeat or need backticks; the
-      // loop's rows take their names from `schema` alone)
+      // loop's rows take their names from `schema` alone). As in
+      // DuckDB, a fractional value bound for an integral column rounds
+      // first, half away from zero from a decimal and half to even from
+      // a float or double, where Spark's cast alone would truncate
       def stepOver(frontier: DataFrame): DataFrame = {
         cteBindings.set(loopBindings + (nl -> frontier))
         val s = buildSelect(rec)
@@ -843,8 +852,17 @@ class Engine(val spark: SparkSession, root: String,
             s"recursive CTE ${b.name}: the recursive term produces " +
               s"${s.columns.length} columns, expected ${cols.length}")
         val tmp = cols.indices.map(i => s"__rec_t$i")
-        s.toDF(tmp: _*).select(schema.fields.toSeq.zip(tmp).map {
-          case (f, t) => col(t).cast(f.dataType)
+        val t = s.toDF(tmp: _*)
+        t.select(schema.fields.toSeq.zip(t.schema.fields).map {
+          case (f, from) =>
+            val c = col(from.name)
+            val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+              .contains(f.dataType)
+            (from.dataType match {
+              case _: DecimalType if integral => round(c)
+              case FloatType | DoubleType if integral => bround(c)
+              case _ => c
+            }).cast(f.dataType)
         }: _*)
       }
 
@@ -853,32 +871,38 @@ class Engine(val spark: SparkSession, root: String,
       val rows = mutable.ArrayBuffer[UnsafeRow]()
       val seenRows = new java.util.HashSet[UnsafeRow]()
       var rowBytes = 0L
-      val normalize = GraftSparkInternals.floatNormalizer(schema)
-      // distributed tier: every row so far as checkpointed legs, and
-      // their bytes
-      val legs = mutable.ArrayBuffer[RDD[InternalRow]]()
+      lazy val normalize = GraftSparkInternals.floatNormalizer(schema)
+      // the distributed tier's bytes
       var legBytes = 0L
       var driverTier = true
       var frontier: DataFrame = null
-      var retireNext: RDD[InternalRow] = null
 
-      // ONE job: the plan's rows, or None once they pass the gate. Each
-      // task stops one row past the gate, and the driver drops what it
-      // holds once the partitions' sum passes it, so it never keeps
-      // more than the gate plus one partition's rows.
+      // The plan's rows, or None once they pass the gate — in ONE job
+      // unless they are skewed. A task ships its partition only if it
+      // fits an even share of the bytes still free, and otherwise only
+      // the bytes it counted before passing that share. The partitions
+      // that did not fit run again on the same executed plan (its
+      // shuffles are not redone) with the share then left. So no job
+      // ships more than the gate, and each rerun either completes a
+      // partition or proves the rows pass the gate.
       def collectUnderGate(df: DataFrame): Option[Seq[UnsafeRow]] = {
         val qe = df.queryExecution
         val rdd = SQLExecution.withNewExecutionId(qe, Some("recursive cte"))(
           qe.executedPlan.execute())
         val got = mutable.ArrayBuffer[UnsafeRow]()
-        var bytes = 0L
-        sc.runJob(rdd, FixpointJobs.upTo(gate), 0 until rdd.getNumPartitions,
-          (_: Int, part: Array[UnsafeRow]) => if (bytes <= gate) {
-            got ++= part
-            bytes += part.iterator.map(_.getSizeInBytes.toLong).sum
-            if (bytes > gate) got.clear()
-          })
-        if (bytes > gate) None else Some(got.toSeq)
+        var held = 0L
+        var atLeast = 0L
+        var pending: Seq[Int] = 0 until rdd.getNumPartitions
+        while (pending.nonEmpty && atLeast <= gate) {
+          val share = (gate - held) / pending.length
+          val parts = pending.zip(
+            sc.runJob(rdd, FixpointJobs.upTo(share), pending))
+          atLeast = held + parts.map(_._2._2).sum
+          parts.foreach { case (_, (part, n)) =>
+            if (part != null) { got ++= part; held += n } }
+          pending = parts.collect { case (p, (null, _)) => p }
+        }
+        if (atLeast > gate) None else Some(got.toSeq)
       }
       // the driver tier's rows become the first leg
       def handOver(): Unit = {
@@ -985,6 +1009,11 @@ class Engine(val spark: SparkSession, root: String,
         if (legs.length > 1) packLegs(null)
         wrap(legs.head, schema)
       }
+    } catch {
+      // a failed loop (the depth cap, say) returns no frame over legs
+      case e: Throwable =>
+        (legs ++ Option(retireNext)).foreach(_.unpersist(false))
+        throw e
     } finally {
       cteBindings.set(saved)
       sc.setLocalProperty(ancestorsKey, prevAncestors)
@@ -2882,17 +2911,18 @@ private object FixpointJobs {
     }
 
   /** A partition's rows, copied out of the operator's reused buffer,
-    * stopping after the first row that takes them past `budget` bytes. */
-  def upTo(budget: Long)
-      : (TaskContext, Iterator[InternalRow]) => Array[UnsafeRow] =
+    * and their bytes — or, once the bytes pass `share`, no rows (null)
+    * and the bytes counted up to the row that passed it. */
+  def upTo(share: Long)
+      : (TaskContext, Iterator[InternalRow]) => (Array[UnsafeRow], Long) =
     (_, rows) => {
       val out = mutable.ArrayBuffer[UnsafeRow]()
       var bytes = 0L
-      while (bytes <= budget && rows.hasNext) {
+      while (bytes <= share && rows.hasNext) {
         val r = rows.next().asInstanceOf[UnsafeRow].copy()
         bytes += r.getSizeInBytes
         out += r
       }
-      out.toArray
+      (if (bytes <= share) out.toArray else null, bytes)
     }
 }

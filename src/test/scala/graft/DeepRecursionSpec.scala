@@ -154,4 +154,150 @@ class DeepRecursionSpec extends AnyFunSuite {
       }
     } finally spark.conf.unset("graft.recursion.maxRounds")
   }
+
+  test("a depth-capped distributed recursion leaves no persisted legs") {
+    val eng = freshEngine()
+    eng.script("create scope capdist; use capdist")
+    eng.attachTable("ring", spark.range(0, 60).toDF("v"))
+    spark.conf.set("graft.recursion.maxRounds", "40")
+    spark.conf.set("graft.recursion.broadcastSeenBytes", "0")
+    // ids, not the count: the cleaner may drop other suites' RDDs meanwhile
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      eng.sql(
+        "with recursive reach as (" +
+          "  select v from ring where v = 0 " +
+          "  union " +
+          "  select r2.v from reach r join ring r2 " +
+          "    on r2.v = (r.v + 1) % 60) " +
+          "select count(*) as cnt from reach") match {
+        case graft.engine.Status(false, msg) =>
+          assert(msg.contains("graft.recursion.maxRounds"), msg)
+        case other => fail(s"expected the depth-cap failure, got $other")
+      }
+    } finally {
+      spark.conf.unset("graft.recursion.maxRounds")
+      spark.conf.unset("graft.recursion.broadcastSeenBytes")
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"the failed loop left RDDs ${left.toSeq.sorted} " +
+      "persisted")
+  }
+
+  // Learning that a base is over the gate must not ship it to the
+  // driver: no collect job ships more than the gate, so with
+  // spark.driver.maxResultSize far under the base's bytes the loop
+  // hands over to the distributed tier instead of aborting the job.
+  test("a multi-partition base over the gate goes to the distributed " +
+    "tier without shipping its rows to the driver") {
+    val eng = freshEngine()
+    eng.script("create scope bigbase; use bigbase")
+    // 8 partitions of 4000 rows, 136 B each: ~540 KB per partition
+    eng.attachTable("big", spark.range(0, 32000, 1, 8).toDF("k")
+      .select(col("k"), lit("x" * 100).as("pad")))
+    // each new task set reads the limit from the driver's SparkConf
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val maxResult = "spark.driver.maxResultSize"
+    val prevMax = conf.getOption(maxResult)
+    conf.set(maxResult, "1m")
+    spark.conf.set("graft.recursion.broadcastSeenBytes", (2L << 20).toString)
+    try {
+      eng.sql(
+        "with recursive r(k, pad, d) as (" +
+          "  select k, pad, 0 from big " +
+          "  union all " +
+          "  select k, pad, d + 1 from r where d < 1) " +
+          "select count(*) as cnt, sum(d) as s from r") match {
+        case Rows(d) =>
+          assert(d.queryExecution.analyzed.collectLeaves()
+            .exists(_.getClass.getSimpleName == "LogicalRDD"))
+          val row = d.collect().head
+          assert((row.getLong(0), row.getLong(1)) == ((64000L, 32000L)))
+        case other => fail(s"recursion failed: $other")
+      }
+    } finally {
+      prevMax.fold(conf.remove(maxResult))(conf.set(maxResult, _))
+      spark.conf.unset("graft.recursion.broadcastSeenBytes")
+    }
+  }
+
+  // DuckDB types a recursive CTE by its base term and casts the
+  // recursive term to it, rounding a fractional value into an integral
+  // column: half to even from a double, half away from zero from a
+  // decimal. The expected sequences are DuckDB 1.0's answers.
+  test("the recursive term is cast to the base term's types, " +
+    "rounding as DuckDB does") {
+    val eng = freshEngine()
+    eng.script("create scope castrec; use castrec")
+    eng.attachTable("one", spark.range(0, 1).select(
+      lit(1L).as("n"), lit(1).as("i"),
+      lit(BigDecimal("1.5")).cast("decimal(2,1)").as("f")))
+    // column n ordered by depth d, from both tiers
+    def both(q: String): Seq[Any] = {
+      def run(): Seq[Any] = eng.sql(q) match {
+        case Rows(d) =>
+          d.collect().toSeq.sortBy(_.getLong(1)).map(_.get(0))
+        case other => fail(s"recursion failed: $other")
+      }
+      val driver = run()
+      spark.conf.set("graft.recursion.broadcastSeenBytes", "0")
+      try assert(run() == driver, "driver vs distributed tier")
+      finally spark.conf.unset("graft.recursion.broadcastSeenBytes")
+      driver
+    }
+    // long base, double step: 1.5 -> 2, 4.5 -> 4
+    val dbl = both(
+      "with recursive t(n, d) as (" +
+        "  select n, 0 from one " +
+        "  union all " +
+        "  select n * 1.5, d + 1 from t where d < 4) " +
+        "select n, d from t")
+    assert(dbl == Seq(1L, 2L, 3L, 4L, 6L), dbl)
+    // long base, decimal step: 1.5 -> 2, 4.5 -> 5
+    val dec = both(
+      "with recursive t(n, d) as (" +
+        "  select n, 0 from one " +
+        "  union all " +
+        "  select t.n * o.f, t.d + 1 from t join one o on o.i = 1 " +
+        "    where t.d < 4) " +
+        "select n, d from t")
+    assert(dec == Seq(1L, 2L, 3L, 5L, 8L), dec)
+    assert((dbl ++ dec).forall(_.isInstanceOf[java.lang.Long]))
+    // int base, long step: the column stays int
+    val ints = both(
+      "with recursive t(i, d) as (" +
+        "  select i, 0 from one " +
+        "  union all " +
+        "  select i + 2, d + 1 from t where d < 2) " +
+        "select i, d from t")
+    assert(ints == Seq(1, 3, 5), ints)
+    assert(ints.forall(_.isInstanceOf[java.lang.Integer]), ints)
+  }
+
+  test("UNION ALL recursion carries a map column in both tiers") {
+    val eng = freshEngine()
+    eng.script("create scope maprec; use maprec")
+    eng.attachTable("mt", spark.range(0, 3).toDF("v")
+      .select(col("v"), map(lit("k"), col("v").cast("double")).as("m")))
+    val q =
+      "with recursive s(v, m, d) as (" +
+        "  select v, m, 0 from mt " +
+        "  union all " +
+        "  select v, m, d + 1 from s where d < 2) " +
+        "select v, m, d from s"
+    def run(): Seq[String] = eng.sql(q) match {
+      case Rows(d) => d.collect().toSeq.map { r =>
+        val m = r.getMap[String, Double](1)("k")
+        s"${r.getLong(0)}|$m|${r.getLong(2)}"
+      }.sorted
+      case other => fail(s"recursion failed: $other")
+    }
+    val driver = run()
+    assert(driver ==
+      (for (v <- 0 until 3; d <- 0 until 3) yield s"$v|${v.toDouble}|$d")
+        .sorted)
+    spark.conf.set("graft.recursion.broadcastSeenBytes", "0")
+    try assert(run() == driver, "driver vs distributed tier")
+    finally spark.conf.unset("graft.recursion.broadcastSeenBytes")
+  }
 }
