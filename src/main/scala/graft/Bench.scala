@@ -116,11 +116,6 @@ object Bench {
       .config("spark.sql.ui.retainedExecutions", "50")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Bench consumes every query exactly once (the noop write), so the
-    // dedup operators' eager seal (persist + count + unpersist legs)
-    // would only add a second full materialization per query — opt out
-    // and let the single write drive the persisted legs directly.
-    spark.conf.set("spark.graft.sealResults", "false")
 
     // warm up session machinery (codegen, shuffle, parquet readers)
     // with a real scan+aggregate so the first measured query doesn't
@@ -172,7 +167,7 @@ object Bench {
     // heavy queries paying 1.6–2.3× under accumulated bench-process
     // pressure that a clean box doesn't show (q140 8.0 s driver vs
     // 4.3–5.2 s clean); fronting them decouples their grade from
-    // suite position. Timing is still per-query (cache cleared + GC
+    // suite position. Timing is still per-query (scope released + GC
     // between queries), so order changes WHEN a query runs, not what
     // it does.
     val fronted = Seq("q140_", "q168_", "q113_", "q134_", "q226_",
@@ -213,11 +208,9 @@ object Bench {
       val base = sfDir.replaceAll("/+$", "")
       val warmDir = base.replaceAll("sf[0-9.]+$", "sf0.01")
       if (warmDir != base) selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        try Materialize.scope {
+          fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        } catch { case _: Throwable => () }
       }
     }
     // r14 (verdict task 6): memoized shared artifacts (span sets, LSH
@@ -242,16 +235,13 @@ object Bench {
       pb.toSeq.sortBy(_._1).map { case (n, fn) =>
         val t0 = System.nanoTime()
         val failed =
-          try { fn(spark, sfDir); false }
+          try { Materialize.scope(fn(spark, sfDir)); false }
           catch { case e: Throwable =>
             System.err.println(
               s"[bench] prebuild $n failed: ${e.getMessage}")
             true
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
         System.gc()
         n -> (if (failed) -dt else dt)
       }
@@ -271,12 +261,15 @@ object Bench {
         .spark.sql.DataFrame, reps: Int)
         : (Double, Long, Long, Int, Long, Double) = {
       val repRuns = (0 until reps).map { _ =>
+        val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val failed =
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Materialize.scope {
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            }
             false
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -286,17 +279,13 @@ object Bench {
         val dt = if (failed) 1e9 else (System.nanoTime() - t0) / 1e9
         busWait()
         val (sp, pk) = pressure.drain()
-        val left = spark.sparkContext.getPersistentRDDs.size
+        val left =
+          (spark.sparkContext.getPersistentRDDs.keySet -- persisted0).size
         val compiles =
           CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
-        // operators persist reused intermediates for the duration of
-        // their query; drop them (plus any leftover checkpoint RDD
-        // blocks) and let the JVM settle so late queries aren't taxed
-        // for earlier queries' garbage — all outside the timed window
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // let the JVM settle so late queries aren't taxed for earlier
+        // queries' garbage — outside the timed window
         System.gc()
         (dt, sp, pk, left, compiles, compileMs)
       }
@@ -410,7 +399,7 @@ object Bench {
       // memory MB (max stage aggregate), driver heap MB after the
       // post-query GC — the four numbers that separate "this plan
       // regressed" from "the suite environment squeezed this query" —
-      // the RDDs the query left persisted before the sweep (a
+      // the RDDs the query left persisted once its scope closed (a
       // per-query leak), and the Janino compiles the query paid for
       // with their ms (misses of Spark's codegen cache)
       val press = results.map {

@@ -23,18 +23,17 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      df.write.format("noop").mode("overwrite").save()
-      val executed = df.queryExecution.executedPlan.toString()
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-        s"# $name — explain(formatted), $sfDir, local[$cpus]\n\n" +
-          formatted + "\n\n# executed plan after one run (AQE final)\n\n" +
-          executed.take(20000) + "\n")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Materialize.scope {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val formatted = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        df.write.format("noop").mode("overwrite").save()
+        val executed = df.queryExecution.executedPlan.toString()
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+          s"# $name — explain(formatted), $sfDir, local[$cpus]\n\n" +
+            formatted + "\n\n# executed plan after one run (AQE final)\n\n" +
+            executed.take(20000) + "\n")
+      }
       println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
     }
     spark.stop()

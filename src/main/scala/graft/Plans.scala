@@ -370,12 +370,17 @@ object Plans {
     sb ++= "`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin`\n"
     sb ++= "for dimensions, `partial_…` aggregates before `Exchange`,\n"
     sb ++= "`WholeStageCodegen` spans over the hot pipelines.\n"
+    // build, run and read the plan inside one consumer scope, as the
+    // harnesses run it: outside a scope a query that holds or cuts
+    // comes back sealed, a bare scan with no plan left to show
     selected.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect() // finalize AQE so the executed plan is the real one
-      sb ++= s"\n## $name — $why\n\n```\n"
-      sb ++= df.queryExecution.executedPlan.toString().take(6000)
-      sb ++= "\n```\n"
+      Materialize.scope {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.collect() // finalize AQE so the executed plan is the real one
+        sb ++= s"\n## $name — $why\n\n```\n"
+        sb ++= df.queryExecution.executedPlan.toString().take(6000)
+        sb ++= "\n```\n"
+      }
     }
     Files.writeString(Paths.get(outPath), sb.toString)
     println(s"[plans] wrote $outPath (${selected.size} queries)")

@@ -20,7 +20,6 @@ object QueryProfile {
       "/root/testdata/sf0.1")
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.sealResults", "false")
 
     case class St(id: Int, name: String, wallMs: Long, tasks: Int,
         runMs: Long, cpuMs: Long, shRead: Long, shWrite: Long,
@@ -49,17 +48,17 @@ object QueryProfile {
     val warmDir = sfDir.replaceAll("/+$", "")
       .replaceAll("sf[0-9.]+$", "sf0.01")
     if (warmDir != sfDir)
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      try Materialize.scope {
+        fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      } catch { case _: Throwable => () }
 
     (1 to reps).foreach { rep =>
       stages.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Materialize.scope {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(300) // let the bus drain
@@ -79,9 +78,6 @@ object QueryProfile {
       val sumWall = stages.map(_.wallMs).sum
       println(f"stage-wall sum ${sumWall / 1000.0}%.2f s over " +
         s"${stages.size} stages (wall minus sum = driver/planning gaps)")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
       System.gc()
     }
     spark.stop()

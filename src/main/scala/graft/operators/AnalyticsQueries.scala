@@ -25,7 +25,7 @@ object AnalyticsQueries extends QueryPack {
   private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
   private def dsum(c: Column): Column = sum(dec(c)).cast("double")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // ROLLUP: (flag, status), (flag), () subtotal levels in one pass —
     // Spark expands to a union of grouping sets with partial aggs.
     "q91_rollup" -> ((s, d) =>

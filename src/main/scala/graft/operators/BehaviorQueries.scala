@@ -26,7 +26,7 @@ object BehaviorQueries extends QueryPack {
     call_function("div", c, lit(1000L))
   private val usPerDay = 86400000000L
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Out-of-order depth accounting: how far events arrive behind the
     // per-user event-time high-water mark, using insertion order
     // (event_id) as the arrival axis — THE diagnostic that sizes a

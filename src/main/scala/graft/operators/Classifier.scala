@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
+import graft.Materialize.{drop, hold}
 
 /** Distributed TRAINING of a linear text classifier — the
   * quality/language screening model a curation pipeline fits on its
@@ -46,9 +48,10 @@ object Classifier {
     new scala.collection.concurrent.TrieMap[(String, Int), Trained]()
 
   private def train(docs: DataFrame, idCol: String, textCol: String,
-                    label: Column, dims: Int, iters: Int): Trained = {
+                    label: Column, dims: Int,
+                    iters: Int): Trained = Materialize.scope {
     val bucket = pmod(Dedup.md5Hash60(col("word")), lit(dims.toLong))
-    val feat = docs
+    val feat = hold(docs
       .select(col(idCol).as("doc_id"), label.cast("long").as("y"),
         explode(split(col(textCol), " ")).as("word"))
       .select(col("doc_id"), col("y"), bucket.as("j"))
@@ -56,20 +59,18 @@ object Classifier {
       .agg(count(lit(1)).as("c"))
       .unionAll(docs.select(col(idCol).as("doc_id"),
         label.cast("long").as("y"), lit(dims.toLong).as("j"),
-        lit(1L).as("c")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        lit(1L).as("c"))))
     var w = Array.fill(dims + 1)(0L)
     val curve = Vector.newBuilder[(Long, Long)]
     val snaps = Vector.newBuilder[Array[Long]]
     for (it <- 1 to iters) {
       // margin per doc under the CURRENT model (weights ride the plan
       // as a literal array — no join for a dims-sized lookup)
-      val margins = feat
+      val margins = hold(feat
         .withColumn("t", col("c") *
           element_at(lit(w), (col("j") + 1).cast("int")))
         .groupBy(col("doc_id"), col("y"))
-        .agg(sum(col("t")).as("m"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(sum(col("t")).as("m")))
       val miscl = margins.filter(col("y") * col("m") <= 0)
         .select(col("doc_id"), col("y"))
       curve += ((it.toLong, miscl.count()))
@@ -77,11 +78,10 @@ object Classifier {
       val delta = feat.join(miscl.select(col("doc_id")), Seq("doc_id"))
         .groupBy(col("j")).agg(sum(col("y") * col("c")).as("d"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      margins.unpersist(blocking = false)
+      drop(margins)
       w = w.indices.map(j => w(j) + delta.getOrElse(j.toLong, 0L)).toArray
       snaps += w
     }
-    feat.unpersist(blocking = false)
     Trained(curve.result(), snaps.result())
   }
 

@@ -40,7 +40,7 @@ object CoreQueries extends QueryPack {
   private def lsum(c: Column): Column =
     sum(round(c * lit(10000)).cast("long")) / lit(10000.0)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // ── Scans / readers (SURVEY §2.1) ────────────────────────────────
     // FULLSCAN (reader.c:1100-1131): full scan + filter; Catalyst pushes
     // both predicates into the parquet scan (PushedFilters).

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize.{cut, hold}
 import graft.Tables
 
 /** Training-data curation operators, round 4: metric-similarity
@@ -38,7 +39,7 @@ object CurationQueries extends QueryPack {
     (nw, nc, stp, punct, alpha)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Edit-distance near-dup names, blocked by (p_type, length band).
     // Canonicalize to DISTINCT (type, name) groups FIRST: the 20k-part
     // table has only 64 distinct names, so the naive all-pairs join is
@@ -81,8 +82,8 @@ object CurationQueries extends QueryPack {
             sequence(lit(1), size(col("w")) - 4),
             i => array_join(slice(col("w"), i, lit(5)), " "))))
             .as("gram"))
-      val bench = grams(docs.filter(col("doc_id") % 20 === 7))
-        .select(col("gram")).distinct().persist()
+      val bench = hold(grams(docs.filter(col("doc_id") % 20 === 7))
+        .select(col("gram")).distinct())
       val bloom = bench.stat.bloomFilter("gram", 100000L, 0.01)
       val might = udf((g: String) => bloom.mightContain(g))
       val corpus = docs.filter(col("doc_id") % 20 =!= 7)
@@ -90,7 +91,7 @@ object CurationQueries extends QueryPack {
         .filter(might(col("gram"))) // Bloom prefilter, ~1% FP
         .join(broadcast(bench), "gram") // exact verify
         .select(col("doc_id")).distinct()
-      val res = corpus
+      corpus
         .join(contaminated.withColumn("hit", lit(1)), Seq("doc_id"), "left")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -98,9 +99,6 @@ object CurationQueries extends QueryPack {
             .as("n_contaminated"),
           (count(lit(1)) - sum(coalesce(col("hit"), lit(0))))
             .cast("long").as("n_clean"))
-      res.persist().count()
-      bench.unpersist(blocking = false)
-      res
     }),
     // Gopher-style repetition signals: most-frequent-word fraction and
     // duplicate-word fraction per document. One explode + two-level
@@ -1141,12 +1139,12 @@ object CurationQueries extends QueryPack {
       // exact same longs), so the corpus is exploded once and the
       // LM join runs at vocab grain, not token grain — this query
       // was the suite's #6 wall cost when both legs re-exploded.
-      val grp = Tables.documents(s, d)
+      // feeds the LM build AND the loss sums
+      val grp = cut(Tables.documents(s, d)
         .select(col("source"),
           explode(TextAnalysis.words(col("text"))).as("w"))
         .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // feeds the LM build AND the loss sums
+        .agg(count(lit(1)).as("cnt")))
       val wc = grp.groupBy(col("w")).agg(sum(col("cnt")).as("cw"))
       val tot = wc.agg(sum(col("cw")).as("t"))
       val nll = wc.crossJoin(broadcast(tot))
@@ -1457,7 +1455,7 @@ object CurationQueries extends QueryPack {
     // T picks land on the driver). Ties break on source name.
     "q287_greedy_coverage" -> ((s, d) => {
       import s.implicits._
-      val bi = Tables.documents(s, d)
+      val bi = hold(Tables.documents(s, d)
         .select(col("source"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 2)
         .select(col("source"),
@@ -1466,8 +1464,7 @@ object CurationQueries extends QueryPack {
         .select(col("source"), concat_ws(" ",
           element_at(col("w"), col("i")),
           element_at(col("w"), col("i") + 1)).as("g"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       var remaining = bi
       val picks = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, Long, Long)]
@@ -1487,7 +1484,6 @@ object CurationQueries extends QueryPack {
             .join(newCov, Seq("g"), "left_anti")
         }
       }
-      bi.unpersist()
       picks.toSeq
         .toDF("step", "source", "marginal_gain", "cumulative_coverage")
     }),
@@ -1590,11 +1586,11 @@ object CurationQueries extends QueryPack {
       val ext = base.agg(min(col("s1")).as("mn1"),
         max(col("s1")).as("mx1"), min(col("s2")).as("mn2"),
         max(col("s2")).as("mx2"))
-      val tab = base.crossJoin(broadcast(ext))
+      // ≤100 rows, feeds 4 consumers
+      val tab = cut(base.crossJoin(broadcast(ext))
         .select(expr("((s1 - mn1) * 10) DIV (mx1 - mn1 + 1)").as("b1"),
           expr("((s2 - mn2) * 10) DIV (mx2 - mn2 + 1)").as("b2"))
-        .groupBy(col("b1"), col("b2")).agg(count(lit(1)).as("nn"))
-        .localCheckpoint() // ≤100 rows, feeds 4 consumers
+        .groupBy(col("b1"), col("b2")).agg(count(lit(1)).as("nn")))
       val cd = tab.crossJoin(broadcast(tab.select(col("b1").as("c1"),
           col("b2").as("c2"), col("nn").as("mm"))))
         .filter(col("c1") > col("b1"))
@@ -1633,12 +1629,12 @@ object CurationQueries extends QueryPack {
       val docs = Tables.documents(s, d)
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"), col("n_chars").cast("long").as("v"))
-      val vc = docs.groupBy(col("v"))
+      // support-sized, feeds cum/nxt/tot legs
+      val vc = cut(docs.groupBy(col("v"))
         .agg(sum(when(col("source") === "src0", 1L).otherwise(0L))
             .as("c1"),
           sum(when(col("source") === "src1", 1L).otherwise(0L))
-            .as("c2"))
-        .localCheckpoint() // support-sized, feeds cum/nxt/tot legs
+            .as("c2")))
       val cum = vc.join(broadcast(vc.select(col("v").as("u"),
           col("c1").as("d1"), col("c2").as("d2"))),
           col("u") <= col("v"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import graft.Materialize
+import graft.Materialize.{drop, hold}
 import graft.functions.VectorOps
 
 /** Large-scale deduplication operators for training-data pipelines.
@@ -21,46 +23,6 @@ import graft.functions.VectorOps
   *    candidate pairs the buckets produce.
   */
 object Dedup {
-
-  /** Materialize `result` and release the cached intermediate `legs`.
-    * Callers get a self-contained frame: the MEMORY_AND_DISK legs drop
-    * out of the cache immediately, and the result's own blocks are
-    * released by Spark's ContextCleaner once the returned frame is
-    * garbage-collected — so a long-lived library session does not
-    * accumulate cache blocks per query.
-    *
-    * The result is persisted WITH its lineage (not checkpointed): on a
-    * large cluster an executor loss then recomputes the missing
-    * partitions instead of invalidating the frame, which matters for
-    * pair results that took an LSH pass to produce. Callers that
-    * consume the frame exactly once (e.g. an immediate parquet write)
-    * can skip the eager materialization with
-    * `spark.graft.sealResults=false`: the legs KEEP their persist
-    * marks (so the consumer's single job still computes each leg once
-    * and reads it from cache across its own stages) and nothing runs
-    * until that job; the leg blocks are reclaimed by ContextCleaner
-    * once the caller drops the returned frame. */
-  private def sealResult(result: DataFrame, legs: DataFrame*): DataFrame = {
-    // lenient boolean: "false"/"0"/"off"/"no" disable, anything else
-    // (incl. unset) keeps the default-on seal — a typo'd value must
-    // not throw from inside a dedup query.
-    // The THREAD-LOCAL property wins over the session conf: pipeline
-    // callers (curateCorpus) flip it around their own dedup stages,
-    // and with the wire Server sharing one SparkSession across
-    // connection threads, a session-global conf flip would race other
-    // sessions' dedup queries (unsealed frames → leaked cache legs).
-    val raw = Option(result.sparkSession.sparkContext
-        .getLocalProperty("spark.graft.sealResults"))
-      .orElse(result.sparkSession.conf.getOption("spark.graft.sealResults"))
-    val seal =
-      raw.forall(v => !Set("false", "0", "off", "no")(v.trim.toLowerCase))
-    if (seal) {
-      val out = result.persist(StorageLevel.MEMORY_AND_DISK)
-      out.count() // eager: legs are consumed here, then freed
-      legs.foreach(_.unpersist(blocking = false))
-      out
-    } else result
-  }
 
   /** Exact dedup: group by content digest. Emits one row per distinct
     * text: the digest, the survivor (min id), and the multiplicity.
@@ -225,18 +187,16 @@ object Dedup {
     * verification at `tau`. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 3, k: Int = 32, bands: Int = 16,
-                          tau: Double = 0.5): DataFrame = {
+                          tau: Double = 0.5): DataFrame = Materialize {
     // sh is referenced 4× downstream (signatures + the three verify
     // legs) and sig 2× (both sides of the bucket self-join): persist
     // both or the whole explode/distinct pipeline re-runs per leg —
     // at 100 TB the shingle set is ~10× the corpus, so recomputing it
     // four times dwarfs the cost of spilling it once.
-    val sh = wordShingleHashes(docs, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = minHashSignatures(sh, k).persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(wordShingleHashes(docs, idCol, textCol, shingleN))
+    val sig = hold(minHashSignatures(sh, k))
     val cand = lshCandidatePairs(sig, k, bands)
-    sealResult(jaccardVerify(cand, sh).filter(col("jaccard") >= tau),
-      sh, sig)
+    jaccardVerify(cand, sh).filter(col("jaccard") >= tau)
   }
 
   /** Cross-set near-dup pairs: match the `incoming` slice of `docs`
@@ -252,11 +212,10 @@ object Dedup {
                                textCol: String, incomingPred: Column,
                                shingleN: Int = 3, k: Int = 32,
                                bands: Int = 16,
-                               tau: Double = 0.5): DataFrame = {
+                               tau: Double = 0.5): DataFrame = Materialize {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val sh = wordShingleHashes(docs, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = minHashSignatures(sh, k).persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(wordShingleHashes(docs, idCol, textCol, shingleN))
+    val sig = hold(minHashSignatures(sh, k))
     val r = k / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -273,8 +232,7 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    sealResult(jaccardVerify(cand, sh).filter(col("jaccard") >= tau),
-      sh, sig)
+    jaccardVerify(cand, sh).filter(col("jaccard") >= tau)
   }
 
   /** SimHash-64 over shingle features. The textbook form keeps 64 ±1
@@ -385,7 +343,7 @@ object Dedup {
   def streamNearDupScreen(incoming: DataFrame, base: DataFrame,
                           idCol: String, textCol: String,
                           shingleN: Int = 3, k: Int = 8, bands: Int = 4,
-                          tau: Double = 0.5): DataFrame = {
+                          tau: Double = 0.5): DataFrame = Materialize {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
     val r = k / bands
     // The static index is BATCH machinery, so it takes the exploded
@@ -396,11 +354,16 @@ object Dedup {
     // whole screen. Values are identical either way (min over the
     // same set; arrays compared as sets), so streaming probes built
     // row-locally interoperate bit-for-bit. Persisted once: it feeds
-    // the bucket join and the array fetch (and amortizes across
-    // micro-batches in a live stream).
-    val baseSh = wordShingles(base, idCol, textCol, shingleN)
+    // the bucket join and the array fetch. A batch screen holds it in
+    // its scope. A live stream re-reads it every micro-batch, so it
+    // must outlive any scope: it stays in Spark's CacheManager (no
+    // ContextCleaner reaches a cached Dataset) until the session's
+    // cache is cleared.
+    val index = wordShingles(base, idCol, textCol, shingleN)
       .select(col("doc_id"), md5Hash60(col("shingle")).as("shingle"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val baseSh =
+      if (incoming.isStreaming) index.persist(StorageLevel.MEMORY_AND_DISK)
+      else hold(index)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band") +:
         (0 until r).map(j => col(s"mh${b * r + j}").as(s"m$j")): _*)
@@ -440,7 +403,7 @@ object Dedup {
         zip_with(col("bbs"), col("base_bbs"), (a, b) => a === b),
         lit(true)))
       .select(col("doc_new"), col("new_sh"), col("doc_base"))
-    val out = cand.join(baseArr, "doc_base") // stream-static re-attach
+    cand.join(baseArr, "doc_base") // stream-static re-attach
       .withColumn("inter_sz",
         size(array_intersect(col("new_sh"), col("base_sh"))).cast("long"))
       .withColumn("union_sz",
@@ -451,10 +414,6 @@ object Dedup {
       .filter(col("jaccard") >= tau)
       .select(col("doc_new"), col("doc_base"), col("inter_sz"),
         col("union_sz"), col("jaccard"))
-    // a streaming result cannot be eagerly sealed (no count()); its
-    // static index blocks are reclaimed by ContextCleaner when the
-    // query drops — batch callers get the standard seal/release
-    if (incoming.isStreaming) out else sealResult(out, baseSh)
   }
 
   /** SimHash near-dup pairs: pigeonhole banding — hamming ≤ maxHamming
@@ -470,10 +429,10 @@ object Dedup {
     * production, [[md5Hash60]] for oracle-verifiable runs) and the
     * signature width. */
   def simhashNearDupPairsFrom(sh: DataFrame, maxHamming: Int,
-                              bits: Int = 64): DataFrame = {
+                              bits: Int = 64): DataFrame = Materialize {
     // the per-bit signature aggregation is the expensive stage; both
     // sides of the chunk self-join need it, so compute it once
-    val sig = simHash(sh, bits).persist(StorageLevel.MEMORY_AND_DISK)
+    val sig = hold(simHash(sh, bits))
     val chunks = sig.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(c => struct(lit(c).as("c"),
         shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xFFFFL))
@@ -481,7 +440,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("ch.c"), col("ch.v"))
     val a = chunks.as("a")
     val b = chunks.as("b")
-    val res = a.join(b, col("a.c") === col("b.c") && col("a.v") === col("b.v")
+    a.join(b, col("a.c") === col("b.c") && col("a.v") === col("b.v")
         && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
@@ -490,7 +449,6 @@ object Dedup {
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-    sealResult(res, sig)
   }
 
   /** Exact n-gram Jaccard similarity for ALL pairs above `tau`.
@@ -511,15 +469,11 @@ object Dedup {
                         n: Int, tau: Double,
                         denseVocabLimit: Int = 4096,
                         denseBudgetBytes: Long = 512L * 1024 * 1024)
-      : DataFrame = {
+      : DataFrame = Materialize {
     // both regimes walk the shingle set repeatedly (vocab probe +
     // either the bitset build or prefix-rank/verify legs)
-    val sh = wordShingleHashes(docs, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // both branches seal: the caller's frame carries no cached legs
-    if (denseFits(sh, denseVocabLimit, denseBudgetBytes))
-      sealResult(densePairs(sh, tau), sh)
-    else prefixFilteredPairs(sh, tau, releaseToo = Seq(sh))
+    ngramJaccardPairsFrom(hold(wordShingleHashes(docs, idCol, textCol, n)),
+      tau, denseVocabLimit, denseBudgetBytes)
   }
 
   /** Regime probe: dense is chosen only when the vocabulary is small
@@ -545,15 +499,13 @@ object Dedup {
     * signatures and the exact-Jaccard ground truth walk the same
     * shingle set, and re-shingling internally would repeat the whole
     * tokenize + explode pass over the corpus). The caller owns `sh`'s
-    * persistence lifecycle; only internal legs are persisted and
-    * released here. */
+    * persistence lifecycle; only internal legs are held here. */
   def ngramJaccardPairsFrom(sh: DataFrame, tau: Double,
                             denseVocabLimit: Int = 4096,
                             denseBudgetBytes: Long = 512L * 1024 * 1024)
-      : DataFrame = {
-    if (denseFits(sh, denseVocabLimit, denseBudgetBytes))
-      sealResult(densePairs(sh, tau))
-    else prefixFilteredPairs(sh, tau, releaseToo = Nil)
+      : DataFrame = Materialize {
+    if (denseFits(sh, denseVocabLimit, denseBudgetBytes)) densePairs(sh, tau)
+    else prefixFilteredPairs(sh, tau)
   }
 
   /** Dense regime: broadcast bitsets, distributed all-pairs sweep.
@@ -605,9 +557,6 @@ object Dedup {
   }
 
   /** Sparse regime: prefix-filtered candidate join + exact verify.
-    * `releaseToo`: caller-persisted legs to free with the seal (the
-    * docs-entry path hands its own shingle frame; the From-entry path
-    * leaves the caller-owned frame alone).
     *
     * Besides the prefix filter, the candidate join applies PPJoin's
     * two other prunes (Xiao et al., WWW'08) AT GENERATION — i.e. in
@@ -627,18 +576,16 @@ object Dedup {
     *    shingles sit strictly after (i, j) in both docs), and rows
     *    for later shared shingles only ever remove duplicates. The
     *    double comparison errs on the KEEP side only. */
-  private def prefixFilteredPairs(sh: DataFrame, tau: Double,
-                                  releaseToo: Seq[DataFrame]): DataFrame = {
+  private def prefixFilteredPairs(sh: DataFrame, tau: Double): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // global shingle frequency → rarity rank within each document
     val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(freq, "shingle")
+    val ranked = hold(sh.join(freq, "shingle") // both sides of the self-join
       .withColumn("rk", row_number().over(Window.partitionBy(col("doc_id"))
         .orderBy(col("df").asc, col("shingle").asc)))
       .join(sizes, "doc_id")
       .filter(col("rk") <= col("sz") - ceil(col("sz") * lit(tau)) + 1)
-      .select(col("doc_id"), col("shingle"), col("rk"), col("sz"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // both sides of the self-join
+      .select(col("doc_id"), col("shingle"), col("rk"), col("sz")))
     val cand = ranked.as("sa")
       .join(ranked.as("sb"), col("sa.shingle") === col("sb.shingle")
         && col("sa.doc_id") < col("sb.doc_id"))
@@ -649,9 +596,7 @@ object Dedup {
         >= lit(tau / (1.0 + tau)) * (col("sa.sz") + col("sb.sz")))
       .select(col("sa.doc_id").as("doc_a"), col("sb.doc_id").as("doc_b"))
       .distinct()
-    // releases `ranked` plus whatever shingle legs the caller handed
-    sealResult(jaccardVerify(cand, sh).filter(col("jaccard") >= tau),
-      (ranked +: releaseToo): _*)
+    jaccardVerify(cand, sh).filter(col("jaccard") >= tau)
   }
 
   /** Exact n-gram CONTAINMENT pairs: ordered (doc_a, doc_b) with
@@ -675,7 +620,7 @@ object Dedup {
     * filter only prunes. One shuffle per leg, all keyed on shingle or
     * doc id; nothing quadratic materializes. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, tau: Double): DataFrame = {
+                       n: Int, tau: Double): DataFrame = Materialize {
     // ONE globally-df-ranked shingle frame feeds the probe prefix,
     // the indexed side, and both verify legs (the window pass was
     // always paid for the prefix — persisting it WITH ranks makes the
@@ -683,16 +628,14 @@ object Dedup {
     // the raw shingle frame feeds THREE branches of the ranked build
     // (freq, sizes, the main leg) — persist it or the corpus-wide
     // tokenize+explode runs three times inside one materialization
-    val sh = wordShingleHashes(docs, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(wordShingleHashes(docs, idCol, textCol, n))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(freq, "shingle")
+    val ranked = hold(sh.join(freq, "shingle")
       .withColumn("rk", row_number().over(Window.partitionBy(col("doc_id"))
         .orderBy(col("df").asc, col("shingle").asc)))
       .join(sizes, "doc_id")
-      .select(col("doc_id"), col("shingle"), col("rk"), col("sz"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("shingle"), col("rk"), col("sz")))
     val prefix = ranked
       .filter(col("rk") <= col("sz") - ceil(col("sz") * lit(tau)) + 1)
     // Candidate prunes AT GENERATION (before the distinct shuffle —
@@ -727,11 +670,10 @@ object Dedup {
         Seq("doc_b", "shingle"))
       .groupBy(col("doc_a"), col("doc_b"), col("sza"))
       .agg(count(lit(1)).as("i"))
-    val res = inter
+    inter
       .filter(col("i").cast("double") / col("sza") >= tau)
       .select(col("doc_a"), col("doc_b"),
         round(col("i").cast("double") / col("sza"), 6).as("containment"))
-    sealResult(res, ranked, sh)
   }
 
   /** Near-duplicate CLUSTERS from a near-dup pair set: connected
@@ -751,14 +693,14 @@ object Dedup {
     * back to [[Graph.connectedComponents]] min-label propagation. Both
     * paths produce identical labels. */
   def nearDupClusters(pairs: DataFrame,
-                      driverLimit: Long = 2000000L): DataFrame = {
+                      driverLimit: Long = 2000000L): DataFrame = Materialize {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val p = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val p = hold(pairs.select(col("doc_a").cast("long"),
+      col("doc_b").cast("long")))
     if (p.count() <= driverLimit) {
       val edges = p.as[(Long, Long)].collect()
-      p.unpersist(blocking = false) // fully collected
+      drop(p) // fully collected
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -773,14 +715,8 @@ object Dedup {
       }
       val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
       verts.toSeq.sorted.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
-    } else {
-      // connectedComponents returns a sealed result, so p's cache is
-      // releasable as soon as it returns
-      val labels = Graph.connectedComponents(p, "doc_a", "doc_b")
-        .select(col("v").as("doc_id"), col("comp").as("cluster_id"))
-      p.unpersist(blocking = false)
-      labels
-    }
+    } else Graph.connectedComponents(p, "doc_a", "doc_b")
+      .select(col("v").as("doc_id"), col("comp").as("cluster_id"))
   }
 
   /** The ±1 hyperplane matrix is a deterministic constant — sign
@@ -835,12 +771,11 @@ object Dedup {
     * collide on all bits of a band. */
   def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                             tau: Double = 0.98, bands: Int = 8,
-                            bitsPerBand: Int = 8): DataFrame = {
+                            bitsPerBand: Int = 8): DataFrame = Materialize {
     val v = emb.select(col(idCol).as("vec_id"),
       VectorOps.toDoubleVec(col(vecCol)).as("v"))
     // bands×bits dot products per vector — compute once, join twice
-    val buckets = hyperplaneBuckets(v, bands, bitsPerBand)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val buckets = hold(hyperplaneBuckets(v, bands, bitsPerBand))
     // dedupe candidate ids first — vectors rejoin after the shuffle
     val cand = buckets.as("a")
       .join(buckets.as("b"),
@@ -849,12 +784,11 @@ object Dedup {
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .distinct()
     val cos = VectorOps.nativeCosine(emb.sparkSession)
-    val res = cand
+    cand
       .join(v.as("va"), col("id_a") === col("va.vec_id"))
       .join(v.as("vb"), col("id_b") === col("vb.vec_id"))
       .withColumn("cosine", cos(col("va.v"), col("vb.v")))
       .filter(col("cosine") >= tau)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-    sealResult(res, buckets)
   }
 }

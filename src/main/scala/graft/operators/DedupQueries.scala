@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize.{cut, hold}
+import QueryPack.memoizedParquet
 import graft.Tables
 import graft.functions.VectorOps
 
@@ -76,70 +78,6 @@ object DedupQueries extends QueryPack {
       .agg(min(col("st")).as("s0"), max(col("en")).as("e0"))
   }
 
-  /** The ExactSubstr duplicated-span set (doc_id, s0, e0) shared by
-    * q377 (audit) and q378 (removal): maximal runs of token positions
-    * covered by word 8-grams occurring in ≥2 distinct docs — one
-    * shingle-keyed shuffle + a semi join back + the per-doc fusion.
-    * Deterministic (span membership is a set property of the corpus),
-    * so it follows the stdPairs shared-leg discipline: materialized
-    * to parquet once per (app, dataset) and re-read by both
-    * consumers instead of re-running the shingle shuffle twice. */
-  private val dupSpansMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(memo, key) build locks: a single global lock would
-    * serialize concurrent FIRST builds for unrelated (app, dataset)
-    * keys — parallel suites or dual-scale runs — behind one another
-    * (r12 advisory). The prefix disambiguates keys shared by
-    * different memo maps. */
-  private val memoLocks = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), Object]()
-
-  /** Memoized temp dirs, deleted recursively at JVM exit — for the
-    * app's lifetime they are the shared materialization, but they
-    * must not outlive the process (r12 advisory). */
-  private val memoDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val memoCleanup: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      memoDirs.forEach { d =>
-        try {
-          java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Throwable => () } // best-effort at exit
-      }))
-    ()
-  }
-
-  /** Atomic memoized-materialization: TrieMap.getOrElseUpdate
-    * evaluates its by-name default OUTSIDE any per-key lock, so two
-    * concurrent first callers would both run the expensive build and
-    * leak the loser's temp dir (review finding). The builds are
-    * deterministic so a race was never a correctness issue — this
-    * just guarantees one build and one directory per key, without
-    * serializing DIFFERENT keys' first builds behind each other. */
-  private def memoizedParquet(
-      memo: scala.collection.concurrent.TrieMap[(String, String),
-        String],
-      s: SparkSession, d: String, prefix: String)(
-      build: => DataFrame): DataFrame = {
-    memoCleanup
-    val key = (s.sparkContext.applicationId, d)
-    val lock = memoLocks.computeIfAbsent((key._1, key._2, prefix),
-      _ => new Object)
-    val path = lock.synchronized {
-      memo.getOrElseUpdate(key, {
-        val p = java.nio.file.Files
-          .createTempDirectory(prefix).toString
-        build.write.mode("overwrite").parquet(p)
-        memoDirs.add(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
-
   /** The pre-materialization build plan behind [[dupSpans]] —
     * package-visible so PlanQualitySpec can assert on the REAL build
     * (the memoized parquet read would otherwise hide the shingle
@@ -158,9 +96,16 @@ object DedupQueries extends QueryPack {
     fuseSpans(marks).select(col("doc_id"), col("s0"), col("e0"))
   }
 
+  /** The ExactSubstr duplicated-span set (doc_id, s0, e0) shared by
+    * q377 (audit) and q378 (removal): maximal runs of token positions
+    * covered by word 8-grams occurring in ≥2 distinct docs — one
+    * shingle-keyed shuffle + a semi join back + the per-doc fusion.
+    * Deterministic (span membership is a set property of the corpus),
+    * so it follows the stdPairs shared-leg discipline: materialized
+    * to parquet once per (app, dataset) and re-read by both
+    * consumers instead of re-running the shingle shuffle twice. */
   private def dupSpans(s: SparkSession, d: String): DataFrame =
-    memoizedParquet(dupSpansMemo, s, d, "graft-dupspans-")(
-      dupSpanBuild(s, d))
+    memoizedParquet(s, d, "graft-dupspans-")(dupSpanBuild(s, d))
 
   /** The STANDARD-PARAMETER LSH near-dup pair set over [[corpus]]
     * (shingleN=3, k=32, bands=16, τ=0.5) — six queries (q42, q81,
@@ -169,27 +114,21 @@ object DedupQueries extends QueryPack {
     * (~2 s × 6 at sf0.1). Same shared-leg discipline as the memoized
     * perceptron trainer (TextQueries) and the graph family's
     * co-occurrence edge list (GraphQueries): materialized to parquet
-    * once per (app, dataset) — immune to the harness's between-query
-    * cache sweeps — and re-read by every consumer. The pair set is
+    * once per (app, dataset) — the table outlives the scope of the
+    * query that builds it — and re-read by every consumer. The pair set is
     * deterministic (exact-Jaccard verified, so LSH banding order
     * can't affect membership), hence the materialized table is
     * bit-identical to a fresh build and no oracle changes. */
-  private val stdPairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   private def stdPairs(s: SparkSession, d: String): DataFrame =
-    memoizedParquet(stdPairsMemo, s, d, "graft-lshpairs-")(
+    memoizedParquet(s, d, "graft-lshpairs-")(
       Dedup.minhashNearDupPairs(corpus(s, d), "doc_id", "text",
         shingleN = 3, k = 32, bands = 16, tau = 0.5))
 
   /** Near-dup clusters over [[stdPairs]] — the (doc_id, cluster_id)
     * labeling four of the six consumers need. Deterministic (min-label
     * components), memoized the same way. */
-  private val stdClustersMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   private def stdClusters(s: SparkSession, d: String): DataFrame =
-    memoizedParquet(stdClustersMemo, s, d, "graft-lshclusters-")(
+    memoizedParquet(s, d, "graft-lshclusters-")(
       Dedup.nearDupClusters(stdPairs(s, d)))
 
   /** The pack's three memoized shared tables, exposed for the bench's
@@ -254,7 +193,7 @@ object DedupQueries extends QueryPack {
       |   text || ' zq0 zq1 zq2' AS text
       |  FROM samp WHERE doc_id % 2 = 0)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Exact dedup: shuffle digests, keep min id. On the derived corpus
     // every text is still unique (mutations differ) — so run it on a
     // corpus that also duplicates some texts verbatim.
@@ -306,7 +245,7 @@ object DedupQueries extends QueryPack {
             concat(col("text"), lit(mark12)).as("text")))
       val pairs = Dedup.minhashNearDupPairs(cor, "doc_id", "text",
         shingleN = 3, k = 32, bands = 16, tau = 0.85)
-      val comp = Dedup.nearDupClusters(pairs)
+      val comp = hold(Dedup.nearDupClusters(pairs)) // read twice below
       val seeds = docs.filter(col("doc_id") % 29 === 0)
         .select(col("doc_id"))
       val cont = comp.join(seeds, Seq("doc_id"), "left_semi")
@@ -446,25 +385,16 @@ object DedupQueries extends QueryPack {
       // fixed-size unbiased sample changes nothing methodologically
       // while capping the exact-truth leg at O(CalibDocs²) forever
       val c = calibCorpus(s, d)
-      // ONE shingle pass feeds both the SimHash leg and the exact
-      // truth leg (persisted; ngramJaccardPairsFrom leaves caller-
-      // owned frames alone) — re-shingling per leg would repeat the
+      // ONE held shingle pass feeds both the SimHash leg and the exact
+      // truth leg — re-shingling per leg would repeat the
       // tokenize+explode pass over the sample
-      val sh = Dedup.wordShingles(c, "doc_id", "text", 3)
-        .select(col("doc_id"), Dedup.md5Hash60(col("shingle")).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = hold(Dedup.wordShingles(c, "doc_id", "text", 3)
+        .select(col("doc_id"), Dedup.md5Hash60(col("shingle")).as("shingle")))
       val sim = Dedup.simhashNearDupPairsFrom(sh, maxHamming = 3, bits = 60)
       // truth feeds BOTH the corpus-wide count and the per-pair join —
-      // persist it or the whole exact-Jaccard pass runs twice when
-      // the caller disables the operators' eager seal (Bench does).
-      // Lifecycle follows the sealResult convention: the persisted
-      // blocks (truth AND sh) are released by ContextCleaner once the
-      // returned frame (whose plan pins the InMemoryRelations) is
-      // dropped; sealed callers (Verify) additionally clearCache per
-      // query.
-      val truth = Dedup.ngramJaccardPairsFrom(sh, tau = 0.7)
-        .select(col("doc_a"), col("doc_b"), lit(1L).as("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // held, or the whole exact-Jaccard pass runs twice
+      val truth = hold(Dedup.ngramJaccardPairsFrom(sh, tau = 0.7)
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("t")))
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       val grid = sim
         .join(truth, Seq("doc_a", "doc_b"), "left")
@@ -497,17 +427,14 @@ object DedupQueries extends QueryPack {
     "q185_lsh_scurve" -> ((s, d) => {
       // hash-rank bounded sample + one shared shingle pass (q184 note)
       val c = calibCorpus(s, d)
-      val shl = Dedup.wordShingles(c, "doc_id", "text", 3)
-        .select(col("doc_id"), Dedup.md5Hash60(col("shingle")).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val shl = hold(Dedup.wordShingles(c, "doc_id", "text", 3)
+        .select(col("doc_id"), Dedup.md5Hash60(col("shingle")).as("shingle")))
       // signature frame feeds both sides of the bucket self-join
-      val sig = Dedup.minHashSignaturesArith(shl, k = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sig = hold(Dedup.minHashSignaturesArith(shl, k = 8))
       val cand = Dedup.lshCandidatePairsArith(sig, k = 8, bands = 4)
         .withColumn("hit", lit(1L))
       // truth feeds the bucket counts AND the join (q184 lifecycle)
-      val truth = Dedup.ngramJaccardPairsFrom(shl, tau = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val truth = hold(Dedup.ngramJaccardPairsFrom(shl, tau = 0.5))
       truth.join(cand, Seq("doc_a", "doc_b"), "left")
         .select(least(floor(col("jaccard") * 10).cast("long"), lit(9L))
             .as("j_bucket"),
@@ -801,8 +728,7 @@ object DedupQueries extends QueryPack {
         "doc_id", "text", 3)
         .select(col("doc_id"),
           Dedup.md5Hash60(col("shingle")).as("shingle"))
-      val sig = Dedup.minHashSignaturesArith(sh, k = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sig = hold(Dedup.minHashSignaturesArith(sh, k = 8))
       val M = 1000000007L
       val pow31 = Array(1L, 31L, 961L, 29791L, 923521L, 28629151L,
         887503681L, 512613922L) // 31^j % M, j = 0..7 (r <= 8)
@@ -867,20 +793,18 @@ object DedupQueries extends QueryPack {
     // side is the production bucket join. Complements q239, which
     // measures cost (candidate volume) but not recall.
     "q269_blocking_quality" -> ((s, d) => {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val samp = Tables.documents(s, d).select(col("doc_id"), col("text"))
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
         .limit(250)
       val planted = samp.filter(pmod(col("doc_id"), lit(3L)) === 0L)
         .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
           concat(col("text"), lit(" zq0 zq1 zq2")).as("text"))
-      val corpus = samp.unionByName(planted).persist(lvl)
-      val sh = Dedup.wordShingles(corpus, "doc_id", "text", 3)
+      val corpus = hold(samp.unionByName(planted))
+      val sh = hold(Dedup.wordShingles(corpus, "doc_id", "text", 3)
         .select(col("doc_id"),
-          Dedup.md5Hash60(col("shingle")).as("shingle"))
-        .persist(lvl)
+          Dedup.md5Hash60(col("shingle")).as("shingle")))
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val truth = sh.as("a").join(sh.as("b"),
+      val truth = hold(sh.as("a").join(sh.as("b"),
           col("a.shingle") === col("b.shingle")
             && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"),
@@ -890,7 +814,7 @@ object DedupQueries extends QueryPack {
         .join(sizes.as("zb"), col("doc_b") === col("zb.doc_id"))
         .filter(col("inter") * 2L >=
           col("za.sz") + col("zb.sz") - col("inter"))
-        .select(col("doc_a"), col("doc_b")).persist(lvl)
+        .select(col("doc_a"), col("doc_b")))
       val sig = Dedup.minHashSignaturesArith(sh, k = 8)
       val M = 1000000007L
       val slots = (0 until 4).map { band =>
@@ -902,12 +826,12 @@ object DedupQueries extends QueryPack {
         .select(col("doc_id"), explode(array(slots: _*)).as("t"))
         .select(col("doc_id"), col("t.band").as("band"),
           col("t.key").as("key"))
-      val cand = buckets.as("a").join(buckets.as("b"),
+      val cand = hold(buckets.as("a").join(buckets.as("b"),
           col("a.band") === col("b.band")
             && col("a.key") === col("b.key")
             && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct().persist(lvl)
+        .distinct())
       corpus.agg(count(lit(1)).as("n_docs"))
         .crossJoin(broadcast(
           cand.agg(count(lit(1)).as("n_cand_pairs"))))
@@ -955,8 +879,8 @@ object DedupQueries extends QueryPack {
           "transform(sequence(1, size(w) - 4), " +
             "i -> concat_ws(' ', slice(w, i, 5)))")).as("g"))
         .distinct()
-      val bench = grams(docs.filter(col("doc_id") < 25L))
-        .localCheckpoint() // feeds bits + membership + count (3 legs)
+      // feeds bits + membership + count (3 legs)
+      val bench = cut(grams(docs.filter(col("doc_id") < 25L)))
       val h = Dedup.md5Hash60(col("g"))
       def positions(df: DataFrame) = df
         .select(col("g"), pmod(h, lit(m)).as("h1"),
@@ -966,10 +890,9 @@ object DedupQueries extends QueryPack {
           explode(sequence(lit(0L), lit(k - 1L))).as("i"))
         .select(col("g"),
           pmod(col("h1") + col("i") * col("h2"), lit(m)).as("b"))
-      val bits = positions(bench).select(col("b")).distinct()
-        .localCheckpoint() // ≤ m rows by construction
-      val probes = grams(docs.filter(col("doc_id") >= 25L))
-        .localCheckpoint() // feeds positions + exact membership
+      val bits = cut(positions(bench).select(col("b")).distinct()) // ≤ m rows
+      // feeds positions + exact membership
+      val probes = cut(grams(docs.filter(col("doc_id") >= 25L)))
       val hit = positions(probes)
         .join(broadcast(bits.withColumn("st", lit(1L))), Seq("b"),
           "left")

@@ -41,7 +41,7 @@ object EngineQueries extends QueryPack {
     case _ => ()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // CSV LOAD round-trip: dump customer to a header CSV with a
     // deterministically corrupted acctbal on every 97th key, LOAD it
     // into a typed scope table (per-row cast validation sends the

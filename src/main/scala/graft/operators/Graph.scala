@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import graft.Materialize
+import graft.Materialize.cut
 
 /** Graph operators over the NoWDB edge model (SURVEY §1.1: a graph is
   * vertex-type tables + edge tables with origin/destin FKs; M6 in the
@@ -17,9 +16,10 @@ import org.apache.spark.sql.functions._
   * multi-hop ops chain equi-joins (AQE picks broadcast vs SMJ by
   * side size). The iterative operators all run on one superstep
   * driver ([[superstep]]), Pregelix's shape: each round is a join
-  * plus a group-by over the live state, with the lineage cut, the
-  * halt probe and the release of every intermediate owned by the
-  * driver, and the result sealed once.
+  * plus a group-by over the live state, with the lineage cut and the
+  * halt probe owned by the driver. Each operator is one
+  * [[graft.Materialize]] boundary, which releases every cut
+  * intermediate and seals the result once when it is outermost.
   */
 object Graph {
 
@@ -60,61 +60,40 @@ object Graph {
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
 
-  /** The superstep driver's held-frame scope. An operator cuts its
-    * shared inputs with [[cut]] and runs its rounds with [[rounds]];
-    * [[superstep]] seals what the operator returns and then releases
-    * every frame cut here. */
-  private final class Scope {
-    private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-
-    /** Lazy lineage cut: the first job that reads the frame
-      * materialises it once; its blocks are held until the seal. */
-    def cut(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(false)
-      held += rddOf(c)
-      c
-    }
-
-    /** Runs `step(state, round)` for rounds 1..`n` from `init`; the
-      * last state is left to the seal. With a `probe` column every
-      * state is cut, and the loop stops early once the column's sum
-      * over the cut state repeats — one job per round that also
-      * materialises the cut, so no later round ships an unmaterialised
-      * plan in its task binaries (OPTIMIZATION_r16 §G). A stamp column
-      * (the round that last changed the row) repeats its sum exactly
-      * when the round's delta had no rows; CC's labels repeat theirs
-      * once they stop moving. Without a probe the round count is
-      * fixed, as the oracle replays those loops round for round, and
-      * states are cut only when the step reads its state more than
-      * once: that plan would double each round, while a step that
-      * reads it once grows it by one round and runs with the seal as
-      * one DAG (a cut there costs each round its own jobs). */
-    def rounds(init: DataFrame, n: Int, probe: Option[String] = None)(
-        step: (DataFrame, Int) => DataFrame): DataFrame =
-      if (probe.isEmpty && n > 0 && reads(step, init) < 2)
-        (1 to n).foldLeft(init)((state, r) => step(state, r))
-      else {
-        @scala.annotation.tailrec
-        def go(state: DataFrame, r: Int, last: Option[BigInt]): DataFrame = {
-          val next = step(state, r)
-          if (r == n) next
-          else {
-            val c = cut(next)
-            val now = probe.map(sumOf(c, _))
-            if (now.isDefined && now == last) c else go(c, r + 1, now)
-          }
+  /** Runs `step(state, round)` for rounds 1..`n` from `init`; the
+    * last state is left to the caller's seal. With a `probe` column
+    * every state is cut, and the loop stops early once the column's
+    * sum over the cut state repeats — one job per round that also
+    * materialises the cut, so no later round ships an unmaterialised
+    * plan in its task binaries (OPTIMIZATION_r16 §G). A stamp column
+    * (the round that last changed the row) repeats its sum exactly
+    * when the round's delta had no rows; CC's labels repeat theirs
+    * once they stop moving. Without a probe the round count is fixed,
+    * as the oracle replays those loops round for round, and states
+    * are cut only when the step reads its state more than once: that
+    * plan would double each round, while a step that reads it once
+    * grows it by one round and runs with its consumer as one DAG (a
+    * cut there costs each round its own jobs). */
+  private def superstep(init: DataFrame, n: Int,
+      probe: Option[String] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    if (probe.isEmpty && n > 0 && reads(step, init) < 2)
+      (1 to n).foldLeft(init)((state, r) => step(state, r))
+    else {
+      @scala.annotation.tailrec
+      def go(state: DataFrame, r: Int, last: Option[BigInt]): DataFrame = {
+        val next = step(state, r)
+        if (r == n) next
+        else {
+          val c = cut(next)
+          val now = probe.map(sumOf(c, _))
+          if (now.isDefined && now == last) c else go(c, r + 1, now)
         }
-        val s0 = cut(init)
-        if (n < 1) s0
-        else go(s0, 1, if (n > 1) probe.map(sumOf(s0, _)) else None)
       }
-
-    def release(): Unit = held.foreach(_.unpersist(blocking = false))
-  }
-
-  /** A cut frame scans the persisted RDD it was checkpointed into. */
-  private def rddOf(cut: DataFrame): RDD[InternalRow] =
-    cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      val s0 = cut(init)
+      if (n < 1) s0
+      else go(s0, 1, if (n > 1) probe.map(sumOf(s0, _)) else None)
+    }
 
   /** How many times `step` reads its state: round 1 is built (not
     * run) over `init` under a marker alias and the markers are
@@ -130,22 +109,10 @@ object Graph {
   private def sumOf(cut: DataFrame, c: String): BigInt = {
     val i = cut.schema.fieldIndex(c)
     val t = cut.schema(i).dataType
-    rddOf(cut).map(row => row.get(i, t) match {
+    Materialize.rddOf(cut).map(row => row.get(i, t) match {
       case n: Number => BigInt(n.longValue)
       case _ => BigInt(0)
     }).fold(BigInt(0))(_ + _)
-  }
-
-  /** Runs an operator on a fresh [[Scope]], seals its result with one
-    * eager materialisation and releases every frame the scope held,
-    * also on failure — a long-lived caller (the wire `Server`) would
-    * otherwise accumulate them for the application's lifetime.
-    * `Dataset.unpersist` does not reach a localCheckpoint frame, so the
-    * release unpersists the RDDs themselves. */
-  private def superstep(body: Scope => DataFrame): DataFrame = {
-    val scope = new Scope
-    try body(scope).localCheckpoint(true)
-    finally scope.release()
   }
 
   /** Both directions of every edge as (u, v, carry…), by in-row
@@ -172,7 +139,7 @@ object Graph {
     * id-ordering (the naive oracle formulation) has no such bound.
     * Output: one row, `n_triangles`. */
   def triangleCount(edges: DataFrame, src: String,
-                    dst: String): DataFrame = superstep { s =>
+                    dst: String): DataFrame = Materialize {
     val e = edges
       .select(least(col(src), col(dst)).as("u"),
         greatest(col(src), col(dst)).as("v"))
@@ -187,7 +154,7 @@ object Graph {
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           struct(col("u").as("a"), col("v").as("b")))
           .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-    val o = s.cut(ranked.select(col("e.a").as("a"), col("e.b").as("b")))
+    val o = cut(ranked.select(col("e.a").as("a"), col("e.b").as("b")))
     // wedges at the low endpoint, π-ordered so (b, c) is oriented
     val w1 = o.select(col("a"), col("b"))
     val w2 = o.select(col("a"), col("b").as("c"))
@@ -205,11 +172,11 @@ object Graph {
   }
 
   /** The (s, d) edge set and its vertex set, both cut in `s`. */
-  private def edgesAndVerts(s: Scope, edges: DataFrame, src: String,
+  private def edgesAndVerts(edges: DataFrame, src: String,
                             dst: String): (DataFrame, DataFrame) = {
-    val e = s.cut(edges.select(col(src).as("s"), col(dst).as("d"))
+    val e = cut(edges.select(col(src).as("s"), col(dst).as("d"))
       .distinct())
-    (e, s.cut(e.select(col("s").as("v"))
+    (e, cut(e.select(col("s").as("v"))
       .unionAll(e.select(col("d").as("v"))).distinct()))
   }
 
@@ -219,11 +186,11 @@ object Graph {
     * aggregation on dst. Output: (vertex, rank). */
   def pageRank(edges: DataFrame, src: String, dst: String,
                iters: Int = 10, damping: Double = 0.85): DataFrame =
-    superstep { s =>
-      val (e, verts) = edgesAndVerts(s, edges, src, dst)
+    Materialize {
+      val (e, verts) = edgesAndVerts(edges, src, dst)
       val n = verts.count()
       val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-      s.rounds(verts.withColumn("rank", lit(1.0 / n)), iters) { (ranks, _) =>
+      superstep(verts.withColumn("rank", lit(1.0 / n)), iters) { (ranks, _) =>
         val withDeg = ranks.join(outDeg, ranks("v") === outDeg("s"), "left")
           .select(col("v"), col("rank"), col("deg"))
         // dangling vertices (no out-edges) spread their rank uniformly.
@@ -265,13 +232,13 @@ object Graph {
     * queries, not convergence runs). */
   def pageRankInt(edges: DataFrame, src: String, dst: String,
                   iters: Int = 3, scale: Long = 1000000000000L): DataFrame =
-    superstep { s =>
-      val (e, verts) = edgesAndVerts(s, edges, src, dst)
+    Materialize {
+      val (e, verts) = edgesAndVerts(edges, src, dst)
       val n = verts.agg(count(lit(1)).as("n_verts"))
       val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
       val ranks0 = verts.crossJoin(broadcast(n))
         .select(col("v"), idiv(lit(scale), col("n_verts")).as("rank"))
-      s.rounds(ranks0, iters) { (ranks, _) =>
+      superstep(ranks0, iters) { (ranks, _) =>
         val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
           .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
           .join(e, "s")
@@ -295,9 +262,9 @@ object Graph {
     * all arithmetic is integer div so DuckDB replays it bit-exactly. */
   def personalizedPageRankInt(edges: DataFrame, src: String,
       dst: String, seeds: DataFrame, seedCol: String, iters: Int = 3,
-      scale: Long = 1000000000000L): DataFrame = superstep { s =>
-    val (e, verts) = edgesAndVerts(s, edges, src, dst)
-    val sd = s.cut(seeds.select(col(seedCol).as("v")).distinct()
+      scale: Long = 1000000000000L): DataFrame = Materialize {
+    val (e, verts) = edgesAndVerts(edges, src, dst)
+    val sd = cut(seeds.select(col(seedCol).as("v")).distinct()
       .join(verts, Seq("v"), "left_semi"))
     // fail fast on an empty (post-semi-join) seed set: n_seeds = 0
     // would null every integer-div teleport term and silently emit
@@ -306,13 +273,13 @@ object Graph {
       "personalizedPageRankInt: seed set shares no vertex with the " +
         "graph - ranks would be all-null")
     val ns = sd.agg(count(lit(1)).as("n_seeds"))
-    val base = s.cut(verts
+    val base = cut(verts
       .join(sd.withColumn("is_seed", lit(1L)), Seq("v"), "left")
       .crossJoin(broadcast(ns))
       .select(col("v"), (coalesce(col("is_seed"), lit(0L))
         * idiv(lit(scale), col("n_seeds"))).as("tp")))
     val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    s.rounds(base.select(col("v"), col("tp").as("rank")), iters) {
+    superstep(base.select(col("v"), col("tp").as("rank")), iters) {
       (ranks, _) =>
         val contrib = ranks.join(outDeg, ranks("v") === outDeg("s"))
           .select(col("s"), idiv(col("rank"), col("deg")).as("c"))
@@ -340,9 +307,9 @@ object Graph {
     * Dijkstra never would. */
   def bfsDistances(edges: DataFrame, src: String, dst: String,
                    seeds: DataFrame, seedCol: String,
-                   maxHops: Int): DataFrame = superstep { s =>
-    val sym = s.cut(symmetrize(edges, src, dst))
-    s.rounds(seeds.select(col(seedCol).as("v")).distinct()
+                   maxHops: Int): DataFrame = Materialize {
+    val sym = cut(symmetrize(edges, src, dst))
+    superstep(seeds.select(col(seedCol).as("v")).distinct()
         .withColumn("dist", lit(0L)), maxHops, Some("dist")) {
       (visited, hop) =>
         visited.unionAll(sym
@@ -365,9 +332,9 @@ object Graph {
     * one BFS job per landmark. */
   def bfsDistancesLabeled(edges: DataFrame, src: String, dst: String,
                           seeds: DataFrame, seedCol: String,
-                          maxHops: Int): DataFrame = superstep { s =>
-    val sym = s.cut(symmetrize(edges, src, dst))
-    s.rounds(seeds.select(col(seedCol).as("seed")).distinct()
+                          maxHops: Int): DataFrame = Materialize {
+    val sym = cut(symmetrize(edges, src, dst))
+    superstep(seeds.select(col(seedCol).as("seed")).distinct()
         .select(col("seed"), col("seed").as("v"), lit(0L).as("dist")),
         maxHops, Some("dist")) { (visited, hop) =>
       visited.unionAll(sym
@@ -393,9 +360,9 @@ object Graph {
     * can't either). */
   def ssspBounded(edges: DataFrame, src: String, dst: String,
                   wCol: String, seeds: DataFrame, seedCol: String,
-                  maxHops: Int): DataFrame = superstep { s =>
-    val sym = s.cut(symmetrize(edges, src, dst, col(wCol).as("w")))
-    s.rounds(seeds.select(col(seedCol).as("v")).distinct()
+                  maxHops: Int): DataFrame = Materialize {
+    val sym = cut(symmetrize(edges, src, dst, col(wCol).as("w")))
+    superstep(seeds.select(col(seedCol).as("v")).distinct()
         .select(col("v"), lit(0L).as("dist"), lit(0L).as("at")),
         maxHops, Some("at")) { (best, hop) =>
       val relax = sym.join(best.filter(col("at") === hop - 1)
@@ -416,9 +383,9 @@ object Graph {
     * fixpoint, so the check rides the driver's one-job probe instead
     * of a join-and-compare pass. */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
-                          maxIter: Int = 20): DataFrame = superstep { s =>
-    val sym = s.cut(symmetrize(edges, src, dst))
-    s.rounds(sym.select(col("u").as("v")).distinct()
+                          maxIter: Int = 20): DataFrame = Materialize {
+    val sym = cut(symmetrize(edges, src, dst))
+    superstep(sym.select(col("u").as("v")).distinct()
         .withColumn("comp", col("v")), maxIter, Some("comp")) {
       (labels, _) =>
         val stepped = labels
@@ -452,12 +419,12 @@ object Graph {
     * of no-op rounds after the fixpoint. Output: (vertex, core_deg)
     * over the surviving subgraph — empty if the graph has no k-core. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
-            rounds: Int): DataFrame = superstep { s =>
+            rounds: Int): DataFrame = Materialize {
     val und = edges
       .select(least(col(src), col(dst)).as("u"),
         greatest(col(src), col(dst)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    s.rounds(symmetrize(und, "u", "v"), rounds) { (g, _) =>
+    superstep(symmetrize(und, "u", "v"), rounds) { (g, _) =>
       // symmetric edge list ⇒ grouping on u alone counts every
       // vertex's full neighborhood
       val alive = g.groupBy(col("u")).agg(count(lit(1)).as("deg"))
@@ -481,9 +448,9 @@ object Graph {
     * label). */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
                        wCol: String, rounds: Int): DataFrame =
-    superstep { s =>
-      val sym = s.cut(symmetrize(edges, src, dst, col(wCol).as("w")))
-      s.rounds(sym.select(col("u").as("v")).distinct()
+    Materialize {
+      val sym = cut(symmetrize(edges, src, dst, col(wCol).as("w")))
+      superstep(sym.select(col("u").as("v")).distinct()
           .withColumn("lbl", col("v")), rounds) { (labels, _) =>
         // argmax via struct max: (weight sum, −label) orders first by
         // ws descending, then by label ASCENDING — the deterministic

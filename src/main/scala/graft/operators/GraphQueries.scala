@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize.{cut, hold}
 import graft.Tables
+import QueryPack.memoizedParquet
 
 /** Graph-operator coverage over the TPC-H relationship structure:
   * customer —orders→ order —lineitem→ supplier forms a two-layer
@@ -18,51 +20,30 @@ object GraphQueries extends QueryPack {
     * shared-leg discipline as the memoized perceptron trainer
     * (TextQueries) and IVF quantizer
     * (Similarity.refinedCentroidsCached). The build is MATERIALIZED
-    * TO PARQUET and re-read per consumer (a reliable checkpoint):
-    * block-manager forms (persist/localCheckpoint) would be destroyed
-    * by the harness's between-query cache sweeps, and a driver
-    * collect would not scale (the pair set grows with the supplier
-    * domain). At 100 TB this is exactly the production shape — the
-    * co-occurrence graph is an intermediate TABLE, built once,
-    * scanned by every downstream graph job. Safe: the build is
-    * deterministic, so the materialized frame is bit-identical to a
-    * fresh one. */
-  private val coMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long, Boolean), String]
-
+    * TO PARQUET and re-read per consumer: the table outlives the
+    * scope of the query that builds it, and a driver collect would
+    * not scale (the pair set grows with the supplier domain). At
+    * 100 TB this is exactly the production shape — the co-occurrence
+    * graph is an intermediate TABLE, built once, scanned by every
+    * downstream graph job. Safe: the build is deterministic, so the
+    * materialized frame is bit-identical to a fresh one. */
   private def supplierCo(s: SparkSession, d: String,
-                         minShared: Long): DataFrame = {
-    val path = coMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, d, minShared, false), {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft-co-$minShared-").toString
-        Graph.commonNeighborPairs(
-            Tables.fanout(s, d, "lineitem", Tables.lineitem(s, d)
-              .select(col("l_orderkey"), col("l_suppkey"))),
-            "l_orderkey", "l_suppkey", minShared)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    s.read.parquet(path)
-  }
+                         minShared: Long): DataFrame =
+    memoizedParquet(s, d, s"graft-co-$minShared-")(
+      Graph.commonNeighborPairs(
+        Tables.fanout(s, d, "lineitem", Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_suppkey"))),
+        "l_orderkey", "l_suppkey", minShared))
 
   /** The q196-family edge cut: top-2000 heaviest co-occurrence edges
     * at minShared=2 (scale-stable size, deterministic total order) —
     * shared by q196/q201/q315/q316. */
-  private def supplierCoTop2000(s: SparkSession, d: String): DataFrame = {
-    val path = coMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, d, 2L, true), {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-co-top2000-").toString
-        supplierCo(s, d, 2L)
-          .orderBy(col("shared").desc, col("d_a").asc, col("d_b").asc)
-          .limit(2000)
-          .coalesce(1) // 2000 rows; a TakeOrdered result, one file
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    s.read.parquet(path)
-  }
+  private def supplierCoTop2000(s: SparkSession, d: String): DataFrame =
+    memoizedParquet(s, d, "graft-co-top2000-")(
+      supplierCo(s, d, 2L)
+        .orderBy(col("shared").desc, col("d_a").asc, col("d_b").asc)
+        .limit(2000)
+        .coalesce(1)) // 2000 rows; a TakeOrdered result, one file
 
   /** Memoized co-occurrence edge tables, exposed for the bench's
     * separately billed pre-build pass (r14 verdict task 6). The
@@ -74,7 +55,7 @@ object GraphQueries extends QueryPack {
       "build_supplier_co_top2000" ->
         ((s, d) => { supplierCoTop2000(s, d); () }))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // in/out degree over the customer→order edge set
     "q68_graph_degrees" -> ((s, d) => {
       val e = Tables.orders(s, d)
@@ -212,13 +193,11 @@ object GraphQueries extends QueryPack {
       // absolute shared-count cut is either a near-clique (sf0.01)
       // or an empty forest (sf0.1); the K-heaviest cut keeps real
       // triangle structure at every SF
-      val g = supplierCoTop2000(s, d)
-        .select(col("d_a"), col("d_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val g = hold(supplierCoTop2000(s, d).select(col("d_a"), col("d_b")))
       val und = g.select(col("d_a").as("c"), col("d_b").as("n"))
         .unionAll(g.select(col("d_b").as("c"), col("d_a").as("n")))
       val M = 1000000007L
-      val adj = und.groupBy(col("c"))
+      val adj = hold(und.groupBy(col("c"))
         .agg(sort_array(collect_set(col("n"))).as("ns"))
         .select(col("c"), size(col("ns")).cast("long").as("deg"),
           filter(flatten(transform(col("ns"), (x, i) =>
@@ -227,8 +206,7 @@ object GraphQueries extends QueryPack {
               y => struct(x.as("a"), y.as("b"))))),
             p => pmod(pmod(col("c") * lit(1000003L)
                 + p.getField("a"), lit(M)) * lit(1000003L)
-              + p.getField("b"), lit(M)) % 8 === 0).as("ws"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              + p.getField("b"), lit(M)) % 8 === 0).as("ws")))
       val tot = adj.agg(
         sum(expr("(deg * (deg - 1)) DIV 2")).cast("long")
           .as("n_wedges"))
@@ -277,8 +255,7 @@ object GraphQueries extends QueryPack {
       val co = supplierCo(s, d, 10L)
       // the edge list feeds hub pick + BOTH CC runs — checkpoint it
       // once or the co-occurrence aggregate re-runs three times
-      val e = Graph.symmetrize(co, "d_a", "d_b")
-        .localCheckpoint()
+      val e = cut(Graph.symmetrize(co, "d_a", "d_b"))
       val hubs = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("u").asc).limit(5)
         .select(col("u"))
@@ -416,11 +393,11 @@ object GraphQueries extends QueryPack {
     // edge cut keeps the graph size scale-stable.
     "q315_link_prediction" -> ((s, d) => {
       val co = supplierCoTop2000(s, d) // already checkpointed (memo)
-      val e = co.select(explode(array(
+      // feeds deg + both wedge legs: 3 consumers
+      val e = cut(co.select(explode(array(
           struct(col("d_a").as("u"), col("d_b").as("v")),
           struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-        .localCheckpoint() // feeds deg + both wedge legs: 3 consumers
+        .select(col("p.u").as("u"), col("p.v").as("v")))
       val deg = e.groupBy(col("u")).agg(count(lit(1)).as("dg"))
       val wedges = e.select(col("u").as("z"), col("v").as("a"))
         .join(e.select(col("u").as("z"), col("v").as("b")), Seq("z"))
@@ -475,11 +452,10 @@ object GraphQueries extends QueryPack {
     // degrees; C is one division rounded 6 dp.
     "q354_clustering_coeff" -> ((s, d) => {
       val e = supplierCoTop2000(s, d).select(col("d_a"), col("d_b"))
-      val sym = e.select(explode(array(
+      val sym = cut(e.select(explode(array(
           struct(col("d_a").as("u"), col("d_b").as("v")),
           struct(col("d_b").as("u"), col("d_a").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-        .localCheckpoint()
+        .select(col("p.u").as("u"), col("p.v").as("v")))
       val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       val tri = sym.as("a")
         .join(sym.as("b"),

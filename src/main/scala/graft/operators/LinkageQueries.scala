@@ -14,7 +14,7 @@ import graft.Tables
   * recall-qualified. */
 object LinkageQueries extends QueryPack {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Blocked fuzzy join: 15k-name register, suffix-4 blocking,
     // Levenshtein <= 1 verify. One equi-join shuffle; block sizes are
     // bounded by suffix cardinality, so candidates grow linearly.

@@ -22,7 +22,7 @@ object MultimodalQueries extends QueryPack {
       .filter(col("kind") === kind).as[MediaRecord]
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Manifest over the opaque binary column: sizes + digests.
     // Audio near-dup via landmark fingerprints (the Wang/Shazam
     // constellation idea in deterministic integer form): windowed

@@ -12,7 +12,7 @@ import graft.functions.{NowFunctions => F, NowAggregates => A}
   */
 object NowQueries extends QueryPack {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // wday: C tm_wday Sun=0..Sat=6; yday: 0-based (expr.c:2149-2155).
     "q33_wday_yday" -> ((s, d) => {
       Tables.orders(s, d).select(

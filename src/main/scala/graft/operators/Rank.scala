@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
+import graft.Materialize.hold
 
 /** Distributed global ranking without a single-partition window.
   *
@@ -35,21 +37,19 @@ object Rank {
     */
   def distributedRank(df: DataFrame, order: Seq[Column],
                       spark: SparkSession,
-                      withTotal: Boolean = false): DataFrame = {
+                      withTotal: Boolean = false): DataFrame = Materialize {
     val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // PERSIST the ranged frame: spark_partition_id() is tagged
+    // HOLD the ranged frame: spark_partition_id() is tagged
     // nondeterministic, which defeats ReuseExchange (`sameResult` is
     // false for two instances of this subplan), so without the cache
     // mark every consumer leg below — the window, the sizes table,
     // both sides of the triangle join — would rescan the input and
     // re-run the range exchange (measured: 4 scans + 4 exchanges,
     // ~2× wall on a corpus-sized input). The cache block is slim
-    // (order keys + payload), spills to disk at scale, and is freed
-    // by ContextCleaner when the returned frame is dropped — the
-    // same leg discipline as Dedup.sealResult's unsealed path.
-    val parted = df.repartitionByRange(n, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (order keys + payload), spills to disk at scale, and is released
+    // when the enclosing Materialize scope closes.
+    val parted = hold(df.repartitionByRange(n, order: _*)
+      .withColumn("__pid", spark_partition_id()))
     // Window partitioned by __pid: one task per range partition, full
     // cluster parallelism (the exchange it introduces is hash-by-pid,
     // not SinglePartition).
@@ -79,13 +79,12 @@ object Rank {
     */
   def distributedPrefixSum(df: DataFrame, order: Seq[Column],
                            value: Column, spark: SparkSession,
-                           withTotal: Boolean = false): DataFrame = {
+                           withTotal: Boolean = false): DataFrame = Materialize {
     val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // persisted for the same ReuseExchange-defeat reason as
+    // held for the same ReuseExchange-defeat reason as
     // distributedRank above
-    val parted = df.repartitionByRange(n, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val parted = hold(df.repartitionByRange(n, order: _*)
+      .withColumn("__pid", spark_partition_id()))
     val wp = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = parted.withColumn("__run", sum(value).over(wp))

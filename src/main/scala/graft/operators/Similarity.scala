@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize
+import graft.Materialize.hold
 import graft.functions.VectorOps._
 
 /** Approximate / exact nearest-neighbor search over an embedding
@@ -448,12 +450,11 @@ object Similarity {
     * members — rank-1's radius bounds the k-center objective).
     */
   def kCenterCoreset(emb: DataFrame, idCol: String, vecCol: String,
-                     k: Int): DataFrame = {
+                     k: Int): DataFrame = Materialize {
     require(k >= 1, "k must be positive")
-    val qv = emb.select(col(idCol).as("vec_id"),
+    val qv = hold(emb.select(col(idCol).as("vec_id"),
         transform(toDoubleVec(col(vecCol)),
-          x => round(x * 1000000).cast("long")).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          x => round(x * 1000000).cast("long")).as("q")))
     def d2To(center: Seq[Long]): Column =
       aggregate(zip_with(col("q"), typedlit(center),
         (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize.hold
 import graft.Tables
 import graft.functions.Sketches
 
@@ -19,7 +20,7 @@ import graft.functions.Sketches
   */
 object SketchQueries extends QueryPack {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // per-event-type approximate distinct users, k=256 (~6% σ);
     // arithmetic hash family → DuckDB recomputes the estimate exactly
     "q80_kmv_distinct" -> ((s, d) =>
@@ -75,10 +76,9 @@ object SketchQueries extends QueryPack {
     // identical sketch and estimates, integer-exact.
     "q227_countmin_words" -> ((s, d) => {
       val width = 1024L
-      val wc = Tables.documents(s, d)
+      val wc = hold(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("word")).agg(count(lit(1)).as("c")))
       val rows = s.range(4).select(col("id").as("r"))
       def cellId = pmod(
         Dedup.md5Hash60(concat_ws("_", col("r"), col("word"))),

@@ -13,7 +13,7 @@ import graft.Tables
   * order-independent — the salted two-phase reduce can't perturb it. */
 object SkewQueries extends QueryPack {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Skew diagnosis: per candidate join/agg key, the population stats
     // that decide WHETHER to salt (q78/q79 are the mitigation; this is
     // the measurement): distinct keys, hottest key and its share, and

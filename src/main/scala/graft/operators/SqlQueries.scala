@@ -28,7 +28,7 @@ object SqlQueries extends QueryPack {
       case other => throw new IllegalStateException(s"$sql -> $other")
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // group + count + exact truncating toint (NoWDB conversion fn)
     "q62_sql_group" -> q(
       """select l_returnflag, l_linestatus, count(*) as n,

@@ -17,7 +17,7 @@ object StreamingQueries extends QueryPack {
   private def ev(s: SparkSession, d: String): DataFrame =
     EventStreams.withEventTime(Tables.events(s, d))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Tumbling 1-day event-time windows per event_type.
     "q53_window_tumbling" -> ((s, d) =>
       EventStreams.tumblingAgg(ev(s, d), "1 day")),

@@ -10,7 +10,7 @@ import graft.functions.NowFunctions
   * oracle is the plain theta join the binned plan must agree with. */
 object TemporalQueries extends QueryPack {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // For every click, the latest view of the same user at or before
     // it (the canonical as-of lookup over an event stream).
     "q76_asof_join" -> ((s, d) => {

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize
+import graft.Materialize.hold
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, and document fingerprinting.
@@ -446,11 +448,10 @@ object TextAnalysis {
     * benchmark side is tiny → broadcast). */
   def decontaminationScores(corpus: DataFrame, benchmark: DataFrame,
                             idCol: String, textCol: String,
-                            n: Int): DataFrame = {
+                            n: Int): DataFrame = Materialize {
     // overlap only needs set identity → 8-byte shingle hashes, and
-    // docSh feeds both legs (sizes + shared) → persist once
-    val docSh = Dedup.wordShingleHashes(corpus, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // docSh feeds both legs (sizes + shared) → held once
+    val docSh = hold(Dedup.wordShingleHashes(corpus, idCol, textCol, n))
     val benchSh = Dedup.wordShingleHashes(benchmark, idCol, textCol, n)
       .select(col("shingle")).distinct()
     val sizes = docSh.groupBy(col("doc_id"))
@@ -479,7 +480,8 @@ object TextAnalysis {
     * handles the physical strategy at any scale. */
   def curateCorpus(docs: DataFrame, idCol: String, textCol: String,
                    minQuality: Double = 0.7, lang: String = "en",
-                   shingleN: Int = 3, nearDupTau: Double = 0.5): DataFrame = {
+                   shingleN: Int = 3,
+                   nearDupTau: Double = 0.5): DataFrame = Materialize {
     // Both gates are row-local expressions, so the whole quality+
     // language filter is ONE narrow codegen'd projection over the
     // corpus scan — no gate joins, no shuffle (an earlier version
@@ -492,44 +494,22 @@ object TextAnalysis {
     // Exact dedup in one shuffle with no join-back: all rows in an
     // md5 group carry identical text, so any_value(text) is
     // deterministic and recovers the survivor's body.
-    val exactKept = kept
+    val exactKept = hold(kept
       .groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id"),
         any_value(col("text")).as("text"))
-      .select(col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Run the dedup stages UNSEALED: nearDupClusters materializes the
-    // pair set itself (persist + count before its guarded union-find),
-    // so the default intra-call seal would only add one more pass +
-    // job over the same pairs. The LSH legs keep their persist marks
-    // and are computed once inside that single materialization; their
-    // blocks are reclaimed by ContextCleaner when this frame is
-    // dropped (sealResult scaladoc documents this contract).
-    // THREAD-LOCAL flip (not the session conf): the wire Server runs
-    // many sessions over one SparkSession, and a global conf flip here
-    // would race their dedup queries (Dedup.sealResult reads the
-    // local property first)
-    val sc = docs.sparkSession.sparkContext
-    val prevSeal = sc.getLocalProperty("spark.graft.sealResults")
-    sc.setLocalProperty("spark.graft.sealResults", "false")
-    val clusters =
-      try Dedup.nearDupClusters(
+      .select(col("doc_id"), col("text")))
+    // The dedup stages run in this operator's scope, so they do not
+    // seal: nearDupClusters materializes the pair set itself (hold +
+    // count before its guarded union-find), and the LSH legs are
+    // computed once inside that single materialization.
+    val losers = Dedup.nearDupClusters(
         Dedup.minhashNearDupPairs(exactKept, "doc_id", "text",
           shingleN = shingleN, tau = nearDupTau))
-      finally sc.setLocalProperty("spark.graft.sealResults", prevSeal)
-    val losers = clusters.filter(col("doc_id") =!= col("cluster_id"))
+      .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
-    // materialize the (small) survivor set, then release the gate
-    // frames — callers get a self-contained result instead of a lazy
-    // plan pinning every intermediate for the session lifetime; the
-    // eager local checkpoint's own blocks are freed by ContextCleaner
-    // once the caller drops the frame (a persist here would pin them
-    // in the cache manager until an explicit release)
-    val out = exactKept.join(losers, Seq("doc_id"), "left_anti")
+    exactKept.join(losers, Seq("doc_id"), "left_anti")
       .select(col("doc_id").as(idCol))
-      .localCheckpoint(true)
-    exactKept.unpersist(blocking = false)
-    out
   }
 
   /** Sequence packing: assign documents (in deterministic id order,

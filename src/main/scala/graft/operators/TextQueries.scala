@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Materialize.{cut, hold}
 import graft.Tables
 
 /** Text-analysis coverage over the documents table. Each oracle
@@ -125,10 +126,9 @@ object TextQueries extends QueryPack {
   }
 
   private def applyBpeRounds(vocab: DataFrame): Seq[DataFrame] = {
-    var cur = vocab.select(col("w"), col("c"), col("s"))
-      .localCheckpoint(false)
+    var cur = cut(vocab.select(col("w"), col("c"), col("s")))
     bpeMerges.map { case (a, b) =>
-      val next = bpeRound(cur, a, b).localCheckpoint(false)
+      val next = cut(bpeRound(cur, a, b))
       cur = next.select(col("w"), col("c"), col("s"))
       next
     }
@@ -149,7 +149,7 @@ object TextQueries extends QueryPack {
       ()
     }))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // BPE merge induction — the tokenizer-vocabulary training step
     // (Sennrich et al. 2016) as textbook ONE-PASS GREEDY (r12,
     // replacing the r11 boundary-space deviation): 5 merge rounds
@@ -176,13 +176,12 @@ object TextQueries extends QueryPack {
     "q371_bpe_merges" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val wf = Tables.documents(s, d)
+      val wf = hold(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w").rlike("^[a-z]{2,20}$"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
         .withColumn("s", trim(regexp_replace(col("w"), "(.)", "$1 ")))
-        .select(col("w"), col("c"), col("s"))
-        .persist()
+        .select(col("w"), col("c"), col("s")))
       wf.count()
       val win = Window.partitionBy(col("w")).orderBy(col("i"))
       // positions + greedy flag for the current symbol strings
@@ -211,7 +210,7 @@ object TextQueries extends QueryPack {
         merges += ((r.toLong, a, b, top.getLong(2)))
         // one-pass merge: winner occurrences at greedy positions fuse;
         // the position after a fused one is consumed (dropped)
-        cur = pos
+        cur = cut(pos
           .withColumn("m", col("greedy") &&
             col("x") === lit(a) && col("nxt") === lit(b))
           .withColumn("pm", coalesce(lag(col("m"), 1).over(win),
@@ -221,12 +220,10 @@ object TextQueries extends QueryPack {
             concat(col("x"), col("nxt"))).otherwise(col("x")))
           .groupBy(col("w"), col("c"))
           .agg(expr("array_join(transform(array_sort(" +
-            "collect_list(struct(i, y))), p -> p.y), ' ')").as("s"))
-          // cut the per-round lineage (lazy — materializes once at
-          // the next round's first consumption)
-          .localCheckpoint(false)
+            "collect_list(struct(i, y))), p -> p.y), ' ')").as("s")))
+        // the cut per-round lineage materializes once at the next
+        // round's first consumption
       }
-      wf.unpersist()
       merges.toSeq.toDF("merge_round", "sym_a", "sym_b", "pair_count")
     }),
     // BPE tokenizer APPLICATION — the encode half of q371's merge
@@ -832,10 +829,9 @@ object TextQueries extends QueryPack {
         .filter(col("kind") === "w")
         .collect().map(r => r.getLong(2).toInt -> r.getLong(3)).toMap
       val wts = Array.tabulate(257)(j => trained.getOrElse(j, 0L))
-      val scored = Classifier
+      val scored = hold(Classifier
         .scoreWith(planted, "doc_id", "text", wts, dims = 256)
-        .join(planted.select(col("doc_id"), label.as("y")), Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .join(planted.select(col("doc_id"), label.as("y")), Seq("doc_id")))
       val correct = scored.filter(col("pred") === col("y"))
         .select(col("doc_id"), col("y"), abs(col("margin")).as("am"))
       // class inventory: a #classes-sized frame; base offsets via the
@@ -921,11 +917,11 @@ object TextQueries extends QueryPack {
       val corpus = docs.unionAll(docs.filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 10000L).as("doc_id"),
           concat(col("text"), lit(" zq winnow tail")).as("text")))
-      val fps = TextAnalysis.winnowedFingerprints(corpus,
-        "doc_id", "text").persist()
+      val fps = hold(TextAnalysis.winnowedFingerprints(corpus,
+        "doc_id", "text"))
       val dfc = fps.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val rare = fps.join(dfc.filter(col("dfc") <= 50L), Seq("fp"))
-        .select(col("doc_id"), col("fp")).persist()
+      val rare = hold(fps.join(dfc.filter(col("dfc") <= 50L), Seq("fp"))
+        .select(col("doc_id"), col("fp")))
       val nr = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("nrare"))
       val pairs = rare.select(col("doc_id").as("doc_a"), col("fp"))
         .join(rare.select(col("doc_id").as("doc_b"), col("fp")),
@@ -1217,7 +1213,6 @@ object TextQueries extends QueryPack {
     // discipline). Tier tallies (tri/bi/uni/OOV hits) make the
     // backoff behavior itself observable.
     "q270_backoff_lm" -> ((s, d) => {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val docs = Tables.documents(s, d).select(col("doc_id"),
         col("source"), split(col("text"), " ").as("w"),
         (((col("doc_id") * lit(2654435761L)) % lit(1000000007L))
@@ -1233,10 +1228,10 @@ object TextQueries extends QueryPack {
             element_at(col("w"), col("i") + lit(j)).as(s"w${j + 1}"))): _*)
       val tri3 = grams(train, 3).groupBy(col("w1"), col("w2"), col("w3"))
         .agg(count(lit(1)).as("c3"))
-      val big2 = grams(train, 2).groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c2")).persist(lvl)
-      val uni1 = grams(train, 1).groupBy(col("w1"))
-        .agg(count(lit(1)).as("c1")).persist(lvl)
+      val big2 = hold(grams(train, 2).groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).as("c2")))
+      val uni1 = hold(grams(train, 1).groupBy(col("w1"))
+        .agg(count(lit(1)).as("c1")))
       val n1 = uni1.agg(sum(col("c1")).as("nt"))
       val types = grams(docs.filter(col("is_eval")), 3)
         .groupBy(col("source"), col("w1"), col("w2"), col("w3"))

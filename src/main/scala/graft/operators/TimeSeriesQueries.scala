@@ -30,7 +30,7 @@ object TimeSeriesQueries extends QueryPack {
 
   private val binUs = 21600000000L // 6 h in µs
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // Gap-filled resample: per (user, 6h-bin) mean value, then a dense
     // bin grid per user (min..max observed bin) with missing bins
     // filled last-observation-carried-forward. The grid explode is

@@ -86,7 +86,7 @@ object TpcdsQueries extends QueryPack {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // q3: the date-dim star — brand revenue for one calendar month
     // across all years; GROUP BY carries the year() EXPRESSION key
     "q412_tpcds_q3" -> tpcds("q3",

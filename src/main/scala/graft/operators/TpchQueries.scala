@@ -84,7 +84,7 @@ object TpchQueries extends QueryPack {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  protected val entries: Map[String, Query] = Map(
     // q1 pricing summary — the iconic aggregate; decimal-exact money
     // sums, avg-of-money as sum/count (determinism note above)
     "q392_tpch_q1" -> tpch("q1",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.Materialize
+import graft.Materialize.{drop, hold}
 
 /** Structured-Streaming superset of the reference's time-series model.
   *
@@ -208,26 +210,23 @@ object EventStreams {
     * which a collect_list formulation would need and hot users would
     * blow up). Output: (step, step_name, users), one row per step. */
   def funnelCounts(events: DataFrame, userCol: String, typeCol: String,
-                   tsCol: String, steps: Seq[String]): DataFrame = {
+                   tsCol: String, steps: Seq[String]): DataFrame = Materialize {
     require(steps.nonEmpty, "funnel needs at least one step")
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
     // each stage is both counted and the next stage's build side —
-    // persist so counting stage i doesn't re-run stages 1..i-1
-    val first = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(userCol).as("u")).agg(min(col(tsCol)).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // held so counting stage i doesn't re-run stages 1..i-1
+    val first = hold(events.filter(col(typeCol) === steps.head)
+      .groupBy(col(userCol).as("u")).agg(min(col(tsCol)).as("t")))
     val reached = steps.tail.scanLeft(first) { (prev, step) =>
-      events.filter(col(typeCol) === step)
+      hold(events.filter(col(typeCol) === step)
         .select(col(userCol).as("u"), col(tsCol).as("ts2"))
         .join(prev, "u")
         .filter(col("ts2") > col("t"))
-        .groupBy(col("u")).agg(min(col("ts2")).as("t"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("u")).agg(min(col("ts2")).as("t")))
     }
     val counts = reached.map(_.count())
-    reached.foreach(_.unpersist(blocking = false)) // counts are taken
+    reached.foreach(drop) // counts are taken
     steps.zipWithIndex.map { case (s, i) =>
       ((i + 1).toLong, s, counts(i))
     }.toDF("step", "step_name", "users")

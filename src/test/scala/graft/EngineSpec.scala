@@ -1126,6 +1126,28 @@ class EngineSpec extends AnyFunSuite {
     assert(s1.length == 2 && s1.sameElements(s2))
   }
 
+  test("EXEC'd dedup operators leave no entry in Spark's CacheManager") {
+    // a long-lived server runs each distinct EXEC once: its result may
+    // not stay cached for the session's lifetime once it is dropped
+    import spark.implicits._
+    eng.attachTable("pdocs", Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight"),
+      (3L, "an unrelated piece of text about columnar query engines")
+    ).toDF("doc_id", "text"))
+    spark.catalog.clearCache()
+    Seq("0.5", "0.6", "0.7").foreach { tau =>
+      val near = rows(eng.sql(
+        s"exec dedup_near('pdocs', 'doc_id', 'text', $tau)"))
+      assert(near.map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        Set((1L, 2L)))
+    }
+    assert(rows(eng.sql(
+      "exec dedup_clusters('pdocs', 'doc_id', 'text', 0.5)")).length == 2)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a dedup EXEC left its result in the CacheManager")
+  }
+
   test("drop and if-exists behavior") {
     ok(eng.sql("drop index idx_buys"))
     assert(eng.sql("drop index idx_buys") match {

@@ -17,6 +17,13 @@ class PlanQualitySpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString()
 
+  /** A test of queries whose plan holds a materialized frame: built
+    * and inspected inside a consumer scope, as every harness runs
+    * them — outside one, such a query returns its sealed result, a
+    * scan with no plan left to inspect. */
+  private def scopedTest(name: String)(body: => Any): Unit =
+    test(name)(Materialize.scope(body))
+
   test("filters push down to the parquet scan") {
     val df = Tables.lineitem(spark, sf)
       .filter(col("l_quantity") > 30.0 && col("l_returnflag") === "R")
@@ -133,7 +140,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"expected the bid exchange to be reused:\n$p")
   }
 
-  test("streaming near-dup screen keeps base arrays out of the bucket join") {
+  scopedTest("streaming near-dup screen keeps base arrays out of the bucket join") {
     // the bucket join's base side must be slim (id + band tuple):
     // shingle arrays may only enter the plan in the per-pair
     // re-attach join AFTER candidate dedup — an array-typed join
@@ -151,7 +158,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"band-join rows carrying base_sh:\n${mixed.mkString("\n")}")
   }
 
-  test("triangle count plans no cartesian product") {
+  scopedTest("triangle count plans no cartesian product") {
     val df = SparkEntry.queries("q104_triangles")(spark, sf)
     df.collect() // finalize AQE
     val p = plan(df)
@@ -243,7 +250,7 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
-  test("no single-partition exchange feeds a window in ANY query") {
+  scopedTest("no single-partition exchange feeds a window in ANY query") {
     // A global Window funnels the whole data set through one task —
     // the reference never does this (one reader per file range,
     // reader.c:1100-1380) and neither may we. No allowlist: even
@@ -258,7 +265,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"single-partition-fed Window in: ${offenders.mkString(", ")}")
   }
 
-  test("multi-probe LSH candidate join is bucket-equi, never cartesian") {
+  scopedTest("multi-probe LSH candidate join is bucket-equi, never cartesian") {
     val df = SparkEntry.queries("q225_multiprobe_lsh")(spark, sf)
     df.collect()
     val p = plan(df)
@@ -277,7 +284,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  test("wedge sampling filters acceptance in-row (pre-explode)") {
+  scopedTest("wedge sampling filters acceptance in-row (pre-explode)") {
     // the hash-acceptance must run inside the per-vertex lambda so
     // rejected wedges never reach the closure join: the plan's
     // Generate(explode) input already carries the filtered array
@@ -291,7 +298,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("filter(flatten(transform"), p)
   }
 
-  test("ExactSubstr span family: keyed semi/anti joins only, never " +
+  scopedTest("ExactSubstr span family: keyed semi/anti joins only, never " +
     "cartesian; BPE encode plans no driver-side collect node") {
     // the span BUILD itself (the memoized parquet read would hide it
     // from the consumer queries' plans — review finding): shingle
