@@ -103,17 +103,6 @@ object Bench {
       Sessions.cores)
     val spark = Sessions.builder()
       .config("spark.sql.shuffle.partitions", shuffleParts)
-      // Long-lived-driver hygiene (SCALING §15.1: the in-memory app
-      // status store retains 1000 jobs/stages/executions by default
-      // and its bookkeeping grows per-round cost measurably — capping
-      // it cut a 360-round recursion's wall ~22%). A 422-query suite
-      // at reps 2-3 runs thousands of executions through ONE driver;
-      // the same caps are standard practice for any long-running
-      // production driver, nothing local-mode about them. Timing
-      // methodology (noop sink, per-query windows) is unchanged.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.sql.ui.retainedExecutions", "50")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -20,12 +20,6 @@ object RingProbe {
         sys.env.getOrElse("AQE", "true"))
       .config("spark.sql.autoBroadcastJoinThreshold",
         sys.env.getOrElse("ABJT", "10485760"))
-      .config("spark.ui.retainedJobs",
-        sys.env.getOrElse("RETJ", "1000"))
-      .config("spark.ui.retainedStages",
-        sys.env.getOrElse("RETS", "1000"))
-      .config("spark.sql.ui.retainedExecutions",
-        sys.env.getOrElse("RETE", "1000"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val eng = new graft.engine.Engine(spark,

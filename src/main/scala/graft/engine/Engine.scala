@@ -392,13 +392,7 @@ class Engine(val spark: SparkSession, root: String,
         coalesce(ExprBuilder.build(w, ctx), lit(false)))
       val setMap = sets.map { case (c, e) =>
         val p = byName(c.toLowerCase)
-        val v = (p.typ, e) match {
-          case (("time" | "date"), Ast.Lit(sv: String, "string")) =>
-            lit(ExprBuilder.parseTime(sv).getOrElse(
-              throw new IllegalArgumentException(s"bad time '$sv'")))
-          case _ => ExprBuilder.build(e, ctx)
-        }
-        p.name.toLowerCase -> v.cast(Catalog.sparkType(p.typ))
+        p.name.toLowerCase -> columnValue(p, e, ctx)
       }.toMap
       df.select(props.map { p =>
         setMap.get(p.name.toLowerCase) match {
@@ -433,18 +427,13 @@ class Engine(val spark: SparkSession, root: String,
         val joined = t.join(sv, ExprBuilder.build(on, qctx), "full_outer")
         val matched = col("__t_present").isNotNull &&
           col("__s_present").isNotNull
-        def castTo(c: String, v: Column): Column = {
-          val p = byName.getOrElse(c.toLowerCase,
-            throw new IllegalArgumentException(s"unknown column $c"))
-          v.cast(Catalog.sparkType(p.typ))
-        }
+        def valueOf(c: String, e: Expr): (String, Column) =
+          c.toLowerCase -> columnValue(byName.getOrElse(c.toLowerCase,
+            throw new IllegalArgumentException(s"unknown column $c")), e, qctx)
         val setMap = sets.getOrElse(Seq.empty).map { case (c, e) =>
-          c.toLowerCase -> castTo(c, ExprBuilder.build(e, qctx))
-        }.toMap
+          valueOf(c, e) }.toMap
         val insMap = ins.map { case (cols, vals) =>
-          cols.zip(vals).map { case (c, e) =>
-            c.toLowerCase -> castTo(c, ExprBuilder.build(e, qctx))
-          }.toMap
+          cols.zip(vals).map { case (c, e) => valueOf(c, e) }.toMap
         }.getOrElse(Map.empty[String, Column])
         if (kind == "type" && ins.isDefined &&
             !insMap.contains(s.types(tname).pk.name.toLowerCase))
@@ -1241,6 +1230,12 @@ class Engine(val spark: SparkSession, root: String,
         .write.partitionBy("stamp_date").mode(mode).parquet(dir)
     else df.write.mode(mode).parquet(dir)
 
+  /** The value `e` gives declared column `p` in INSERT, UPDATE and
+    * MERGE: a string literal for a TIME/DATE column parses as an ISO
+    * stamp, and the value casts to the column's storage type. */
+  private def columnValue(p: Prop, e: Expr, ctx: ExprBuilder.Ctx): Column =
+    ExprBuilder.buildAs(e, Some(p.typ), ctx).cast(Catalog.sparkType(p.typ))
+
   // ── INSERT (reference query/stmt.c:2371-2448, scope/dml.c) ────────
   private def insert(ins: InsertStmt): Result = {
     val s = scope
@@ -1272,17 +1267,9 @@ class Engine(val spark: SparkSession, root: String,
     if (colsEff.size != vals.size)
       return Status(ok = false, "column/value count mismatch")
 
-    // evaluate value expressions (constants) with time coercion
-    val valueByCol: Map[String, Column] =
-      colProps.zip(vals).map { case (p, v) =>
-        val c = (p.typ, v) match {
-          case (("time" | "date"), Lit(sv: String, "string")) =>
-            lit(ExprBuilder.parseTime(sv).getOrElse(
-              return Status(ok = false, s"bad time literal '$sv'")))
-          case _ => ExprBuilder.build(v)
-        }
-        p.name.toLowerCase -> c.cast(Catalog.sparkType(p.typ))
-      }.toMap
+    val valueByCol: Map[String, Column] = colProps.zip(vals).map {
+      case (p, v) => p.name.toLowerCase -> columnValue(p, v, Map.empty)
+    }.toMap
     val rowCols = props.map(p =>
       valueByCol.getOrElse(p.name.toLowerCase,
         lit(null).cast(Catalog.sparkType(p.typ))).as(p.name))
@@ -1508,36 +1495,6 @@ class Engine(val spark: SparkSession, root: String,
   }
 
   // ── SELECT → DataFrame (the "planner", SURVEY §3.1 steps 3-4) ────
-  private def aggExprOf(e: Expr, ctx: ExprBuilder.Ctx): Option[Column] =
-    e match {
-      case FnCall(name, args) if Parser.isAggregate(name) =>
-        def a(i: Int): Column = ExprBuilder.build(args(i), ctx)
-        val c = name match {
-          case "count" => args.headOption match {
-            case None | Some(Star()) => count(lit(1))
-            case Some(x) => count(ExprBuilder.build(x, ctx))
-          }
-          case "sum" => sum(a(0))
-          case "count_distinct" => countDistinct(a(0))
-          case "sum_distinct" => sum_distinct(a(0))
-          case "avg" | "average" => coalesce(avg(a(0)), lit(0.0))
-          case "min" => min(a(0))
-          case "max" => max(a(0))
-          case "spread" => max(a(0)) - min(a(0))
-          case "median" => // exact, like the reference's block-sort
-            coalesce(call_function("percentile", a(0), lit(0.5))
-              .cast("double"), lit(0.0))
-          case "stddev" => coalesce(stddev_samp(a(0)), lit(0.0))
-          case "prod" | "product" => product(a(0))
-          case "mode" => mode(a(0))
-          case "integral" => call_udf("now_integral", a(0), a(1))
-          // subtotal marker, cast to the dialect's BIGINT convention
-          case "grouping" => grouping(a(0)).cast("long")
-        }
-        Some(c)
-      case _ => None
-    }
-
   private def containsAgg(e: Expr): Boolean = e match {
     case FnCall(n, args) =>
       Parser.isAggregate(n) || args.exists(containsAgg)
@@ -1554,63 +1511,6 @@ class Engine(val spark: SparkSession, root: String,
         aliases(n.toLowerCase)
     }
 
-  /** Build a Column where aggregate calls become agg expressions and
-    * everything else builds normally. */
-  private def buildWithAggs(e: Expr, ctx: ExprBuilder.Ctx): Column =
-    aggExprOf(e, ctx).getOrElse(e match {
-      case BinOp(op, l, r) if containsAgg(e) =>
-        val lc = buildWithAggs(l, ctx); val rc = buildWithAggs(r, ctx)
-        op match {
-          case "+" => lc + rc;  case "-" => lc - rc
-          case "*" => lc * rc
-          case "/" =>
-            // QUOT applies over aggregate results too: sum(int)/count
-            // is the integer quotient in the reference's typing
-            if (ExprBuilder.numKind(l, ctx).contains("int") &&
-                ExprBuilder.numKind(r, ctx).contains("int"))
-              NowFunctions.intDiv(lc, rc)
-            else lc / rc
-          case "%" => lc % rc
-          case "^" => NowFunctions.power(lc, rc)
-          case "and" => lc && rc; case "or" => lc || rc
-          case "=" => lc === rc; case "!=" | "<>" => lc =!= rc
-          case "<" => lc < rc; case ">" => lc > rc
-          case "<=" => lc <= rc; case ">=" => lc >= rc
-        }
-      case UnOp("-", x) if containsAgg(e) => -buildWithAggs(x, ctx)
-      case UnOp("not", x) if containsAgg(e) => !buildWithAggs(x, ctx)
-      case InList(x, vs, neg) if containsAgg(e) =>
-        val c = buildWithAggs(x, ctx)
-        val in = vs.map(v => c === buildWithAggs(v, ctx)).reduce(_ || _)
-        if (neg) !in else in
-      case IsNull(x, neg) if containsAgg(e) =>
-        val c = buildWithAggs(x, ctx)
-        if (neg) c.isNotNull else c.isNull
-      case CaseExpr(bs, o) if containsAgg(e) =>
-        val base = bs.foldLeft(Option.empty[Column]) { (acc, b) =>
-          val w = buildWithAggs(b._1, ctx)
-          val t = buildWithAggs(b._2, ctx)
-          Some(acc.fold(when(w, t))(_.when(w, t)))
-        }.get
-        o.fold(base)(x => base.otherwise(buildWithAggs(x, ctx)))
-      case FnCall("tofloat", Seq(x)) if containsAgg(e) =>
-        buildWithAggs(x, ctx).cast("double")
-      // scalar wrappers over aggregate expressions, mirroring the
-      // ExprBuilder builders — `round(sum(x) / sum(y), 6)` is TPC-H
-      // q8/q14's shape (r13)
-      case FnCall("round", Seq(x)) if containsAgg(e) =>
-        round(buildWithAggs(x, ctx))
-      case FnCall("round", Seq(x, Lit(n: Long, _))) if containsAgg(e) =>
-        round(buildWithAggs(x, ctx), n.toInt)
-      case FnCall("abs", Seq(x)) if containsAgg(e) =>
-        abs(buildWithAggs(x, ctx))
-      case FnCall("floor", Seq(x)) if containsAgg(e) =>
-        floor(buildWithAggs(x, ctx))
-      case FnCall("ceil", Seq(x)) if containsAgg(e) =>
-        ceil(buildWithAggs(x, ctx))
-      case _ => ExprBuilder.build(e, ctx)
-    })
-
   private def defaultName(e: Expr, idx: Int): String = e match {
     case Field(n, _) => n
     case FnCall(n, _) => s"${n}_$idx"
@@ -1618,10 +1518,11 @@ class Engine(val spark: SparkSession, root: String,
   }
 
   /** The UTC days a WHERE AST's conjunctive bounds on the FROM table's
-    * `stamp` can match (string literals parse as ISO stamps); `alias`
-    * is the FROM alias, and a `stamp` qualified with any other alias
-    * does not count. Only top-level AND conjuncts contribute —
-    * disjunctions disable pruning, like the reference's period walk.
+    * `stamp` can match (string literals parse as ISO stamps, integer
+    * literals are ns stamps); `alias` is the FROM alias, and a `stamp`
+    * qualified with any other alias does not count. Only top-level AND
+    * conjuncts contribute — disjunctions disable pruning, like the
+    * reference's period walk.
     * Bounds are widened to whole days: the stamp predicate itself still
     * filters the rows. */
   private def stampPeriod(w: Expr, alias: String): Option[DayWindow] = {
@@ -1646,11 +1547,16 @@ class Engine(val spark: SparkSession, root: String,
     }
     def isStamp(f: Field): Boolean = f.name.equalsIgnoreCase("stamp") &&
       f.qualifier.forall(_.equalsIgnoreCase(alias))
+    def stampOf(l: Lit): Option[Long] = l match {
+      case Lit(s: String, "string") => ExprBuilder.parseTime(s)
+      case Lit(t: Long, _) => Some(t)
+      case _ => None
+    }
     conjuncts(w).foreach {
-      case BinOp(op, f: Field, Lit(s: String, "string")) if isStamp(f) =>
-        ExprBuilder.parseTime(s).foreach(bound(op, _))
-      case BinOp(op, Lit(s: String, "string"), f: Field) if isStamp(f) =>
-        ExprBuilder.parseTime(s).foreach(bound(flip(op), _))
+      case BinOp(op, f: Field, l: Lit) if isStamp(f) =>
+        stampOf(l).foreach(bound(op, _))
+      case BinOp(op, l: Lit, f: Field) if isStamp(f) =>
+        stampOf(l).foreach(bound(flip(op), _))
       case _ =>
     }
     if (!found) None
@@ -1745,7 +1651,22 @@ class Engine(val spark: SparkSession, root: String,
     }
   }
 
-  private[engine] def buildSelect(sel: SelectStmt): DataFrame = {
+  /** `e` with ANSI empty-input `avg`: NULL over no rows, as DuckDB reads
+    * it, where the dialect's own `avg` reads 0 (SURVEY §2.4). Both scalar
+    * subquery paths, the correlated one and the inlined one, build their
+    * item through this. */
+  private def ansiAvg(e: Expr, ctx: ExprBuilder.Ctx): Expr = rewriteExpr(e) {
+    case FnCall(n, Seq(x)) if n.equalsIgnoreCase("avg") ||
+        n.equalsIgnoreCase("average") =>
+      Compiled(avg(ExprBuilder.build(x, ctx)), Some("float"))
+  }
+
+  /** `sel` as a frame. A `scalar` select (an uncorrelated scalar
+    * subquery) reads `avg` the ANSI way ([[ansiAvg]]) when ungrouped and
+    * without HAVING, the shape the correlated path always builds: a
+    * group is never empty. */
+  private[engine] def buildSelect(sel: SelectStmt,
+                                  scalar: Boolean = false): DataFrame = {
     // Derived tables `FROM (SELECT …) alias` bind first, as transient
     // tables scoped to this build (Datasets analyze eagerly, so the
     // bindings only need to live through plan construction — which
@@ -1759,10 +1680,16 @@ class Engine(val spark: SparkSession, root: String,
           cteBindings.set(
             cteBindings.get + (n.toLowerCase -> buildSelect(ds)))
         }
-        return buildSelect(sel.copy(derived = Seq.empty))
+        return buildSelect(sel.copy(derived = Seq.empty), scalar)
       } finally cteBindings.set(saved)
     }
-    val base = tagTimeItems(buildSelectNoLimit(sel), sel)
+    val built =
+      if (scalar && sel.groupBy.isEmpty && sel.having.isEmpty) {
+        val ctx = selectCtx(sel)
+        sel.copy(items = sel.items.map(it =>
+          it.copy(expr = ansiAvg(it.expr, ctx))))
+      } else sel
+    val base = tagTimeItems(buildSelectNoLimit(built), sel)
     val off = sel.offset.fold(base)(m => base.offset(m.toInt))
     sel.limit.fold(off)(n => off.limit(n.toInt))
   }
@@ -1771,7 +1698,7 @@ class Engine(val spark: SparkSession, root: String,
     * one row, one column; a bounded (1×1) collect by construction. */
   private def evalScalar(sub: SelectStmt): Lit = {
     val df =
-      try buildSelect(sub)
+      try buildSelect(sub, scalar = true)
       catch {
         // a scalar correlated to a scope this engine cannot thread
         // (qualified with a name outside the subquery's own aliases)
@@ -2333,15 +2260,9 @@ class Engine(val spark: SparkSession, root: String,
               case e => e.toString
             }.mkString(", ") + ")")
     }
-    // ANSI empty-group semantics: avg is NULL over no rows, where the
-    // dialect's own avg is 0
-    val ansiItem = rewriteExpr(item) {
-      case FnCall(n, Seq(x)) if n.equalsIgnoreCase("avg") ||
-          n.equalsIgnoreCase("average") =>
-        Compiled(avg(ExprBuilder.build(x, sc.innerCtx)), Some("float"))
-    }
     val built = buildSelectNoLimit(sub.copy(
-      items = Seq(SelectItem(ansiItem, None)), groupBy = Seq.empty,
+      items = Seq(SelectItem(ansiAvg(item, sc.innerCtx), None)),
+      groupBy = Seq.empty,
       distinct = false, where = sub.where.map(sc.markOuter(_, outerCtx))))
     Compiled(built.scalar(), ExprBuilder.timeKind(item, sc.innerCtx)
       .orElse(ExprBuilder.numKind(item, sc.innerCtx)))
@@ -2615,7 +2536,7 @@ class Engine(val spark: SparkSession, root: String,
           // and DuckDB keep the constant)
           case _: Lit => None
           case e if containsAgg(e) =>
-            Some(buildWithAggs(e, ctx).as(physName(i, nm)))
+            Some(ExprBuilder.build(e, ctx).as(physName(i, nm)))
           case e => // non-agg non-key: "any row's value" (sql.tex:2690)
             Some(any_value(ExprBuilder.build(e, ctx)).as(physName(i, nm)))
         }
@@ -2636,7 +2557,7 @@ class Engine(val spark: SparkSession, root: String,
       val postHaving = havingRes.filter(hasSubquery).map(rewriteExpr(_) {
         case f @ FnCall(n, _) if Parser.isAggregate(n) =>
           val h = s"__graft_ha${postAggs.size}"
-          postAggs += buildWithAggs(f, ctx).as(h)
+          postAggs += ExprBuilder.build(f, ctx).as(h)
           Field(h)
       })
       val (aggHaving, keyHaving) = havingRes.filterNot(hasSubquery) match {
@@ -2644,7 +2565,7 @@ class Engine(val spark: SparkSession, root: String,
         case other => (None, other)
       }
       val hvCol = aggHaving.map(h =>
-        buildWithAggs(h, ctx).as("__graft_having"))
+        ExprBuilder.build(h, ctx).as("__graft_having"))
       // GROUP BY with no aggregates = distinct keys (the reference's
       // KRANGE keys-only fast path, plan.c:1635-1644) — unless an
       // aggregate HAVING forces a real aggregation anyway, and never

@@ -9,7 +9,11 @@ import Ast._
   * reference fun/expr.h:414-522, evaluation expr.c:1228-2450):
   * `^` is power, `log` is ln, time parts run over ns-long stamps,
   * `wday` is Sunday=0, and string literals compared against TIME/DATE
-  * fields parse as ISO-8601 timestamps (plan.c:615-642 tryTime).
+  * expressions parse as ISO-8601 timestamps (plan.c:615-642 tryTime).
+  * The one compiler of dialect expressions: aggregates are one more
+  * function kind (expr.h:33-38), so they compile wherever they appear,
+  * and the caller decides whether the expression runs in an
+  * aggregation.
   */
 object ExprBuilder {
 
@@ -59,24 +63,21 @@ object ExprBuilder {
       case _ => None
     }
 
-  private def isTimeField(e: Expr, ctx: Ctx): Boolean =
-    declaredType(e, ctx).exists(t => t == "time" || t == "date")
-
-  /** Coerce a literal to the ns-stamp domain when compared to a
-    * TIME/DATE field; the stamp is a [[BoundLiteral]] like any other
-    * numeric constant. */
-  private def coercePair(l: Expr, r: Expr, ctx: Ctx): (Column, Column) = {
-    (l, r) match {
-      case (f, Lit(s: String, "string")) if isTimeField(f, ctx) =>
-        (build(f, ctx), BoundLiteral(parseTime(s).getOrElse(
-          throw new IllegalArgumentException(s"bad time literal '$s'"))))
-      case (Lit(s: String, "string"), f) if isTimeField(f, ctx) =>
-        (BoundLiteral(parseTime(s).getOrElse(
-          throw new IllegalArgumentException(s"bad time literal '$s'"))),
-          build(f, ctx))
-      case _ => (build(l, ctx), build(r, ctx))
+  /** `e` as a value of NoWDB type `typ` (a declared column's, or the
+    * other operand's [[timeKind]]): a string literal against TIME/DATE
+    * parses as an ISO stamp, bound like any numeric constant so one
+    * statement shape compiles once whatever its stamps; anything else
+    * builds as is. */
+  def buildAs(e: Expr, typ: Option[String], ctx: Ctx): Column =
+    (e, typ) match {
+      case (Lit(s: String, "string"), Some("time" | "date")) =>
+        BoundLiteral(parseTime(s).getOrElse(
+          throw new IllegalArgumentException(s"bad time literal '$s'")))
+      case _ => build(e, ctx)
     }
-  }
+
+  private def coercePair(l: Expr, r: Expr, ctx: Ctx): (Column, Column) =
+    (buildAs(l, timeKind(r, ctx), ctx), buildAs(r, timeKind(l, ctx), ctx))
 
   /** Static NoWDB numeric kind of an expression: Some("int"),
     * Some("float"), or None when unknown. Drives `/` semantics — the
@@ -211,21 +212,14 @@ object ExprBuilder {
     case UnOp(op, _) =>
       throw new IllegalArgumentException(s"unknown unary $op")
     case InList(x, vs, neg) =>
-      val base = x match {
-        case f if isTimeField(f, ctx) =>
-          build(f, ctx).isin(vs.map {
-            case Lit(s: String, "string") => parseTime(s).getOrElse(
-              throw new IllegalArgumentException(s"bad time literal '$s'"))
-            case Lit(v, _) => v
-            case other => throw new IllegalArgumentException(
-              s"IN list must be constant, got $other")
-          }: _*)
-        case _ => build(x, ctx).isin(vs.map {
-          case Lit(v, _) => v
-          case other => throw new IllegalArgumentException(
-            s"IN list must be constant, got $other")
-        }: _*)
-      }
+      // literal items stay plain values; any other item is an expression
+      // (`having sum(a) in (max(b), 3)`)
+      val xt = timeKind(x, ctx)
+      val base = build(x, ctx).isin(vs.map {
+        case l @ Lit(_: String, "string") => buildAs(l, xt, ctx)
+        case Lit(v, _) => v
+        case v => build(v, ctx)
+      }: _*)
       if (neg) !base else base
     case IsNull(x, neg) =>
       if (neg) build(x, ctx).isNotNull else build(x, ctx).isNull
@@ -311,11 +305,7 @@ object ExprBuilder {
     def a(i: Int): Column = build(args(i), ctx)
     /** time-valued argument: a string literal parses as an ISO stamp
       * (`year('2024-05-06')` works like the reference's tryTime). */
-    def t(i: Int): Column = args(i) match {
-      case Lit(s: String, "string") => lit(parseTime(s).getOrElse(
-        throw new IllegalArgumentException(s"bad time literal '$s'")))
-      case _ => a(i)
-    }
+    def t(i: Int): Column = buildAs(args(i), Some("time"), ctx)
     name match {
       // conversions (expr.h:414-418)
       case "tofloat" => a(0).cast("double")
@@ -324,8 +314,7 @@ object ExprBuilder {
       case "tostring" => a(0).cast("string")
       case "tobool" => a(0).cast("boolean")
       case "totime" => args(0) match {
-        case Lit(s: String, "string") => lit(parseTime(s).getOrElse(
-          throw new IllegalArgumentException(s"bad time literal '$s'")))
+        case Lit(_: String, "string") => t(0)
         case _ => a(0).cast("long")
       }
       case "totext" => a(0).cast("string")
@@ -421,6 +410,28 @@ object ExprBuilder {
         case Lit(s: String, _) => s
         case _ => throw new IllegalArgumentException("pos needle")
       }) - lit(1)).cast("long") // 0-based, -1 when absent
+      // aggregates (reference fun.c); avg, median and stddev read 0
+      // over no rows, the dialect's value (SURVEY §2.4)
+      case "count" => args.headOption match {
+        case None | Some(Star()) => count(lit(1))
+        case Some(_) => count(a(0))
+      }
+      case "sum" => sum(a(0))
+      case "count_distinct" => countDistinct(a(0))
+      case "sum_distinct" => sum_distinct(a(0))
+      case "avg" | "average" => coalesce(avg(a(0)), lit(0.0))
+      case "min" => min(a(0))
+      case "max" => max(a(0))
+      case "spread" => max(a(0)) - min(a(0))
+      case "median" => // exact, like the reference's block-sort
+        coalesce(call_function("percentile", a(0), lit(0.5))
+          .cast("double"), lit(0.0))
+      case "stddev" => coalesce(stddev_samp(a(0)), lit(0.0))
+      case "prod" | "product" => product(a(0))
+      case "mode" => mode(a(0))
+      case "integral" => call_udf("now_integral", a(0), a(1))
+      // subtotal marker, cast to the dialect's BIGINT convention
+      case "grouping" => grouping(a(0)).cast("long")
       // null handling
       case "coal" | "coalesce" => coalesce(args.map(build(_, ctx)): _*)
       case "just" => a(0)

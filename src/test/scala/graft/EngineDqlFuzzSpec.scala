@@ -87,6 +87,73 @@ class EngineDqlFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("60 random aggregate-wrapping items and HAVINGs: dialect engine == " +
+    "Spark SQL") {
+    val rnd = new scala.util.Random(6060)
+    val data = (0 until 400).map { i =>
+      (i.toLong % 11, rnd.nextInt(100).toLong,
+        math.rint(rnd.nextDouble() * 10000) / 100.0)
+    }
+    val df = data.toDF("k", "a", "b")
+    val eng = new Engine(spark,
+      java.nio.file.Files.createTempDirectory("dql-fuzz-agg").toString)
+    eng.attachTable("fa", df)
+    df.createOrReplaceTempView("fa_v")
+    // (dialect, Spark SQL): toint is a bigint cast and log is ln; every
+    // group is non-empty, so the dialect's avg equals ANSI's, and no
+    // int/int division appears (QUOT differs by design)
+    val itemPool = Seq(
+      ("coalesce(sum(a), 0)", "coalesce(sum(a), 0)"),
+      ("coalesce(max(b), 0.0)", "coalesce(max(b), 0.0)"),
+      ("toint(avg(b))", "cast(avg(b) as bigint)"),
+      ("log(sum(b) + 1.0)", "ln(sum(b) + 1.0)"),
+      ("abs(min(a) - 50)", "abs(min(a) - 50)"),
+      ("abs(sum(a) - 50 * count(*))", "abs(sum(a) - 50 * count(*))"),
+      ("case when sum(a) > 1800 then max(b) else min(b) end",
+        "case when sum(a) > 1800 then max(b) else min(b) end"),
+      ("sum(b) / count(*)", "sum(b) / count(*)"),
+      ("max(a) - min(a) + 1", "max(a) - min(a) + 1"),
+      ("toint(sum(b)) * 2", "cast(sum(b) as bigint) * 2"),
+      ("avg(a) * 2.0", "avg(a) * 2.0"),
+      ("round(avg(b), 2)", "round(avg(b), 2)"),
+      ("tofloat(count(*)) / 2.0", "cast(count(*) as double) / 2.0"))
+    val havingPool = Seq(
+      ("coalesce(sum(a), 0) > 1800", "coalesce(sum(a), 0) > 1800"),
+      ("abs(max(a) - min(a)) >= 97", "abs(max(a) - min(a)) >= 97"),
+      ("toint(avg(b)) > 48", "cast(avg(b) as bigint) > 48"),
+      ("log(count(*)) > 3.6", "ln(count(*)) > 3.6"),
+      ("case when count(*) > 36 then 1 else 0 end = 1",
+        "case when count(*) > 36 then 1 else 0 end = 1"),
+      ("count(*) in (max(a) - 60, 36, 37)",
+        "count(*) in (max(a) - 60, 36, 37)"),
+      ("sum(b) / count(*) < 50.0", "sum(b) / count(*) < 50.0"))
+    val wherePool = Seq("", " where a > 20", " where b < 70.0")
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    for (i <- 0 until 60) {
+      val items = rnd.shuffle(itemPool).take(1 + rnd.nextInt(3))
+        .zipWithIndex.map { case ((d, q), j) => (s"$d as g$j", s"$q as g$j") }
+      val having = if (rnd.nextBoolean()) Some(pick(havingPool)) else None
+      val where = pick(wherePool)
+      def q(t: String, side: ((String, String)) => String) =
+        s"select k, ${items.map(side).mkString(", ")} from $t$where " +
+          "group by k" + having.fold("")(h => s" having ${side(h)}")
+      val dialect = q("fa", _._1)
+      val got = eng.sql(dialect) match {
+        case Rows(r) => r.collect()
+        case other => fail(s"$dialect -> $other")
+      }
+      val want = spark.sql(q("fa_v", _._2)).collect()
+      def canon(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[String]] =
+        rows.map(_.toSeq.map {
+          case d: Double => f"$d%.9f"
+          case v => String.valueOf(v)
+        }).toSeq.sortBy(_.mkString("|"))
+      assert(canon(got) == canon(want),
+        s"#$i diverged:\n$dialect\nengine: ${canon(got).take(3)}\n" +
+          s"spark:  ${canon(want).take(3)}")
+    }
+  }
+
   test("120 random round-10 surface statements: dialect engine == Spark SQL") {
     // DISTINCT, aggregate-DISTINCT, BETWEEN/LIKE, ordinals, set-op
     // chains, CTEs, window functions, ANSI joins — the identical text

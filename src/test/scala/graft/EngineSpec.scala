@@ -459,6 +459,68 @@ class EngineSpec extends AnyFunSuite {
     ok(eng.sql("drop type inv"))
   }
 
+  test("aggregates and time literals compile wherever they appear") {
+    ok(eng.sql("create type tw (id uint pk, g int, w float, a int, b int, " +
+      "at time)"))
+    Seq("(1, 1, 1.5, 1, 2, '2024-01-01T00:00:00')",
+      "(2, 1, 2.5, 2, 3, '2024-01-03T00:00:00')",
+      "(3, 2, 4.0, 3, 1, '2024-01-01T12:00:00')").foreach(v =>
+      ok(eng.sql(s"insert into tw (id, g, w, a, b, at) $v")))
+    // an aggregate inside any function, not only round/abs/floor/ceil
+    assert(rows(eng.sql("select coalesce(sum(w), 0.0) from tw"))(0)
+      .getDouble(0) == 8.0)
+    assert(math.abs(rows(eng.sql("select log(sum(w)) from tw"))(0)
+      .getDouble(0) - math.log(8.0)) < 1e-12)
+    assert(rows(eng.sql("select g, toint(avg(w)) from tw group by g " +
+      "order by g")).map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 2L), (2L, 4L)))
+    // a time literal against an aggregate of a time column
+    assert(rows(eng.sql("select g from tw group by g " +
+      "having max(at) > '2024-01-02T00:00:00'")).map(_.getLong(0)).toSeq
+      == Seq(1L))
+    // a HAVING IN list with an aggregate item
+    assert(rows(eng.sql("select g from tw group by g " +
+      "having sum(a) in (max(b), 10)")).map(_.getLong(0)).toSeq == Seq(1L))
+    // MERGE takes time literals in both arms, as INSERT and UPDATE do
+    import spark.implicits._
+    eng.attachTable("tws", Seq(1L, 9L).toDF("sid"))
+    ok(eng.sql("merge into tw using tws on tw.id = tws.sid " +
+      "when matched then update set at = '2024-03-01T00:00:00' " +
+      "when not matched then insert (id, g, w, a, b, at) " +
+      "values (tws.sid, 3, 1.0, 0, 0, '2024-04-01T00:00:00')"))
+    def idsAt(t: String): Seq[Long] =
+      rows(eng.sql(s"select id from tw where at = '$t'")).map(_.getLong(0))
+        .toSeq
+    assert(idsAt("2024-03-01T00:00:00") == Seq(1L))
+    assert(idsAt("2024-04-01T00:00:00") == Seq(9L))
+    // an aggregate in WHERE is still an error
+    eng.sql("select g from tw where max(w) > 1") match {
+      case Status(false, _) =>
+      case other => fail(s"aggregate WHERE accepted: $other")
+    }
+    ok(eng.sql("drop type tw"))
+  }
+
+  test("both scalar-subquery paths read avg over no rows as NULL") {
+    ok(eng.sql("create type ta (id uint pk, g int, w float)"))
+    Seq((1, 1, 1.0), (2, 1, 3.0), (3, 2, 5.0)).foreach { case (i, g, w) =>
+      ok(eng.sql(s"insert into ta (id, g, w) ($i, $g, $w)"))
+    }
+    val uncorrelated = rows(eng.sql("select id, (select avg(w) from ta " +
+      "where w > 1000) as a from ta"))
+    assert(uncorrelated.length == 3 && uncorrelated.forall(_.isNullAt(1)))
+    val correlated = rows(eng.sql("select id, (select avg(w) from ta t2 " +
+      "where t2.g = t.g and t2.w > 1000) as a from ta t"))
+    assert(correlated.length == 3 && correlated.forall(_.isNullAt(1)))
+    // over rows both read the average
+    assert(rows(eng.sql("select (select avg(w) from ta where g = 1) as a " +
+      "from ta where id = 1"))(0).getDouble(0) == 2.0)
+    // a top-level avg keeps the dialect's 0
+    assert(rows(eng.sql("select avg(w) from ta where w > 1000"))(0)
+      .getDouble(0) == 0.0)
+    ok(eng.sql("drop type ta"))
+  }
+
   test("CREATE VIEW expands logically, persists, and guards its name") {
     ok(eng.sql("create type item (id uint pk, grp uint, price float)"))
     (1L to 6L).foreach(i =>
@@ -1057,15 +1119,19 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("stamped edges store date-partitioned; stamp ranges prune") {
-    val df = eng.sql("select origin, quantity from buys " +
-      "where stamp >= '2024-01-03' and stamp < '2024-01-05'") match {
-      case Rows(d) => d
-      case other => fail(s"$other")
+    // ISO literals and the same bounds as ns stamps
+    Seq("'2024-01-03' and stamp < '2024-01-05'",
+      "1704240000000000000 and stamp < 1704412800000000000").foreach { b =>
+      val df = eng.sql("select origin, quantity from buys " +
+        s"where stamp >= $b") match {
+        case Rows(d) => d
+        case other => fail(s"$other")
+      }
+      val plan = df.queryExecution.executedPlan.toString()
+      assert(plan.contains("PartitionFilters") && plan.contains("stamp_date")
+        && plan.contains("isnotnull(stamp_date"), plan)
+      assert(df.count() == 4) // Jan 3 ×3 + Jan 4 ×1
     }
-    val plan = df.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") && plan.contains("stamp_date")
-      && plan.contains("isnotnull(stamp_date"), plan)
-    assert(df.count() == 4) // Jan 3 ×3 + Jan 4 ×1
   }
 
   test("CREATE INDEX reorganizes data; EXPLAIN returns the plan") {
